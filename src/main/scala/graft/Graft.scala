@@ -62,12 +62,25 @@ object Graft {
 
   /** Build a local session with the engine defaults. `cores` also sizes
     * `spark.sql.shuffle.partitions` — one reducer per core locally; on a
-    * cluster, set partitions to 2-3× total executor cores instead. */
+    * cluster, set partitions to 2-3× total executor cores instead.
+    *
+    * Codegen cache: Spark keeps compiled whole-stage classes in a JVM-wide
+    * cache of `spark.sql.codegen.cache.maxEntries` entries (default 100),
+    * split across the 4 segments of a Guava cache, so a segment evicts
+    * after about 25 classes. One vigilance refresh (pipeline, checks,
+    * signals; 30k records, 4 cores) uses more than that: at the default a
+    * warm refresh recompiled 26-59 classes with Janino, 0.5-1.2 s of
+    * compile time, varying run to run. At 1000 entries it compiles one,
+    * the staging projection, whose inlined `load_ts` literal is new in
+    * every run (about 40 ms). The cache is built once per JVM, at the
+    * first code generation, so the setting is static: [[configure]]
+    * cannot apply it to a running host session. */
   def session(cores: Int = Runtime.getRuntime.availableProcessors(),
               appName: String = "graft"): SparkSession =
     configure(SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.codegen.cache.maxEntries", 1000)
       .config("spark.ui.enabled", "false")
       .appName(appName)
       .getOrCreate())

@@ -607,7 +607,7 @@ object SparkEntry {
   private def qualityChecks(s: SparkSession, d: String): DataFrame = {
     import graft.checks.Checks
     val li = lineitem(s, d); val ord = orders(s, d)
-    val suite: Seq[(String, DataFrame)] = Seq(
+    Checks.summary(Seq(
       "orders_orderkey_unique" ->
         Checks.unique(ord, "o_orderkey"),
       "orders_custkey_not_null" ->
@@ -621,11 +621,7 @@ object SparkEntry {
       "documents_lang_accepted" ->
         Checks.acceptedValues(documents(s, d), "lang", Seq("en", "es", "de", "fr")),
       "documents_text_not_null_when_en" ->
-        Checks.notNull(documents(s, d), "text", col("lang") === "en"))
-    suite.map { case (name, fails) =>
-      fails.agg(count(lit(1)).cast("long").as("violations"))
-        .select(lit(name).as("check_name"), col("violations"))
-    }.reduce(_ unionByName _)
+        Checks.notNull(documents(s, d), "text", col("lang") === "en")))
   }
 
   /** Resize planning as a declared query ([[Multimodal.resizePlan]]):

@@ -21,9 +21,8 @@ object Checks {
     df.groupBy(col(column)).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
-  /** `accepted_values`. NULLs fail (dbt semantics: use not_null separately
-    * only if NULLs should also fail — dbt's accepted_values fails NULL-free;
-    * we match dbt: NULLs pass). */
+  /** `accepted_values`. NULLs pass, as in dbt: pair it with `not_null`
+    * when NULLs should fail too. */
   def acceptedValues(df: DataFrame, column: String, values: Seq[String]): DataFrame =
     df.filter(col(column).isNotNull && !col(column).isin(values: _*))
 
@@ -34,7 +33,20 @@ object Checks {
     child.filter(col(childKey).isNotNull)
       .join(parent.select(col(parentKey).as(childKey)), Seq(childKey), "left_anti")
 
-  /** Run a named suite; returns (name → failure count), all-zero = green. */
+  /** One row per check, `(check_name, violations)`: the union of each
+    * check's failure count, so a whole suite is a single query. */
+  def summary(suite: Seq[(String, DataFrame)]): DataFrame = {
+    require(suite.nonEmpty, "a check summary needs at least one check")
+    suite.map { case (name, failures) =>
+      failures.agg(count(lit(1)).as("violations"))
+        .select(lit(name).as("check_name"), col("violations"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** Run a named suite as one action; returns (name → failure count),
+    * all-zero = green. */
   def run(suite: Map[String, DataFrame]): Map[String, Long] =
-    suite.map { case (name, failures) => name -> failures.count() }
+    if (suite.isEmpty) Map.empty
+    else summary(suite.toSeq).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
 }

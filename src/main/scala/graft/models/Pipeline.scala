@@ -1,21 +1,40 @@
 package graft.models
 
+import graft.Par
 import graft.checks.Checks
 import graft.sources.MaudeIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * DAG runner for the vigilance models (reference `dbt run` semantics,
  * SURVEY.md §3 E1): builds the models in topological order —
  * seed → stg_maude → fact_adverse_events → ae_counts_q →
- * v_ae_early_signals — with the reference's per-layer materialization:
- * staging and the signals view stay lazy (temp views, dbt_project.yml:10-12)
- * while marts are persisted (dbt_project.yml:13-15).
+ * v_ae_early_signals. Marts are persisted (dbt_project.yml:13-15).
+ *
+ * Per-run materialization: in the reference `stg_maude` is a view
+ * (dbt_project.yml:10-12) that the fact model and five schema tests
+ * read, and the fact is read by four more tests and the counts mart, so
+ * a literal copy parses the NDJSON landing once per consumer. [[run]]
+ * instead stages `stg_maude` and `ae_counts_q` once per run with a
+ * non-eager `localCheckpoint(DISK_ONLY)`: each fills inside its first
+ * consumer's job, and every later consumer (fact, the mart writes, the
+ * checks, the signals view) reads the staged blocks. The fact and the
+ * signals view stay lazy over them. DISK_ONLY keeps the staged rows in
+ * the block manager's local files, off the JVM heap. The blocks belong
+ * to the returned DataFrames (and the temp views registered over them):
+ * once a run's DataFrames are dropped, Spark's ContextCleaner frees the
+ * blocks at the next GC.
+ *
+ * `load_ts` (`current_timestamp()` at ingest) is fixed when staging is
+ * planned, so it is one value per [[run]]; over the lazy [[build]] DAG
+ * it is evaluated per query instead.
  *
  * Each stage is tagged via the job group (the QUERY_TAG / FinOps analog,
  * README.md:128-133). Mart writes are partitioned by receive-year so
- * time-scoped reads prune at 100 TB.
+ * time-scoped reads prune at 100 TB; the two mart writes are independent
+ * and run overlapped through [[graft.Par]].
  */
 object Pipeline {
 
@@ -25,18 +44,22 @@ object Pipeline {
       aeCountsQ: DataFrame,
       vAeEarlySignals: DataFrame)
 
-  /** Build the full lazy DAG from a landing DataFrame + seed. */
-  def build(maudeRaw: DataFrame, manufacturer: DataFrame): Models = {
-    val stg    = StgMaude(maudeRaw)
+  /** Build the DAG from a landing DataFrame + seed. `stage` is applied to
+    * the models with several consumers (`stg_maude`, `ae_counts_q`); the
+    * default leaves the whole DAG lazy. */
+  def build(maudeRaw: DataFrame, manufacturer: DataFrame,
+            stage: DataFrame => DataFrame = identity): Models = {
+    val stg    = stage(StgMaude(maudeRaw))
     val fact   = FactAdverseEvents(stg, manufacturer)
-    val counts = AeCountsQ(fact)
+    val counts = stage(AeCountsQ(fact))
     val sig    = VAeEarlySignals(counts)
     Models(stg, fact, counts, sig)
   }
 
   /** Run end-to-end from paths; optionally persist marts under `martsDir`
-    * (parquet, facts partitioned by receive-year). Registers every model
-    * as a temp view (stg/view semantics) and returns the DAG. */
+    * (parquet, facts partitioned by receive-year). Stages `stg_maude` and
+    * `ae_counts_q` for this run (see the object doc), registers every model
+    * as a temp view and returns the DAG. */
   def run(spark: SparkSession, landingPath: String, seedPath: String,
           martsDir: Option[String] = None): Models = {
     def tagged[T](tag: String)(body: => T): T = {
@@ -44,9 +67,14 @@ object Pipeline {
       try body finally spark.sparkContext.clearJobGroup()
     }
 
-    val models = build(
-      MaudeIngest.batch(spark, landingPath),
-      MaudeIngest.manufacturerSeed(spark, seedPath))
+    // adaptive execution runs the counts checkpoint's shuffle stage while
+    // planning it, and that stage fills the staged stg_maude
+    val models = tagged("stg_maude") {
+      build(
+        MaudeIngest.batch(spark, landingPath),
+        MaudeIngest.manufacturerSeed(spark, seedPath),
+        _.localCheckpoint(eager = false, StorageLevel.DISK_ONLY))
+    }
 
     models.stgMaude.createOrReplaceTempView("stg_maude")
     models.factAdverseEvents.createOrReplaceTempView("fact_adverse_events")
@@ -54,15 +82,17 @@ object Pipeline {
     models.vAeEarlySignals.createOrReplaceTempView("v_ae_early_signals")
 
     martsDir.foreach { dir =>
-      tagged("fact_adverse_events") {
-        models.factAdverseEvents
-          .withColumn("yyyy", year(col("date_received")))
-          .write.mode("overwrite").partitionBy("yyyy")
-          .parquet(s"$dir/fact_adverse_events")
-      }
-      tagged("ae_counts_q") {
-        models.aeCountsQ.write.mode("overwrite").parquet(s"$dir/ae_counts_q")
-      }
+      val writes = Seq(
+        Par.submit(tagged("fact_adverse_events") {
+          models.factAdverseEvents
+            .withColumn("yyyy", year(col("date_received")))
+            .write.mode("overwrite").partitionBy("yyyy")
+            .parquet(s"$dir/fact_adverse_events")
+        }),
+        Par.submit(tagged("ae_counts_q") {
+          models.aeCountsQ.write.mode("overwrite").parquet(s"$dir/ae_counts_q")
+        }))
+      writes.foreach(Par.await)
     }
     models
   }

@@ -34,4 +34,25 @@ class ChecksSpec extends SparkSpec {
     val fails = Checks.relationships(df, "v", parent, "pk").collect()
     assert(fails.map(_.getAs[String]("v")).toSet === Set("z"))
   }
+
+  test("run evaluates a mixed suite as one query, equal to per-check counts") {
+    val keys = Seq(Some("a"), Some("a"), None, None, Some("b")).toDF("k")
+    val parent = Seq("x", "y").toDF("pk")
+    val suite = Map(
+      "k_not_null" -> Checks.notNull(keys, "k"),
+      "k_unique" -> Checks.unique(keys, "k"),
+      "v_not_null_when_big" -> Checks.notNull(df, "v", col("n") >= 2),
+      "v_accepted" -> Checks.acceptedValues(df, "v", Seq("x")),
+      "v_fk_parent" -> Checks.relationships(df, "v", parent, "pk"),
+      "n_green" -> Checks.notNull(df, "n"))
+    val expected = suite.map { case (name, fails) => name -> fails.count() }
+    assert(expected === Map("k_not_null" -> 2L, "k_unique" -> 2L, "v_not_null_when_big" -> 1L,
+      "v_accepted" -> 2L, "v_fk_parent" -> 1L, "n_green" -> 0L))
+    val plans = executedPlans { assert(Checks.run(suite) === expected) }
+    assert(plans.size === 1, plans.mkString("\n\n"))
+  }
+
+  test("run on an empty suite is an empty map") {
+    assert(Checks.run(Map.empty) === Map.empty[String, Long])
+  }
 }

@@ -2,8 +2,10 @@ package graft.models
 
 import graft.SparkSpec
 import graft.sources.MaudeIngest
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.security.MessageDigest
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 /** End-to-end vigilance pipeline semantics over the NDJSON fixture. */
 class PipelineSpec extends SparkSpec {
@@ -136,5 +138,67 @@ class PipelineSpec extends SparkSpec {
     // The reference's fact test demands non-NULL dates while the fact model
     // never filters them (SURVEY.md §3) — our fixture has 3 such rows.
     assert(results.filter(_._2 > 0) === Map("fact_date_received_not_null" -> 3L))
+  }
+
+  // ---- Pipeline.run: staged per run, same rows as the lazy DAG ----
+
+  /** Rows of a model, order-free; `load_ts` is one value per run in
+    * `run` and one per query in `build`, so it is left out. */
+  private def rowsOf(df: DataFrame): Seq[Row] =
+    df.drop("load_ts").collect().toSeq.sortBy(_.toString)
+
+  private def modelRows(m: Pipeline.Models): Seq[Seq[Row]] =
+    Seq(m.stgMaude, m.factAdverseEvents, m.aeCountsQ, m.vAeEarlySignals).map(rowsOf)
+
+  private def builtFrom(landing: String, seed: String): Pipeline.Models =
+    Pipeline.build(MaudeIngest.batch(spark, landing), MaudeIngest.manufacturerSeed(spark, seed))
+
+  test("run with marts returns the build DAG's rows, and the marts hold them") {
+    val base = Files.createTempDirectory("maude_run")
+    val (land, sd) = MaudeFixture.write(base)
+    val marts = base.resolve("marts").toString
+    val ran = Pipeline.run(spark, land, sd, Some(marts))
+    val built = builtFrom(land, sd)
+    assert(modelRows(ran) === modelRows(built))
+
+    val fact = built.factAdverseEvents
+    val factMart = spark.read.parquet(s"$marts/fact_adverse_events")
+      .select(fact.columns.map(col).toSeq: _*)
+    assert(rowsOf(factMart) === rowsOf(fact))
+    val counts = built.aeCountsQ
+    val countsMart = spark.read.parquet(s"$marts/ae_counts_q")
+      .select(counts.columns.map(col).toSeq: _*)
+    assert(rowsOf(countsMart) === rowsOf(counts))
+  }
+
+  test("a second run over a changed landing serves the new rows, not the staged ones") {
+    val base = Files.createTempDirectory("maude_rerun")
+    val (land, sd) = MaudeFixture.write(base)
+    val marts = base.resolve("marts").toString
+    val first = Pipeline.run(spark, land, sd, Some(marts))
+    assert(first.stgMaude.count() === 6)
+
+    val added = """{"mdr_report_key":"1007","report_number":"RN-7","date_received":"20200520",""" +
+      """"event_type":"Injury","manufacturer_d_name":"ZETA DEVICES","mdr_text":[{"text":"leak"}]}"""
+    Files.writeString(Path.of(land, "maude_part0.json"),
+      (MaudeFixture.ndjson.take(4) :+ added).mkString("\n"))
+    val second = Pipeline.run(spark, land, sd, Some(marts))
+    val keys = second.stgMaude.select("mdr_report_key").collect().map(_.getString(0)).toSet
+    assert(keys === Set("1001", "1002", "1003", "1004", "1007"))
+    assert(modelRows(second) === modelRows(builtFrom(land, sd)))
+    assert(spark.table("stg_maude").count() === 5)
+    assert(spark.read.parquet(s"$marts/fact_adverse_events").count() === 5)
+  }
+
+  test("one refresh (run + checks + signals) scans the NDJSON landing in one plan") {
+    val base = Files.createTempDirectory("maude_scans")
+    val (land, sd) = MaudeFixture.write(base)
+    val plans = executedPlans {
+      val m = Pipeline.run(spark, land, sd, Some(base.resolve("marts").toString))
+      graft.checks.Checks.run(Pipeline.checks(m))
+      m.vAeEarlySignals.collect()
+    }
+    val jsonScans = plans.filter(_.contains("FileScan json"))
+    assert(jsonScans.size === 1, jsonScans.mkString("\n\n"))
   }
 }
