@@ -15,6 +15,19 @@ import org.apache.spark.sql.Row
  */
 object Streams {
 
+  /** The `batch_id=` directory partition column exactly as discovery
+    * infers it for these layouts (small integral ids → IntegerType) —
+    * appended to the footer-recovered file schema on every
+    * micro-batch-table read so the explicit-schema path (r17 floor
+    * lever, [[graft.ParquetMeta]]) reproduces the inferred relation. */
+  private val BatchIdPart = org.apache.spark.sql.types.StructField(
+    "batch_id", org.apache.spark.sql.types.IntegerType)
+
+  /** `cid=` partition column as discovery infers it (list ids →
+    * IntegerType) — the vector index nests it under `batch_id=`. */
+  private val CidPart = org.apache.spark.sql.types.StructField(
+    "cid", org.apache.spark.sql.types.IntegerType)
+
   /** Watermarked tumbling-window event counts per type — the streaming
     * analog of the quarterly batch rollup, for monitoring-grade freshness. */
   def windowedEventCounts(events: DataFrame, tsCol: String, typeCol: String,
@@ -57,40 +70,68 @@ object Streams {
    * continuous `target_lag`.
    *
    * Exactly-once output discipline (the fact table carries a uniqueness
-   * contract the batch pipeline enforces):
-   *  - cross-batch re-deliveries of the same `mdr_report_key` (landing
-   *    feeds re-send records across files) are dropped by
-   *    `dropDuplicatesWithinWatermark` over `dedupHorizon` of `load_ts` —
-   *    bounded state, evicted as the watermark passes;
+   * contract the batch pipeline enforces). The stream is stateless: the
+   * committed fact partitions ARE the dedup state, merged insert-only by
+   * key (the lakehouse stream-into-table idiom), so each landing is one
+   * micro-batch with no state store and no watermark no-data batch.
+   *  - a batch first drops its own duplicate `mdr_report_key`s, then
+   *    left-anti joins against the key column of the committed fact
+   *    partitions `batch_id < batchId` — one column of at most
+   *    `compactEvery`+1 directories' files when compaction is on. Keys
+   *    match null-safely, so keyless records collapse to one row too;
+   *  - re-deliveries are dropped at ANY age: the seen set is every key
+   *    ever committed, not a watermark horizon of `load_ts`;
    *  - foreachBatch is at-least-once, so each batch OVERWRITES its own
-   *    `batch_id=` partition instead of appending — a retried batch
-   *    replaces itself, never duplicates.
+   *    `batch_id=` partition instead of appending, and its seen set
+   *    excludes that partition: a replayed batch never treats its own
+   *    first attempt's rows as already seen, so it replaces itself, never
+   *    duplicates or vanishes. Compaction folds only ids below the current
+   *    one into a directory that keeps a lower id, so compacted keys stay
+   *    seen.
    */
   def incrementalPipeline(maudeStream: DataFrame, manufacturer: DataFrame,
                           outDir: String,
-                          dedupHorizon: String = "24 hours",
                           compactEvery: Int = 0): DataStreamWriter[Row] =
-    maudeStream
-      .withColumn("__key", col("raw.mdr_report_key"))
-      .withWatermark("load_ts", dedupHorizon)
-      .dropDuplicatesWithinWatermark("__key")
-      .drop("__key")
-      .writeStream
+    maudeStream.writeStream
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val m = BatchPipeline.build(batch, manufacturer)
+        val factDir = s"$outDir/fact_adverse_events_stream"
+        val unique = batch.withColumn("__key", col("raw.mdr_report_key"))
+          .dropDuplicates("__key")
+        val fresh = committedBelow(batch.sparkSession, factDir, batchId)
+          .fold(unique) { seen =>
+            val keys = seen.select(col("mdr_report_key"))
+            unique.join(keys, unique("__key") <=> keys("mdr_report_key"), "left_anti")
+          }.drop("__key")
+        val m = BatchPipeline.build(fresh, manufacturer)
         m.factAdverseEvents.write.mode("overwrite")
-          .parquet(s"$outDir/fact_adverse_events_stream/batch_id=$batchId")
+          .parquet(s"$factDir/batch_id=$batchId")
         // In-line compaction folds only batches BELOW the current one
         // (`belowId = batchId`): those are checkpoint-committed and can
         // never be replayed, whereas THIS batch replays with the same id
         // after a crash-before-commit — its overwrite of `batch_id=<id>`
         // must never target the directory holding earlier batches' rows.
         if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-          compactBatchPartitions(batch.sparkSession,
-            s"$outDir/fact_adverse_events_stream", belowId = batchId)
+          compactBatchPartitions(batch.sparkSession, factDir, belowId = batchId)
         ()
       }
+
+  /** The committed rows of a micro-batch table: its `batch_id=`
+    * partitions strictly below `batchId`, the partition column dropped.
+    * `None` when there are none (the first batch, or a replay of it). A
+    * batch that reads its table's earlier state through this never sees
+    * its own failed first attempt. */
+  private def committedBelow(spark: org.apache.spark.sql.SparkSession,
+                             tableDir: String, batchId: Long): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(tableDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val committed = fs.exists(p) && fs.listStatus(p).exists(s =>
+      s.isDirectory && s.getPath.getName.startsWith("batch_id=") &&
+        s.getPath.getName.stripPrefix("batch_id=").toLong < batchId)
+    Option.when(committed)(
+      graft.ParquetMeta.read(spark, Seq(tableDir), Seq(BatchIdPart))
+        .filter(col("batch_id") < batchId).drop("batch_id"))
+  }
 
   /**
    * Incremental search-index refresh (the reference's Cortex Search
@@ -104,8 +145,8 @@ object Streams {
    * query time from the doc-length table, so they track the upserts.
    *
    * Re-delivered doc ids are the caller's concern (compose with
-   * [[dedupWithinWatermark]] upstream), matching the landing-feed
-   * contract of [[incrementalPipeline]].
+   * [[dedupWithinWatermark]] upstream); unlike [[incrementalPipeline]],
+   * this writer keeps no key set of its own.
    */
   def incrementalSearchIndex(docStream: DataFrame, idCol: String, textCol: String,
                              vecCol: String, centroids: DataFrame,
@@ -192,21 +233,9 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import graft.operators.Dedup
         val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val committed = {
-          val p = new org.apache.hadoop.fs.Path(indexDir)
-          fs.exists(p) && fs.listStatus(p).exists(s =>
-            s.isDirectory && s.getPath.getName.startsWith("batch_id=") &&
-              s.getPath.getName.stripPrefix("batch_id=").toLong < batchId)
-        }
-        val index =
-          if (committed)
-            graft.ParquetMeta.read(spark, Seq(indexDir), Seq(BatchIdPart))
-              .filter(col("batch_id") < batchId).drop("batch_id")
-          else // first batch (or replay of it): nothing admitted yet
-            Dedup.lshIndex(batch.limit(0), idCol, textCol,
-              shingleN, bands, rowsPerBand)
+        // first batch (or replay of it): nothing admitted yet
+        val index = committedBelow(spark, indexDir, batchId).getOrElse(
+          Dedup.lshIndex(batch.limit(0), idCol, textCol, shingleN, bands, rowsPerBand))
         val b = batch.cache()
         try {
           val decisions = Dedup.admitIncremental(index, b, idCol, textCol,
@@ -319,14 +348,6 @@ object Streams {
   /** The live CMS from the persisted deltas: element-wise sum (linearity
     * makes this exact, not an approximation of the batch-computed
     * sketch). ≤ (batches × d × w) tiny rows — a driver-light read. */
-  /** The `batch_id=` directory partition column exactly as discovery
-    * infers it for these layouts (small integral ids → IntegerType) —
-    * appended to the footer-recovered file schema on every
-    * micro-batch-table read so the explicit-schema path (r17 floor
-    * lever, [[graft.ParquetMeta]]) reproduces the inferred relation. */
-  private val BatchIdPart = org.apache.spark.sql.types.StructField(
-    "batch_id", org.apache.spark.sql.types.IntegerType)
-
   def readCmsCounters(spark: org.apache.spark.sql.SparkSession,
                       outDir: String): DataFrame =
     graft.ParquetMeta.read(spark, Seq(outDir), Seq(BatchIdPart))
@@ -518,11 +539,6 @@ object Streams {
   }
 
   /** The live (id, cid, codes) state written by [[incrementalVectorIndex]]. */
-  /** `cid=` partition column as discovery infers it (list ids →
-    * IntegerType) — the vector index nests it under `batch_id=`. */
-  private val CidPart = org.apache.spark.sql.types.StructField(
-    "cid", org.apache.spark.sql.types.IntegerType)
-
   def readVectorIndex(spark: org.apache.spark.sql.SparkSession,
                       outDir: String): DataFrame =
     graft.ParquetMeta.read(spark, Seq(outDir), Seq(BatchIdPart, CidPart))
@@ -579,17 +595,6 @@ object Streams {
     for (t <- Seq("tf", "dl", "assigned"))
       compactBatchPartitions(spark, s"$outDir/$t", filesPerTable, belowId)
 
-  /** Fold `batch_id=` partitions of ONE micro-batch-structured table
-    * into a single partition of `filesPer` files (the generic compactor
-    * behind [[compactSearchIndex]]; also fits
-    * [[incrementalPipeline]]'s fact output). Only partitions with id
-    * strictly below `belowId` participate, and they fold into the LARGEST
-    * participating id — from inside `foreachBatch(batchId)` pass
-    * `belowId = batchId` so the not-yet-committed current batch (which a
-    * crash replays, overwriting `batch_id=<batchId>`) is never folded;
-    * ids below the current one are committed and cannot replay. A live
-    * stream's future batch ids are strictly greater than every folded id,
-    * so new partitions never collide with the compacted one. */
   /** Complete or clean leftovers of a previously-FAILED compaction before
     * a new fold runs. Decidability comes from a COMMIT MARKER (an empty
     * `.compact_commit_<table>_b<id>` file created atomically after the
@@ -685,6 +690,17 @@ object Streams {
     }
   }
 
+  /** Fold `batch_id=` partitions of ONE micro-batch-structured table
+    * into a single partition of `filesPer` files (the generic compactor
+    * behind [[compactSearchIndex]]; also fits
+    * [[incrementalPipeline]]'s fact output). Only partitions with id
+    * strictly below `belowId` participate, and they fold into the LARGEST
+    * participating id — from inside `foreachBatch(batchId)` pass
+    * `belowId = batchId` so the not-yet-committed current batch (which a
+    * crash replays, overwriting `batch_id=<batchId>`) is never folded;
+    * ids below the current one are committed and cannot replay. A live
+    * stream's future batch ids are strictly greater than every folded id,
+    * so new partitions never collide with the compacted one. */
   def compactBatchPartitions(spark: org.apache.spark.sql.SparkSession,
                              tableDir: String, filesPer: Int = 4,
                              belowId: Long = Long.MaxValue,

@@ -6,72 +6,127 @@ import graft.operators.{Bm25, HybridSearch}
 import graft.sources.MaudeIngest
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** One AvailableNow run of [[Streams.incrementalPipeline]] over the
+    * fixture landing under `base`; asserts the landing was ONE micro-batch
+    * (a stateless stream runs no watermark no-data batch). */
+  private def pipelineRun(base: java.nio.file.Path, landing: String,
+                          seed: String): Unit = {
+    val q = Streams.incrementalPipeline(MaudeIngest.stream(spark, landing),
+        MaudeIngest.manufacturerSeed(spark, seed), base.resolve("marts").toString)
+      .option("checkpointLocation", base.resolve("ckpt").toString)
+      .start()
+    q.awaitTermination()
+    assert(q.recentProgress.length === 1)
+  }
+
+  private def factBatchDirs(base: java.nio.file.Path): Seq[String] =
+    new java.io.File(base.resolve("marts/fact_adverse_events_stream").toString)
+      .listFiles().filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
+      .map(_.getName).sorted.toSeq
+
+  private def landFile(landing: String, name: String, lines: String*): Unit = {
+    Files.writeString(java.nio.file.Paths.get(landing, name), lines.mkString("\n"))
+    ()
+  }
 
   test("incremental pipeline: streamed landing files land in the fact sink") {
     val base = Files.createTempDirectory("maude_stream")
     val (landing, seed) = MaudeFixture.write(base)
     val out = base.resolve("marts").toString
-    val seedDf = MaudeIngest.manufacturerSeed(spark, seed)
+    def fact = spark.read.parquet(s"$out/fact_adverse_events_stream")
 
-    val q = Streams.incrementalPipeline(
-        MaudeIngest.stream(spark, landing), seedDf, out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    q.awaitTermination()
-    assert(spark.read.parquet(s"$out/fact_adverse_events_stream").count() === 6)
+    pipelineRun(base, landing, seed)
+    assert(fact.count() === 6)
+    assert(factBatchDirs(base).length === 1)
 
     // a late-arriving file is picked up incrementally, not reprocessed
-    Files.writeString(java.nio.file.Paths.get(landing, "maude_part1.json"),
+    landFile(landing, "maude_part1.json",
       """{"mdr_report_key":"2001","report_number":"RN-7","date_received":"20210101","event_type":"INJURY","mdr_text":[{"text":"late leak"}]}""")
-    val q2 = Streams.incrementalPipeline(
-        MaudeIngest.stream(spark, landing), seedDf, out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    q2.awaitTermination()
-    val fact = spark.read.parquet(s"$out/fact_adverse_events_stream")
+    pipelineRun(base, landing, seed)
     assert(fact.count() === 7)
+    assert(factBatchDirs(base).length === 2)
     assert(fact.filter(col("mdr_report_key") === "2001")
       .collect().head.getAs[String]("failure_mode") === "LEAK")
 
     // the generic batch-dir compactor folds both micro-batch partitions
     // into one; rows and the uniqueness contract survive
     Streams.compactBatchPartitions(spark, s"$out/fact_adverse_events_stream")
-    val dirs = new java.io.File(s"$out/fact_adverse_events_stream").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-    assert(dirs.length === 1)
-    val compacted = spark.read.parquet(s"$out/fact_adverse_events_stream")
-    assert(compacted.count() === 7)
-    assert(compacted.groupBy(col("mdr_report_key")).count()
+    assert(factBatchDirs(base) === Seq("batch_id=1"))
+    assert(fact.count() === 7)
+    assert(fact.groupBy(col("mdr_report_key")).count()
       .filter(col("count") > 1).isEmpty)
+
+    // the compacted partition is still the seen set: re-delivering a key
+    // that now lives only in it adds no row
+    landFile(landing, "maude_part2.json",
+      """{"mdr_report_key":"1001","report_number":"RN-1","date_received":"20200115","event_type":"INJURY","mdr_text":[{"text":"resent after compaction"}]}""")
+    pipelineRun(base, landing, seed)
+    assert(factBatchDirs(base) === Seq("batch_id=1", "batch_id=2"))
+    assert(fact.count() === 7)
+    assert(fact.filter(col("mdr_report_key") === "1001").count() === 1)
   }
 
   test("incremental pipeline drops cross-file re-deliveries of the same report key") {
     val base = Files.createTempDirectory("maude_dedup")
     val (landing, seed) = MaudeFixture.write(base)
     val out = base.resolve("marts").toString
-    val seedDf = MaudeIngest.manufacturerSeed(spark, seed)
-    val q = Streams.incrementalPipeline(
-        MaudeIngest.stream(spark, landing), seedDf, out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    q.awaitTermination()
-    val n0 = spark.read.parquet(s"$out/fact_adverse_events_stream").count()
+    def fact = spark.read.parquet(s"$out/fact_adverse_events_stream")
+    // one file carrying the same key twice, and a keyless record
+    landFile(landing, "maude_dup.json",
+      """{"mdr_report_key":"3001","report_number":"RN-8","date_received":"20210201","event_type":"INJURY","mdr_text":[{"text":"first copy"}]}""",
+      """{"mdr_report_key":"3001","report_number":"RN-8","date_received":"20210201","event_type":"INJURY","mdr_text":[{"text":"second copy"}]}""",
+      """{"report_number":"RN-9","date_received":"20210202","event_type":"INJURY","mdr_text":[{"text":"no key"}]}""")
+    pipelineRun(base, landing, seed)
+    val n0 = fact.count()
+    assert(n0 === 8)
+    assert(fact.filter(col("mdr_report_key") === "3001").count() === 1)
+    assert(factBatchDirs(base).length === 1)
 
     // the same report key re-delivered in a later landing file must NOT
-    // produce a second fact row (fact_event_id_unique contract)
-    Files.writeString(java.nio.file.Paths.get(landing, "maude_redelivery.json"),
-      """{"mdr_report_key":"1001","report_number":"RN-1","date_received":"20210101","event_type":"INJURY","mdr_text":[{"text":"resent record"}]}""")
-    val q2 = Streams.incrementalPipeline(
-        MaudeIngest.stream(spark, landing), seedDf, out)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    q2.awaitTermination()
-    val fact = spark.read.parquet(s"$out/fact_adverse_events_stream")
+    // produce a second fact row (fact_event_id_unique contract), and a
+    // second keyless record collapses onto the first (null-safe match)
+    landFile(landing, "maude_redelivery.json",
+      """{"mdr_report_key":"1001","report_number":"RN-1","date_received":"20210101","event_type":"INJURY","mdr_text":[{"text":"resent record"}]}""",
+      """{"report_number":"RN-10","date_received":"20210303","event_type":"INJURY","mdr_text":[{"text":"no key again"}]}""")
+    pipelineRun(base, landing, seed)
+    assert(factBatchDirs(base).length === 2)
     assert(fact.count() === n0)
+    assert(fact.filter(col("mdr_report_key").isNull).count() === 1)
     assert(fact.groupBy(col("event_id")).count().filter(col("count") > 1).isEmpty)
+  }
+
+  test("incremental pipeline: a batch replayed after a lost commit keeps its own rows") {
+    val base = Files.createTempDirectory("maude_replay")
+    val (landing, seed) = MaudeFixture.write(base)
+    val out = base.resolve("marts").toString
+    def fact = spark.read.parquet(s"$out/fact_adverse_events_stream")
+    pipelineRun(base, landing, seed)
+    landFile(landing, "maude_part1.json",
+      """{"mdr_report_key":"2001","report_number":"RN-7","date_received":"20210101","event_type":"INJURY","mdr_text":[{"text":"late leak"}]}""",
+      """{"mdr_report_key":"1002","report_number":"RN-2","date_received":"20200215","event_type":"malfunction"}""")
+    pipelineRun(base, landing, seed)
+    assert(fact.count() === 7)
+
+    // crash after batch 1 wrote its partition, before its commit: the
+    // restart replays batch 1 against the committed batch 0 only
+    val commits = base.resolve("ckpt/commits")
+    val last = Files.list(commits).iterator().asScala
+      .map(_.getFileName.toString).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    assert(last === "1")
+    Files.delete(commits.resolve(last))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    pipelineRun(base, landing, seed)
+    assert(Files.exists(commits.resolve(last)))
+    assert(fact.count() === 7)
+    assert(spark.read.parquet(s"$out/fact_adverse_events_stream/batch_id=1")
+      .select("mdr_report_key").collect().map(_.getString(0)).toSeq === Seq("2001"))
+    assert(fact.groupBy(col("mdr_report_key")).count()
+      .filter(col("count") > 1).isEmpty)
   }
 
   test("incremental search index: new docs become searchable without a rebuild") {
