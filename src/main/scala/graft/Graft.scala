@@ -33,7 +33,11 @@ object Graft {
     * keeps its setting (forcing it session-wide would change the host's
     * OWN queries — silent-null casts and wrapping arithmetic would start
     * throwing). Operators that require the guard assert it locally
-    * (ZOrder.zoneMap throws up front under a non-ANSI session). */
+    * (ZOrder.zoneMap throws up front under a non-ANSI session).
+    *
+    * The [[StaticConf]] settings are not applied here: Spark reads them
+    * only when a session is built, so neither can be applied to a running
+    * host session. Pass them to the host's builder, or use [[session]]. */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -60,27 +64,48 @@ object Graft {
     spark
   }
 
+  /** The static settings [[session]] builds with. Spark reads each one
+    * only when a session is built, so they cannot be set later.
+    *
+    *  - `spark.sql.codegen.cache.maxEntries`: the size of the JVM-wide
+    *    cache of compiled classes (default 100). It is split across the 4
+    *    segments of a Guava cache, so a segment evicts after about 25
+    *    classes, and it is built once per JVM, at the first code
+    *    generation.
+    *  - `spark.sql.artifact.isolation.enabled`: off, so every session,
+    *    clones included, loads generated classes through one shared
+    *    classloader. */
+  val StaticConf: Map[String, Any] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> 1000,
+    "spark.sql.artifact.isolation.enabled" -> false)
+
   /** Build a local session with the engine defaults. `cores` also sizes
     * `spark.sql.shuffle.partitions` — one reducer per core locally; on a
     * cluster, set partitions to 2-3× total executor cores instead.
     *
-    * Codegen cache: Spark keeps compiled whole-stage classes in a JVM-wide
-    * cache of `spark.sql.codegen.cache.maxEntries` entries (default 100),
-    * split across the 4 segments of a Guava cache, so a segment evicts
-    * after about 25 classes. One vigilance refresh (pipeline, checks,
-    * signals; 30k records, 4 cores) uses more than that: at the default a
-    * warm refresh recompiled 26-59 classes with Janino, 0.5-1.2 s of
-    * compile time, varying run to run. At 1000 entries it compiles one,
-    * the staging projection, whose inlined `load_ts` literal is new in
-    * every run (about 40 ms). The cache is built once per JVM, at the
-    * first code generation, so the setting is static: [[configure]]
-    * cannot apply it to a running host session. */
+    * Codegen cache ([[StaticConf]]): one vigilance refresh (pipeline,
+    * checks, signals; 30k records, 4 cores) uses more than the default
+    * 100 entries: at the default a warm refresh recompiled 26-59 classes
+    * with Janino, 0.5-1.2 s of compile time, varying run to run. At 1000
+    * entries it compiles one, the staging projection, whose inlined
+    * `load_ts` literal is new in every run (about 40 ms).
+    *
+    * Artifact isolation ([[StaticConf]]): every `Trigger.AvailableNow`
+    * run of a streaming query (one per live landing) executes in a clone
+    * of this session. With isolation on (Spark's default), each clone gets
+    * its own artifact classloader, and the codegen cache key includes the
+    * classloader, so every landing missed the cache and recompiled the
+    * classes of the landing before it: 23 per warm landing (1,020 records,
+    * 4 cores). With isolation off a warm landing compiles one class twice
+    * (see [[graft.streaming.Streams.incrementalPipeline]]). The engine
+    * adds no jars or classes to a session at run time, so sharing the one
+    * classloader loses nothing. */
   def session(cores: Int = Runtime.getRuntime.availableProcessors(),
               appName: String = "graft"): SparkSession =
     configure(SparkSession.builder()
+      .config(StaticConf)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.codegen.cache.maxEntries", 1000)
       .config("spark.ui.enabled", "false")
       .appName(appName)
       .getOrCreate())

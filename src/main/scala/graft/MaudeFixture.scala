@@ -46,7 +46,7 @@ object MaudeFixture {
     * written exactly once per JVM ([[ensure]]) and read on every
     * consumer invocation — q146 alone reads `fact_stage/b=i` three
     * times per invocation, each paying the ~70 ms per-call schema
-    * re-inference (`graft.tools.FloorExp`). Metadata only; the rows are
+    * re-inference (OPTIMIZATION_r17.md). Metadata only; the rows are
     * scanned from parquet as before. Never applied to mutable state
     * dirs (those aren't fixture artifacts). */
   private val schemaMemo =

@@ -1,8 +1,11 @@
 package graft
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
+import java.util.concurrent.{CompletionException, Executors}
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
+import scala.jdk.FutureConverters._
 
 /** Tiny fixed pool for OVERLAPPING independent Spark actions from the
   * driver (optimization guide §2.6, "Stragglers and idle capacity"):
@@ -29,9 +32,19 @@ object Par {
     t.setDaemon(true)
     t
   })
-  implicit lazy val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-  /** Submit an independent action; pair with [[await]]. */
-  def submit[A](body: => A): Future[A] = Future(body)(ec)
+
+  /** Submit an independent action; pair with [[await]]. The body runs
+    * with the submitter's Spark thread-locals, captured at submit time as
+    * if it ran on the submitting thread: its active session (or the
+    * default one) and its SparkContext local properties (job group,
+    * description, SQL execution id). A pool thread would otherwise keep the ones it
+    * inherited from whichever thread created it, so a caller's job group
+    * could neither meter nor cancel the body's jobs. */
+  def submit[A](body: => A): Future[A] =
+    SQLExecution.withThreadLocalCaptured(SparkSession.active, pool)(body).asScala
+
   /** Join a submitted action, rethrowing its failure on the caller. */
-  def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+  def await[A](f: Future[A]): A =
+    try Await.result(f, Duration.Inf)
+    catch { case e: CompletionException if e.getCause != null => throw e.getCause }
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
  *
  * `spark.read.parquet(path)` re-infers the schema on every call; on this
  * host that inference costs ~65 ms per relation on top of the ~5 ms
- * explicit-schema path (`graft.tools.FloorExp`). The replay/streaming
- * operators re-read small state they (or an earlier batch) JUST wrote
- * many times per invocation — merge base images, pre-/post-images,
+ * explicit-schema path (OPTIMIZATION_r17.md, "The per-query floor").
+ * The replay/streaming operators re-read small state they (or an earlier
+ * batch) JUST wrote many times per invocation — merge base images, pre-/post-images,
  * sketch-delta folds, compaction folds — so the inference tax recurs per
  * micro-batch, not per table.
  *

@@ -2120,7 +2120,7 @@ object SparkEntry {
       phases.map { case (k, v) => f"$k=$v%.2f" }.mkString(" ") +
       f" sum=${phases.values.sum}%.2f")
     // explicit schema from the checkpointed frame just written (r17
-    // floor lever: skip the ~70 ms re-inference — FloorExp)
+    // floor lever: skip the ~70 ms re-inference — OPTIMIZATION_r17.md)
     s.read.schema(prevSignalsOpt.get.schema).parquet(s"$root/signals/v=2")
       .select(col("canonical_mfr"), col("failure_mode"), col("year_quarter"),
         col("quarter_index"), col("n_events"),
@@ -2546,7 +2546,7 @@ object SparkEntry {
       state = Some(merged)
     }
     // explicit schema from the frame just written (r17 floor lever:
-    // per-call parquet schema inference measured ~70 ms — FloorExp)
+    // per-call parquet schema inference measured ~70 ms — OPTIMIZATION_r17.md)
     val daily = s.read.schema(state.get.schema).parquet(s"$dir/state_2")
       .select(col("event_type"), col("day"), col("n"))
     val w = org.apache.spark.sql.expressions.Window

@@ -23,9 +23,10 @@ object Tables {
   /** Per-path parquet SCHEMA memo (r17, guide §1.2 — don't compute things
     * you throw away): `spark.read.parquet(path)` re-infers the schema on
     * EVERY call — a footer read + resolve measured at ~71 ms per relation
-    * on this host (`graft.tools.FloorExp`: 355.6 ms inferred vs 26.8 ms
-    * explicit-schema across the 5 hottest tables) — and the bench
-    * constructs ~850 relations per full run (219 queries × 3 repeats).
+    * on this host (OPTIMIZATION_r17.md, "The per-query floor": 355.6 ms
+    * inferred vs 26.8 ms explicit-schema across the 5 hottest tables) —
+    * and the bench constructs ~850 relations per full run (219 queries
+    * × 3 repeats).
     * A catalog table pays this once at definition time; these loaders are
     * the repo's catalog, so they do the same: infer once per (immutable)
     * path, then pass the schema explicitly. This memoizes METADATA only —

@@ -32,7 +32,8 @@ import org.apache.spark.storage.StorageLevel
  * it is evaluated per query instead.
  *
  * Each stage is tagged via the job group (the QUERY_TAG / FinOps analog,
- * README.md:128-133). Mart writes are partitioned by receive-year so
+ * README.md:128-133), and the caller's own job group is restored after
+ * each stage. Mart writes are partitioned by receive-year so
  * time-scoped reads prune at 100 TB; the two mart writes are independent
  * and run overlapped through [[graft.Par]].
  */
@@ -56,6 +57,10 @@ object Pipeline {
     Models(stg, fact, counts, sig)
   }
 
+  /** The local properties `SparkContext.setJobGroup` sets. */
+  private val JobGroupKeys = Seq(
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
   /** Run end-to-end from paths; optionally persist marts under `martsDir`
     * (parquet, facts partitioned by receive-year). Stages `stg_maude` and
     * `ae_counts_q` for this run (see the object doc), registers every model
@@ -63,8 +68,10 @@ object Pipeline {
   def run(spark: SparkSession, landingPath: String, seedPath: String,
           martsDir: Option[String] = None): Models = {
     def tagged[T](tag: String)(body: => T): T = {
-      spark.sparkContext.setJobGroup(tag, s"vigilance:$tag", interruptOnCancel = false)
-      try body finally spark.sparkContext.clearJobGroup()
+      val sc = spark.sparkContext
+      val saved = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
+      sc.setJobGroup(tag, s"vigilance:$tag", interruptOnCancel = false)
+      try body finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
 
     // adaptive execution runs the counts checkpoint's shuffle stage while

@@ -88,6 +88,19 @@ object Streams {
    *    duplicates or vanishes. Compaction folds only ids below the current
    *    one into a directory that keeps a lower id, so compacted keys stay
    *    seen.
+   *
+   * Codegen: each run executes in a clone of the caller's session. Under
+   * [[graft.Graft.StaticConf]] every clone loads generated code through
+   * one classloader, so a warm landing reuses the classes compiled for
+   * the landings before it. It still compiles one class twice: the source
+   * projection, which inlines the batch's `load_ts` (streaming turns
+   * `current_timestamp()` into the micro-batch's timestamp literal). The
+   * query thread compiles it when it plans the batch, and a task compiles
+   * it again, because the codegen cache key also holds the thread's
+   * context classloader, which differs between the two threads. On 4
+   * cores each compile takes 20-70 ms. An empty foreachBatch body still
+   * pays the first one. Keeping the literal out of the code would need a
+   * second projection over the batch, or a lookup of its timestamp.
    */
   def incrementalPipeline(maudeStream: DataFrame, manufacturer: DataFrame,
                           outDir: String,

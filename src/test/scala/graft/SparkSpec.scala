@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -10,6 +11,14 @@ import scala.jdk.CollectionConverters._
 /** Shared local SparkSession for all suites (one JVM, one session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Classes Janino compiled while `body` ran. The counter is JVM-wide;
+    * the suites run one at a time. */
+  def compiles(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 
   /** The executed plan of every query action `body` runs, as text, in
     * completion order. Query listeners are called asynchronously, in
@@ -42,8 +51,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Built with the engine's [[Graft.StaticConf]], so the specs compile
+    * and cache generated classes the way an engine session does. */
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
+      .config(Graft.StaticConf)
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")

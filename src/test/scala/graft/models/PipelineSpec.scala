@@ -190,6 +190,27 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$marts/fact_adverse_events").count() === 5)
   }
 
+  test("a warm run compiles at most the staging projection") {
+    val base = Files.createTempDirectory("maude_warm_run")
+    val (land, sd) = MaudeFixture.write(base)
+    def run(): Unit = { Pipeline.run(spark, land, sd, Some(base.resolve("marts").toString)); () }
+    run(); run()
+    // the staging projection inlines the run's load_ts literal
+    assert(compiles(run()) <= 1)
+  }
+
+  test("run tags its stages but leaves the caller's job group in place") {
+    val base = Files.createTempDirectory("maude_group")
+    val (land, sd) = MaudeFixture.write(base)
+    val sc = spark.sparkContext
+    sc.setJobGroup("outer", "caller's group")
+    try {
+      Pipeline.run(spark, land, sd, Some(base.resolve("marts").toString))
+      assert(sc.getLocalProperty("spark.jobGroup.id") === "outer")
+      assert(sc.getLocalProperty("spark.job.description") === "caller's group")
+    } finally sc.clearJobGroup()
+  }
+
   test("one refresh (run + checks + signals) scans the NDJSON landing in one plan") {
     val base = Files.createTempDirectory("maude_scans")
     val (land, sd) = MaudeFixture.write(base)

@@ -129,6 +129,22 @@ class StreamsSpec extends SparkSpec {
       .filter(col("count") > 1).isEmpty)
   }
 
+  test("incremental pipeline: warm landings reuse the classes compiled for earlier ones") {
+    val base = Files.createTempDirectory("maude_compiles")
+    val (landing, seed) = MaudeFixture.write(base)
+    // batch 0 has no seen set; batch 1 plans the seen-set join first
+    pipelineRun(base, landing, seed)
+    val compiled = (1 to 5).map { n =>
+      landFile(landing, s"maude_warm$n.json",
+        s"""{"mdr_report_key":"${5000 + n}","report_number":"RN-W$n","date_received":"20210101","event_type":"INJURY","mdr_text":[{"text":"warm leak $n"}]}""")
+      compiles(pipelineRun(base, landing, seed))
+    }
+    // from the 3rd landing on, only the source projection, which inlines
+    // the batch's load_ts literal, is new (see the incrementalPipeline
+    // scaladoc)
+    assert(compiled.drop(1).forall(_ <= 2), s"classes compiled per landing: $compiled")
+  }
+
   test("incremental search index: new docs become searchable without a rebuild") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = Files.createTempDirectory("inc_index").toString
