@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan-inspection dev tool: print a declared query's physical plan
  * without editing test code —
@@ -22,13 +20,7 @@ object Explain {
     val sfDir = args.drop(1).find(!_.startsWith("--"))
       .getOrElse("/root/testdata/sf0.001")
     val run = args.contains("--run")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(appName = "explain")
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; known: " +
@@ -37,8 +29,7 @@ object Explain {
       // time CONSTRUCTION + count together: builders with eager
       // localCheckpoint rounds (kCore, the replay queries) do most of
       // their work at DataFrame-construction time, so timing only the
-      // final count under-reports by the whole iteration cost (the
-      // same contract Bench.timed uses)
+      // final count under-reports by the whole iteration cost
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val n = df.count()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Batch plan dump for the optimization rounds: writes
  * `<outDir>/<query>_<tag>.txt` containing `explain("formatted")` for
@@ -22,20 +20,14 @@ object ExplainAll {
       if (args.length < 3 || args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length >= 4) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(appName = "explainall")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
       // queries with replay state mutate dirs at CONSTRUCTION time; plan
-      // capture runs the same construction Verify/Bench do, so this is
+      // capture runs the same construction Verify does, so this is
       // safe (and idempotent) against the scratch state roots
       val plan =
         try fn(spark, sfDir).queryExecution.explainString(

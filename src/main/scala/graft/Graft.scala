@@ -79,6 +79,12 @@ object Graft {
     "spark.sql.codegen.cache.maxEntries" -> 1000,
     "spark.sql.artifact.isolation.enabled" -> false)
 
+  /** The core count [[session]] defaults to: `SPARK_GRAFT_CPUS` when set,
+    * otherwise every available processor. It is the one environment
+    * setting the engine reads. */
+  def localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Build a local session with the engine defaults. `cores` also sizes
     * `spark.sql.shuffle.partitions` — one reducer per core locally; on a
     * cluster, set partitions to 2-3× total executor cores instead.
@@ -100,7 +106,7 @@ object Graft {
     * (see [[graft.streaming.Streams.incrementalPipeline]]). The engine
     * adds no jars or classes to a session at run time, so sharing the one
     * classloader loses nothing. */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors(),
+  def session(cores: Int = localCores,
               appName: String = "graft"): SparkSession =
     configure(SparkSession.builder()
       .config(StaticConf)

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
  *    from scratch, which is what makes the memoization safe: within one
  *    process the source parquet cannot change under us.
  *  - Build-once is guarded by a synchronized tag set (queries run
- *    sequentially in Verify/Bench, but sbt may run suites concurrently).
+ *    sequentially in Verify, but sbt may run suites concurrently).
  *  - A shutdown hook removes the root — scratch, never a deliverable.
  *  - Single-query Verify runs stay self-contained: any consumer triggers
  *    exactly the builds it needs on first touch.

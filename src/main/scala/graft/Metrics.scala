@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -125,6 +126,23 @@ object Metrics {
     }
   }
 
+  /** The local properties `SparkContext.setJobGroup` sets. */
+  private val JobGroupKeys = Seq(
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+  /** Run `body` in job group `group` on this thread, then put back the
+    * thread's own job group (or none), also when `body` throws: a caller
+    * that wraps the call in its own group keeps it, and a throwing body
+    * does not leave the thread tagged into a dead group. */
+  private[graft] def inJobGroup[T](sc: SparkContext, group: String,
+                                   description: String,
+                                   interruptOnCancel: Boolean = false)
+                                  (body: => T): T = {
+    val saved = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
+    sc.setJobGroup(group, description, interruptOnCancel)
+    try body finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
   private def snapshot(cap: Capture, tag: String): QueryMetrics =
     QueryMetrics(tag, cap.jobsStarted.sum(), cap.tasks.sum(),
       cap.taskTime.sum(), cap.cpuTime.sum(), cap.shufRead.sum(),
@@ -140,11 +158,7 @@ object Metrics {
     val cap = new Capture(tag)
     sc.addSparkListener(cap)
     try {
-      sc.setJobGroup(tag, s"graft:$tag", interruptOnCancel = false)
-      // clearJobGroup in a finally: a throwing body must not leave the
-      // calling thread tagged into a dead group (every later action on
-      // the thread would silently join it)
-      val out = try body finally sc.clearJobGroup()
+      val out = inJobGroup(sc, tag, s"graft:$tag")(body)
       settle(cap, settleMs)
       (out, snapshot(cap, tag))
     } finally sc.removeSparkListener(cap)
@@ -224,9 +238,8 @@ object Metrics {
     cap.onExceed = () => sc.cancelJobGroup(tag)
     sc.addSparkListener(cap)
     try {
-      sc.setJobGroup(tag, s"graft:monitor:$tag", interruptOnCancel = true)
       val outcome =
-        try {
+        inJobGroup(sc, tag, s"graft:monitor:$tag", interruptOnCancel = true) {
           try Right(body)
           catch {
             // only swallow the failure this monitor itself caused: a
@@ -239,7 +252,7 @@ object Metrics {
                 if cap.exceededAxis.isDefined && isCancellation(e) =>
               Left(e)
           }
-        } finally sc.clearJobGroup()
+        }
       settle(cap, settleMs)
       val report = MonitorReport(snapshot(cap, tag), cap.exceededAxis,
         suspended = outcome.isLeft)

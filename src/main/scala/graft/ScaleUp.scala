@@ -1,19 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Deterministic sf0.1 → sf1 scale-up for the heavy-tier bench
- * (`BENCH_sf1.json`): derives a 10× corpus from the driver's sf0.1
- * tables by TILE replication — replica `r` offsets every entity key by
- * `r × stride(entity)` with one shared stride per entity id space
- * (custkey, suppkey, partkey, orderkey, doc, vec, event, user), so
- * referential integrity, per-key fan-in, degree distributions and group
- * cardinalities all scale exactly 10× while region/nation (genuinely
- * fixed dimensions) stay fixed. The correctness gate never reads this
- * data — it exists solely to measure whether the heavy plans' shuffle /
- * state behavior survives a decade of growth (VERDICT r10 item 1).
+ * Deterministic sf0.1 → sf1 scale-up (the data behind `BENCH_sf1.json`,
+ * measured by the retired `graft.Bench` harness, and the sf1 correctness
+ * run `CORRECTNESS_sf1.json`, through [[Verify]]): derives a 10× corpus
+ * from the driver's sf0.1 tables by TILE replication — replica `r`
+ * offsets every entity key by `r × stride(entity)` with one shared
+ * stride per entity id space (custkey, suppkey, partkey, orderkey, doc,
+ * vec, event, user), so referential integrity, per-key fan-in, degree
+ * distributions and group cardinalities all scale exactly 10× while
+ * region/nation (genuinely fixed dimensions) stay fixed. It exists to check that the heavy plans'
+ * results and shuffle / state behavior survive a decade of growth
+ * (VERDICT r10 item 1).
  *
  * Design notes, in decreasing order of subtlety:
  *  - **Tiles are key-disjoint**: the sf1 trade graph is 10 disjoint
@@ -54,14 +55,7 @@ object ScaleUp {
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1 && factor <= 1000, "factor in [1, 1000]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(appName = "scaleup")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()
 

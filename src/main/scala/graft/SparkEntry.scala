@@ -1944,22 +1944,6 @@ object SparkEntry {
     val root = replayStateDir(s, "q146", d)
     val stateDir = s"$root/state"
     val nBuckets = 16
-    // phase attribution (VERDICT r15 #2: at 8.77 s committed this is
-    // 6.7% of the whole gate — before attacking any term, measure the
-    // split): wall time per phase accumulated across the 3 batches,
-    // emitted as ONE stderr line when SPARK_GRAFT_Q146_PHASES=true so
-    // verify/bench output stays clean by default
-    val phaseOn = sys.env.get("SPARK_GRAFT_Q146_PHASES").contains("true")
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def ph[A](name: String)(body: => A): A =
-      if (!phaseOn) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        phases(name) = phases.getOrElse(name, 0.0) +
-          (System.nanoTime() - t0) / 1e9
-        r
-      }
     val groupCols = Seq("canonical_mfr", "failure_mode", "yyyy", "q",
       "quarter_index", "year_quarter")
     val pairCols = Seq("canonical_mfr", "failure_mode")
@@ -2010,17 +1994,17 @@ object SparkEntry {
       // ≤nBuckets values per task before the exchange (routing
       // deltaKeys' materialization through that phase measured +0.6 s —
       // two cache writes in one action's critical path).
-      // r16 attribution (SPARK_GRAFT_Q146_PHASES, warm solo at sf0.1):
+      // r16 phase attribution (wall time per phase, warm solo at sf0.1):
       // merge ~33%, signals_patch ~19%, counts_fold ~15%, image reads
       // ~14%, mart writes only ~8% — folding the two mart writes into
       // one job can recover at most ~0.3 s, under the host band; zstd
       // is already the engine default. Do not retry write-folding
       // without first re-measuring the band.
       val deltaKeys = fact.select(col("mdr_report_key")).distinct().cache()
-      val touchedBuckets = ph("buckets") { fact
+      val touchedBuckets = fact
         .select(pmod(xxhash64(col("mdr_report_key")), lit(nBuckets.toLong))
           .as("b"))
-        .distinct().collect().map(_.getLong(0)).toSet }
+        .distinct().collect().map(_.getLong(0)).toSet
       def images(state: Option[DataFrame]): DataFrame = state match {
         case Some(st) =>
           grouped(st.join(broadcast(deltaKeys),
@@ -2035,29 +2019,22 @@ object SparkEntry {
       // and the signals patch all reuse them, and without the cache each
       // downstream action would re-list and re-read the state buckets
       // (measured 15.6 s → the replayed-state class without it)
-      // under SPARK_GRAFT_Q146_PHASES the cached images are FORCED here
-      // (count on the cache) so their scan cost books to their own
-      // phase instead of the first downstream action — attribution-run
-      // only; the production path stays lazy-until-fold
       val removed = images(Streams.readScd1RawBuckets(s, stateDir, touchedBuckets))
         .cache()
       // r17 overlap (guide §2.6): the pre-image materialization and the
       // merge are INDEPENDENT jobs — the pre-image reads the BASE
       // versions, which the merge retains until a later batch supersedes
       // them — so the pre-image cache fills on a side thread while the
-      // merge job runs; `preimage` books the residual join wait. The
-      // merge itself reuses the ALREADY-COLLECTED bucket set (it used to
-      // re-collect the same distinct inside — guide §1.2, don't compute
-      // things twice).
+      // merge job runs, and is joined right after it. The merge itself
+      // reuses the ALREADY-COLLECTED bucket set (it used to re-collect
+      // the same distinct inside — guide §1.2, don't compute things
+      // twice).
       val preF = graft.Par.submit { removed.count(); () }
-      ph("merge") {
-        Streams.scd1MergeBatch(fact, i.toLong, Seq("mdr_report_key"),
-          Seq("seq"), stateDir, nBuckets, Some(touchedBuckets))
-      }
-      ph("preimage") { graft.Par.await(preF); () }
+      Streams.scd1MergeBatch(fact, i.toLong, Seq("mdr_report_key"),
+        Seq("seq"), stateDir, nBuckets, Some(touchedBuckets))
+      graft.Par.await(preF)
       val added = images(Streams.readScd1RawBuckets(s, stateDir, touchedBuckets))
         .cache()
-      if (phaseOn) ph("postimage") { added.count(); () }
       val prevCounts = prevCountsOpt.getOrElse(
         grouped(fact).limit(0).withColumn("n_events", lit(0L)))
       // the marts are aggregate-sized (groups, not events): coalesce the
@@ -2074,9 +2051,9 @@ object SparkEntry {
       // (next batch's fold, the final read path) see checkpointed
       // blocks as before. Content identical — the checkpoint is the
       // same plan, materialized one job earlier or later.
-      val countsNow = ph("counts_fold") { Incremental
+      val countsNow = Incremental
         .maintainCounts(prevCounts, removed, added, groupCols)
-        .coalesce(4).localCheckpoint(eager = false) }
+        .coalesce(4).localCheckpoint(eager = false)
       // MEASURED NEGATIVE, DO NOT RETRY AT TEST SCALE (r13 verdict #4
       // executed and reverted): publishing these marts through
       // [[graft.sinks.Publish.filesPartitionOverwrite]] (counts keyed
@@ -2101,9 +2078,9 @@ object SparkEntry {
       val fresh = VAeEarlySignals(
         countsNow.join(touchedPairs, pairCols, "left_semi"))
       val prevSignals = prevSignalsOpt.getOrElse(fresh.limit(0))
-      val signalsNow = ph("signals_patch") { Incremental
+      val signalsNow = Incremental
         .patchPartitions(prevSignals, fresh, touchedPairs, pairCols)
-        .coalesce(4).localCheckpoint(eager = false) }
+        .coalesce(4).localCheckpoint(eager = false)
       pendingWrites ::= graft.Par.submit {
         signalsNow.write.mode("overwrite").parquet(s"$root/signals/v=$i")
       }
@@ -2115,10 +2092,7 @@ object SparkEntry {
     }
     // join every published version before the declared read — the only
     // consumer of the files (the in-memory folds read the checkpoints)
-    ph("write_join") { pendingWrites.foreach(graft.Par.await) }
-    if (phaseOn) System.err.println("[q146] phases " +
-      phases.map { case (k, v) => f"$k=$v%.2f" }.mkString(" ") +
-      f" sum=${phases.values.sum}%.2f")
+    pendingWrites.foreach(graft.Par.await)
     // explicit schema from the checkpointed frame just written (r17
     // floor lever: skip the ~70 ms re-inference — OPTIMIZATION_r17.md)
     s.read.schema(prevSignalsOpt.get.schema).parquet(s"$root/signals/v=2")

@@ -10,16 +10,12 @@ import graft.models.Pipeline
  *
  * Usage: runMain graft.VigilanceDemo <landingDir> <seedCsv> [martsOutDir]
  *
- * The session is [[Graft.session]] with `SPARK_GRAFT_CPUS` cores (default:
- * every available processor).
+ * The session is [[Graft.session]] with [[Graft.localCores]] cores.
  */
 object VigilanceDemo {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: VigilanceDemo <landingDir> <seedCsv> [martsOutDir]")
-    val spark = Graft.session(
-      cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-        .getOrElse(Runtime.getRuntime.availableProcessors()),
-      appName = "vigilance")
+    val spark = Graft.session(appName = "vigilance")
     spark.sparkContext.setLogLevel("WARN")
 
     val models = Pipeline.run(spark, args(0), args(1), args.lift(2))

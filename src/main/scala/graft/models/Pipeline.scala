@@ -1,6 +1,6 @@
 package graft.models
 
-import graft.Par
+import graft.{Metrics, Par}
 import graft.checks.Checks
 import graft.sources.MaudeIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -57,22 +57,14 @@ object Pipeline {
     Models(stg, fact, counts, sig)
   }
 
-  /** The local properties `SparkContext.setJobGroup` sets. */
-  private val JobGroupKeys = Seq(
-    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-
   /** Run end-to-end from paths; optionally persist marts under `martsDir`
     * (parquet, facts partitioned by receive-year). Stages `stg_maude` and
     * `ae_counts_q` for this run (see the object doc), registers every model
     * as a temp view and returns the DAG. */
   def run(spark: SparkSession, landingPath: String, seedPath: String,
           martsDir: Option[String] = None): Models = {
-    def tagged[T](tag: String)(body: => T): T = {
-      val sc = spark.sparkContext
-      val saved = JobGroupKeys.map(k => k -> sc.getLocalProperty(k))
-      sc.setJobGroup(tag, s"vigilance:$tag", interruptOnCancel = false)
-      try body finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-    }
+    def tagged[T](tag: String)(body: => T): T =
+      Metrics.inJobGroup(spark.sparkContext, tag, s"vigilance:$tag")(body)
 
     // adaptive execution runs the counts checkpoint's shuffle stage while
     // planning it, and that stage fills the staged stg_maude

@@ -9,10 +9,8 @@ import org.apache.spark.sql.functions._
  * system's ranked lists and a ground-truth relevance set, compute the
  * standard per-query metrics (recall@k, precision@k, reciprocal rank,
  * success@k) that the reference's own retrieval SLO states as
- * "recall@20 ≥ 0.7" (reference README.md:87,139). The Bench harness
- * measures that SLO as a number; this operator makes the metric itself a
- * first-class, oracle-checkable query over arbitrary (ranking, truth)
- * pairs — e.g. grading an ANN index against brute-force truth, or a new
+ * "recall@20 ≥ 0.7" (reference README.md:87,139), as a first-class,
+ * oracle-checkable query over arbitrary (ranking, truth) pairs — e.g. grading an ANN index against brute-force truth, or a new
  * ranker against editorial judgments.
  *
  * Metric definitions (per query):

@@ -124,10 +124,16 @@ object Streams {
         // never be replayed, whereas THIS batch replays with the same id
         // after a crash-before-commit — its overwrite of `batch_id=<id>`
         // must never target the directory holding earlier batches' rows.
-        if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
+        if (compactsAfter(batchId, compactEvery))
           compactBatchPartitions(batch.sparkSession, factDir, belowId = batchId)
         ()
       }
+
+  /** The in-line compaction rule of every `compactEvery` writer: compact
+    * after every `compactEvery`-th batch (ids `compactEvery - 1`,
+    * `2 * compactEvery - 1`, ...), never when `compactEvery` is 0. */
+  private def compactsAfter(batchId: Long, compactEvery: Int): Boolean =
+    compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong
 
   /** The committed rows of a micro-batch table: its `batch_id=`
     * partitions strictly below `batchId`, the partition column dropped.
@@ -218,7 +224,7 @@ object Streams {
     // that holds every earlier batch's rows (that replay would be
     // silent permanent data loss). Batches below the current id are
     // committed and can never replay, so folding THEM is safe.
-    if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
+    if (compactsAfter(batchId, compactEvery))
       compactSearchIndex(batch.sparkSession, outDir, belowId = batchId)
   }
 
@@ -309,7 +315,7 @@ object Streams {
     // same in-line maintenance contract as incrementalSearchIndex:
     // fold only checkpoint-committed batches (belowId = current), so a
     // replayed in-flight batch can never overwrite the compacted dir
-    if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
+    if (compactsAfter(batchId, compactEvery))
       compactVectorIndex(batch.sparkSession, outDir, belowId = batchId)
   }
 
@@ -351,7 +357,7 @@ object Streams {
     graft.operators.Sketch.cmsCounters(batch, value, d, w, sha)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
+    if (compactsAfter(batchId, compactEvery))
       compactBatchPartitions(batch.sparkSession, outDir, filesPer = 1,
         belowId = batchId,
         fold = df => df.groupBy(col("j"), col("bucket"))
@@ -407,7 +413,7 @@ object Streams {
         Nil, col("lane"), p)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
+    if (compactsAfter(batchId, compactEvery))
       compactBatchPartitions(batch.sparkSession, outDir, filesPer = 1,
         belowId = batchId,
         fold = df => df.groupBy(col("bucket")).agg(max(col("r")).as("r")))
@@ -465,7 +471,7 @@ object Streams {
       .select(explode(col("mg")).as(Seq("item", "w")))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
+    if (compactsAfter(batchId, compactEvery))
       compactBatchPartitions(batch.sparkSession, outDir, filesPer = 1,
         belowId = batchId,
         fold = df => df.groupBy(col("item")).agg(sum(col("w")).as("w")))

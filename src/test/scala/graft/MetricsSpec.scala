@@ -85,4 +85,18 @@ class MetricsSpec extends SparkSpec {
     assert(m.jobs >= 1L && m.tasks > 0L)
     assert(m.shuffleWriteBytes < 1000000L)
   }
+
+  test("measure and resourceMonitor leave the caller's job group in place") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("outer", "caller's group")
+    try {
+      Metrics.measure(spark, "inner-measure")(spark.range(10).count())
+      assert(sc.getLocalProperty("spark.jobGroup.id") === "outer")
+      Metrics.resourceMonitor(spark, "inner-monitor",
+        Metrics.ResourceBudget())(spark.range(10).count())
+      assert(sc.getLocalProperty("spark.jobGroup.id") === "outer")
+      assert(sc.getLocalProperty("spark.job.description") === "caller's group")
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") === "false")
+    } finally sc.clearJobGroup()
+  }
 }
