@@ -33,9 +33,9 @@ import org.apache.spark.storage.StorageLevel
  *
  * Each stage is tagged via the job group (the QUERY_TAG / FinOps analog,
  * README.md:128-133), and the caller's own job group is restored after
- * each stage. Mart writes are partitioned by receive-year so
- * time-scoped reads prune at 100 TB; the two mart writes are independent
- * and run overlapped through [[graft.Par]].
+ * each stage. The marts are written as plain parquet tables, as the
+ * reference materializes them; the two mart writes are independent and
+ * run overlapped through [[graft.Par]].
  */
 object Pipeline {
 
@@ -57,10 +57,10 @@ object Pipeline {
     Models(stg, fact, counts, sig)
   }
 
-  /** Run end-to-end from paths; optionally persist marts under `martsDir`
-    * (parquet, facts partitioned by receive-year). Stages `stg_maude` and
-    * `ae_counts_q` for this run (see the object doc), registers every model
-    * as a temp view and returns the DAG. */
+  /** Run end-to-end from paths; optionally persist the marts as parquet
+    * under `martsDir`. Stages `stg_maude` and `ae_counts_q` for this run
+    * (see the object doc), registers every model as a temp view and
+    * returns the DAG. */
   def run(spark: SparkSession, landingPath: String, seedPath: String,
           martsDir: Option[String] = None): Models = {
     def tagged[T](tag: String)(body: => T): T =
@@ -83,10 +83,7 @@ object Pipeline {
     martsDir.foreach { dir =>
       val writes = Seq(
         Par.submit(tagged("fact_adverse_events") {
-          models.factAdverseEvents
-            .withColumn("yyyy", year(col("date_received")))
-            .write.mode("overwrite").partitionBy("yyyy")
-            .parquet(s"$dir/fact_adverse_events")
+          models.factAdverseEvents.write.mode("overwrite").parquet(s"$dir/fact_adverse_events")
         }),
         Par.submit(tagged("ae_counts_q") {
           models.aeCountsQ.write.mode("overwrite").parquet(s"$dir/ae_counts_q")
@@ -97,7 +94,7 @@ object Pipeline {
   }
 
   /** The reference's schema tests (`dbt test`, SURVEY.md §3 E3). */
-  def checks(m: Models): Map[String, DataFrame] = Map(
+  def checks(m: Models): Map[String, Checks.Check] = Map(
     "stg_mdr_report_key_not_null" -> Checks.notNull(m.stgMaude, "mdr_report_key"),
     "stg_mdr_report_key_unique"   -> Checks.unique(m.stgMaude, "mdr_report_key"),
     "stg_report_number_not_null"  -> Checks.notNull(m.stgMaude, "report_number"),

@@ -29,10 +29,11 @@ import org.apache.spark.sql.functions.{lit, year}
  * spark.sql.catalog.lake.uri = https://<rest-catalog-endpoint>
  * }}}
  *
- * Partitioning: marts are published partitioned by a low-cardinality time
- * column (receive-year in the vigilance pipeline) so time-scoped readers
+ * Partitioning: these sinks can publish a mart partitioned by a
+ * low-cardinality time column (receive-year, say) so time-scoped readers
  * prune whole partitions — the write-side decision SURVEY.md §4 calls out
- * as ours to make.
+ * as ours to make. The vigilance refresh ([[graft.models.Pipeline.run]])
+ * writes its marts unpartitioned, as the reference materializes them.
  */
 object Publish {
 

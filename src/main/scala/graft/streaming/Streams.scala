@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.models.{Pipeline => BatchPipeline}
+import graft.models.{FactAdverseEvents, StgMaude}
 import graft.operators.{Bm25, HybridSearch}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -116,8 +116,7 @@ object Streams {
             val keys = seen.select(col("mdr_report_key"))
             unique.join(keys, unique("__key") <=> keys("mdr_report_key"), "left_anti")
           }.drop("__key")
-        val m = BatchPipeline.build(fresh, manufacturer)
-        m.factAdverseEvents.write.mode("overwrite")
+        FactAdverseEvents(StgMaude(fresh), manufacturer).write.mode("overwrite")
           .parquet(s"$factDir/batch_id=$batchId")
         // In-line compaction folds only batches BELOW the current one
         // (`belowId = batchId`): those are checkpoint-committed and can

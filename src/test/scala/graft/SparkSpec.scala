@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -18,6 +19,36 @@ trait SparkSpec extends AnyFunSuite {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Spark jobs started while `body` ran. Listener events arrive
+    * asynchronously but in order, so marker jobs before and after `body`
+    * bound its jobs (and the wait for them). */
+  def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobsMarker"
+    val marker = s"jobs-marker-${System.nanoTime()}"
+    val started = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
+    }
+    def runMarker(edge: String): Unit = {
+      sc.setLocalProperty(key, s"$marker-$edge")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      runMarker("start")
+      body
+      runMarker("end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains(s"$marker-end") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      started.asScala.toSeq
+        .dropWhile(_ != s"$marker-start").drop(1)
+        .takeWhile(_ != s"$marker-end").size
+    } finally sc.removeSparkListener(listener)
   }
 
   /** The executed plan of every query action `body` runs, as text, in

@@ -211,6 +211,27 @@ class PipelineSpec extends SparkSpec {
     } finally sc.clearJobGroup()
   }
 
+  test("the fact mart holds exactly the fact's columns, with no partition directories") {
+    val base = Files.createTempDirectory("maude_fact_mart")
+    val (land, sd) = MaudeFixture.write(base)
+    val marts = base.resolve("marts").toString
+    val ran = Pipeline.run(spark, land, sd, Some(marts))
+    val dir = Path.of(marts, "fact_adverse_events")
+    assert(spark.read.parquet(dir.toString).columns.toSeq === ran.factAdverseEvents.columns.toSeq)
+    val listing = Files.list(dir)
+    try assert(listing.filter(Files.isDirectory(_)).count() === 0L)
+    finally listing.close()
+  }
+
+  test("a refresh's checks run one aggregate per relation, not one per check") {
+    val base = Files.createTempDirectory("maude_check_jobs")
+    val (land, sd) = MaudeFixture.write(base)
+    val m = Pipeline.run(spark, land, sd, Some(base.resolve("marts").toString))
+    val n = jobs(graft.checks.Checks.run(Pipeline.checks(m)))
+    // one aggregate per check ran 11 jobs here; two relations take at most 6
+    assert(n * 10 <= 11 * 6, s"$n jobs")
+  }
+
   test("one refresh (run + checks + signals) scans the NDJSON landing in one plan") {
     val base = Files.createTempDirectory("maude_scans")
     val (land, sd) = MaudeFixture.write(base)
