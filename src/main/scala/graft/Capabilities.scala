@@ -5,12 +5,13 @@ import scala.jdk.CollectionConverters._
 
 /**
  * Generates `CAPABILITIES.md` — the query → operator → oracle → spec
- * navigation index. 201 queries across ~36 operator files exceed what a
- * reader can navigate from `SparkEntry.queries` alone; this main builds
+ * navigation index. The catalog's hundreds of queries across dozens of
+ * operator files exceed what a reader can navigate from
+ * `SparkEntry.queries` alone; this main builds
  * the table FROM the source of truth (the queries/oracleSql maps at
  * runtime, the per-query scaladocs by parse), so the index can never
  * drift from the code: regenerate with
- * `sbt "runMain graft.Capabilities"` after adding queries.
+ * `sbt "runMain graft.Capabilities"` after adding or retiring queries.
  *
  * Columns:
  *  - query: the `SparkEntry.queries` key (the driver's gate name);
@@ -157,7 +158,7 @@ object Capabilities {
          |
          |Generated by `sbt "runMain graft.Capabilities"` from
          |`SparkEntry.queries` / `SparkEntry.oracleSql` and the per-query
-         |scaladocs — do not edit by hand; regenerate after adding queries.
+         |scaladocs — do not edit by hand; regenerate after adding or retiring queries.
          |
          |${SparkEntry.queries.size} queries (${nSql} DuckDB-SQL-oracled,
          |${SparkEntry.queries.size - nSql} rows-gated). Columns: the driver's

@@ -27,7 +27,7 @@ object Explain {
         SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
     if (run) {
       // time CONSTRUCTION + count together: builders with eager
-      // localCheckpoint rounds (kCore, the replay queries) do most of
+      // localCheckpoint rounds (components, the replay queries) do most of
       // their work at DataFrame-construction time, so timing only the
       // final count under-reports by the whole iteration cost
       val t0 = System.nanoTime()

@@ -17,13 +17,13 @@ import org.apache.spark.sql.functions._
  * (VERDICT r10 item 1).
  *
  * Design notes, in decreasing order of subtlety:
- *  - **Tiles are key-disjoint**: the sf1 trade graph is 10 disjoint
- *    copies of the sf0.1 graph. That is the honest shape for a scale
- *    bench — iterative operators carry 10× state per round at the same
- *    diameter — and avoids fabricating topology the generator would
- *    have to invent. Queries whose inputs are capped by literal key
- *    filters (q93 `doc_id < 1000`, q96 `doc_id < 1500`, q182's seed set)
- *    keep a constant probe side over a 10× corpus — the
+ *  - **Tiles are key-disjoint**: the sf1 key space (and so every
+ *    join graph over it) is 10 disjoint copies of the sf0.1 one. That
+ *    is the honest shape for a scale bench — iterative operators carry
+ *    10× state per round at the same diameter — and avoids fabricating
+ *    topology the generator would have to invent. Queries whose inputs
+ *    are capped by literal key filters (q93 `doc_id < 1000`, q96
+ *    `doc_id < 1500`) keep a constant probe side over a 10× corpus — the
  *    fixed-query/growing-data posture; their ratios read ~1 by design.
  *  - **Document text is salted per tile** (a `tNN` token inserted every
  *    5 words, tile 0 left verbatim): verbatim clones would make every

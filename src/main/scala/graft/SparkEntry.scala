@@ -1522,7 +1522,7 @@ object SparkEntry {
     // localCheckpoint: the three micro-batch writes below are SEPARATE
     // actions, so ReuseExchange cannot span them — uncheckpointed, each
     // batch re-scans documents and re-runs the embedding attach join
-    // (the q112 pair-checkpoint class, cross-action reuse)
+    // (checkpoint once, reuse across actions)
     val corpus = Tables.cycleEmbeddings(
         documents(s, d).select(col("doc_id"), col("text")), emb, nEmb)
       .select(col("doc_id"), col("text"), col("embedding"))
@@ -2729,22 +2729,6 @@ object SparkEntry {
     Profile.concentration(df, Seq("r_name"), col("l_suppkey"), col("cents"))
   }
 
-  /** q175: triangle counting + local clustering coefficients over the
-    * part co-purchase graph (parts sharing an order, the q166 basket
-    * projection) — [[graft.operators.Graph.triangleStats]], the
-    * degree-ordered-orientation bound: out-degree O(√m) even under
-    * skew, each triangle closed exactly once, cc as a single division
-    * of exact Longs (raw). */
-  private def trianglesQ(s: SparkSession, d: String): DataFrame = {
-    val bi = lineitem(s, d)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val edges = bi.select(col("o"), col("p").as("p1"))
-      .join(bi.select(col("o"), col("p").as("p2")), Seq("o"))
-      .filter(col("p1") < col("p2"))
-      .select(col("p1"), col("p2"))
-    Graph.triangleStats(edges)
-  }
-
   /** q176: RFM customer segmentation — recency/frequency/monetary
     * quintiles over per-customer order aggregates, bucket boundaries
     * from ONE exact-percentile aggregate broadcast back (the q121
@@ -2862,59 +2846,6 @@ object SparkEntry {
     forDim("event_type").unionAll(forDim("value_band"))
   }
 
-  /** The q110 customer–supplier trade graph: distinct (customer, supplier)
-    * order links on disjoint doubled ids (customer even, supplier odd) —
-    * shared by the bounded-peel/SSSP/assortativity tier. */
-  private def tradePairs(s: SparkSession, d: String): DataFrame =
-    orders(s, d)
-      .join(lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-      .distinct()
-
-  private def decodeNode(node: Column): Seq[Column] = Seq(
-    when(node % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-      .as("node_type"),
-    when(node % 2 === 0, node / lit(2L)).otherwise((node - lit(1L)) / lit(2L))
-      .cast("long").as("entity_id"))
-
-  /** q181: bounded 4-round 20-core peel over the trade graph
-    * ([[graft.operators.Graph.kCore]]) — who remains when every thinly
-    * connected entity is recursively stripped; the recursive-deletion
-    * capability Spark SQL can't state, as explicit synchronous rounds
-    * (the q110 bounded-iteration posture), oracle = the same 4 rounds
-    * unrolled as SQL layers. All-integer degrees. */
-  private def kcoreQ(s: SparkSession, d: String): DataFrame = {
-    val pairs = tradePairs(s, d)
-    val core = Graph.kCore(pairs, k = 20, rounds = 4)
-    core.select(decodeNode(col("node")) :+ col("degree"): _*)
-  }
-
-  /** q182: bounded-hop weighted shortest paths over the trade graph
-    * ([[graft.operators.Graph.ssspWeighted]]) — edge cost
-    * `greatest(1, 10 − n_shared_orders)` (strong relationships are
-    * cheap), Bellman-Ford rounds keeping exact BIGINT minima; 4 rounds
-    * == the oracle's bounded recursive-CTE walk minimum by the
-    * non-negative-weights argument in the scaladoc. `checkpointEvery=1`
-    * (eager round-state materialization) is the r15 MEASURED choice on
-    * this dense 4-hop graph — see ssspWeighted's scaladoc for the sf1
-    * numbers; the frontier-delta messaging rides along exact and pays
-    * for itself on high-diameter graphs. */
-  private def ssspQ(s: SparkSession, d: String): DataFrame = {
-    val weighted = orders(s, d)
-      .join(lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"),
-        (col("l_suppkey") * 2 + 1).as("sp"))
-      .agg(countDistinct(col("o_orderkey")).as("n"))
-      .withColumn("w", greatest(lit(1L), lit(10L) - col("n")))
-    val edges = weighted.select(col("c").as("src"), col("sp").as("dst"), col("w"))
-      .unionByName(weighted.select(col("sp").as("src"), col("c").as("dst"),
-        col("w")))
-      .localCheckpoint()
-    val seeds = weighted.filter(col("c") <= 40).select(col("c").as("node"))
-    Graph.ssspWeighted(edges, seeds, maxHops = 4, checkpointEvery = 1)
-      .select(decodeNode(col("node")) :+ col("cost"): _*)
-  }
-
   /** q183: sequential next-event rules over per-user timelines
     * ([[graft.operators.Mining.sequentialRules]]) — what immediately
     * follows what, the order-aware sibling of q166's basket rules: one
@@ -2950,14 +2881,6 @@ object SparkEntry {
       .agg(count(lit(1)).as("v"))
     Trend.theilSen(monthly, Seq("priority"), col("t"), col("v"))
   }
-
-  /** q186: degree assortativity of the trade graph
-    * ([[graft.operators.Graph.degreeAssortativity]]) — do high-degree
-    * entities link to each other or to the periphery (bipartite trade
-    * graphs mix disassortatively); exact-Long moment sums, r as ONE
-    * division of exact operands (raw, q163 discipline). */
-  private def assortativityQ(s: SparkSession, d: String): DataFrame =
-    Graph.degreeAssortativity(tradePairs(s, d))
 
   /** q187: exact phrase search over positional postings
     * ([[graft.operators.Bm25.phraseSearch]]) — "slow hash batch" as an
@@ -3943,31 +3866,6 @@ object SparkEntry {
   private def prrSignalsQ(s: SparkSession, d: String): DataFrame =
     EarlySignals.disproportionality(documents(s, d), "source", "lang")
 
-  /** PageRank centrality (q95): which customers/suppliers anchor the trade
-    * network — deterministic integer-scaled Pregel rounds over the
-    * undirected customer↔supplier order graph ([[Graph.pageRank]]; exact
-    * BIGINT mass units make the iteration bit-reproducible across engines
-    * and partitionings). Node encoding: customers even (2k), suppliers
-    * odd (2k+1), decoded in the projection. The edge list is SYMMETRIZED
-    * here and must stay so: the recursive oracle inner-joins the message
-    * flow, which only matches [[Graph.pageRank]]'s node-total update when
-    * every node has an in-edge (see the q95 oracle comment). */
-  private def pageRankQ(s: SparkSession, d: String): DataFrame = {
-    val pairs = orders(s, d)
-      .join(lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-    val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-      .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
-    Graph.pageRank(edges, iterations = 6)
-      .select(
-        when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        when(col("node") % 2 === 0, expr("node div 2"))
-          .otherwise(expr("(node - 1) div 2")).as("entity_id"),
-        col("deg"), col("rank"))
-  }
-
   /** Prefix-filtered exact Jaccard pairs (q96): the SSJoin/PPJoin
     * candidate generation — global rarest-first shingle order, only each
     * doc's prefix enters the self-join, exact-Jaccard verify
@@ -4178,36 +4076,6 @@ object SparkEntry {
         date_format(col("ts"), "yyyy-MM-dd").as("day"), col("user_id")),
       Seq("event_type", "day"), col("user_id"), k = 20, minL = 5)
 
-  /** q110: bounded-hop BFS distances over the customer↔supplier trade
-    * graph from a small customer seed set — the recursive-CTE
-    * capability (Spark has no WITH RECURSIVE) expressed as frontier
-    * iteration ([[Graph.bfsDistances]]: per-round work is frontier-
-    * adjacent edges only, anti-join prunes visited). The oracle IS
-    * DuckDB's `WITH RECURSIVE` over the same graph — two genuinely
-    * different fixpoint computations, one answer. */
-  private def bfsQ(s: SparkSession, d: String): DataFrame = {
-    val pairs = orders(s, d)
-      .join(lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-    // materialize the edge table once: every frontier round references it,
-    // and unlike q95 (where ReuseExchange already dedups the per-iteration
-    // subtree and an eager cache measured slower) the checkpoint is a
-    // measured win here — sf0.1 medians 2.8 s → 1.9-2.6 s; it also
-    // truncates lineage for deeper hop counts
-    val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-      .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
-      .localCheckpoint()
-    val seeds = pairs.filter(col("c") <= 40).select(col("c").as("node"))
-    Graph.bfsDistances(edges, seeds, maxHops = 3)
-      .select(
-        when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        when(col("node") % 2 === 0, expr("node div 2"))
-          .otherwise(expr("(node - 1) div 2")).as("entity_id"),
-        col("dist"))
-  }
-
   /** q111: AQP revenue estimation — grouped COUNT/SUM estimated from a
     * 25% deterministic hash sample with Horvitz-Thompson scale-up and a
     * standard-error column ([[Aqp.sampledAggregate]]): the sample
@@ -4219,35 +4087,6 @@ object SparkEntry {
       expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
       concat(lit("aqp|"), col("o_orderkey").cast("string")).as("tag"))
     Aqp.sampledAggregate(o, Seq("priority"), col("cents"), 0.25, col("tag"))
-  }
-
-  /** q112: personalized PageRank from the same customer seed set as
-    * q110 — "entities related to these customers, ranked". Integer-
-    * scaled like q95 (bit-identical in any engine); the rank vector is
-    * SPARSE (mass only ever reaches nodes within k hops of the seeds),
-    * and the oracle unrolls the same four rounds as plain SQL layers. */
-  private def pprQ(s: SparkSession, d: String): DataFrame = {
-    // PAIR checkpoint (upgraded from the old edges-only checkpoint, r13):
-    // seeds used to derive from the raw orders⨝lineitem distinct, so the
-    // seed-count action plus every iteration's teleport rows re-ran the
-    // join — at sf1 that was most of the query. Checkpointing the pair
-    // set once makes edges AND seeds cheap projections of materialized
-    // rows (the 4-round propagation itself was already the cheap part).
-    val pairs = orders(s, d)
-      .join(lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-      .localCheckpoint()
-    val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-      .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
-    val seeds = pairs.filter(col("c") <= 40).select(col("c").as("node"))
-    Graph.personalizedPageRank(edges, seeds, iterations = 4)
-      .select(
-        when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        when(col("node") % 2 === 0, expr("node div 2"))
-          .otherwise(expr("(node - 1) div 2")).as("entity_id"),
-        col("rank"))
   }
 
   /** q113: HLL distinct-user estimates inside CUBE — the sketch tier
@@ -4377,7 +4216,6 @@ object SparkEntry {
     "q92_user_distribution"  -> (userDistributionQ _),
     "q93_canonical_docs"     -> (canonicalDocsQ _),
     "q94_prr_signals"        -> (prrSignalsQ _),
-    "q95_pagerank"           -> (pageRankQ _),
     "q96_prefix_jaccard"     -> (prefixJaccardQ _),
     "q97_heavy_hitters"      -> (heavyHittersQ _),
     "q98_correlated_premium" -> (correlatedSubqueryQ _),
@@ -4392,9 +4230,7 @@ object SparkEntry {
     "q107_zone_map"          -> (zoneMapQ _),
     "q108_ewma"              -> (ewmaQ _),
     "q109_k_anonymity"       -> (kAnonQ _),
-    "q110_bfs"               -> (bfsQ _),
     "q111_aqp_revenue"       -> (aqpQ _),
-    "q112_ppr"               -> (pprQ _),
     "q113_cube_distinct"     -> (cubeDistinctQ _),
     "q114_robust_signals"    -> (robustSignalsQ _),
     "q115_variant_extract"   -> (variantExtract _),
@@ -4457,18 +4293,14 @@ object SparkEntry {
     "q172_acf"                 -> (acfQ _),
     "q173_weighted_median"     -> (weightedMedianQ _),
     "q174_concentration"       -> (concentrationQ _),
-    "q175_triangles"           -> (trianglesQ _),
     "q176_rfm"                 -> (rfmQ _),
     "q177_islands"             -> (islandsQ _),
     "q178_twap"                -> (twapQ _),
     "q179_cramers_v"           -> (cramersQ _),
     "q180_drift_replay"        -> (driftReplayQ _),
-    "q181_kcore"               -> (kcoreQ _),
-    "q182_sssp"                -> (ssspQ _),
     "q183_seq_rules"           -> (seqRulesQ _),
     "q184_ab_test"             -> (abTestQ _),
     "q185_theil_sen"           -> (theilSenQ _),
-    "q186_assortativity"       -> (assortativityQ _),
     "q187_phrase_search"       -> (phraseSearchQ _),
     "q188_rank_surface"        -> (rankSurfaceQ _),
     "q189_m4_downsample"       -> (m4Q _),
@@ -4713,44 +4545,6 @@ object SparkEntry {
        |WINDOW w AS (PARTITION BY priority ORDER BY day),
        |  wf AS (PARTITION BY priority ORDER BY day
        |         ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)""".stripMargin
-  }
-
-  /** q112 oracle: the four personalized-PageRank rounds unrolled as
-    * plain SQL layers (a recursive CTE cannot re-apply the seed teleport
-    * without referencing itself twice) — identical integer arithmetic
-    * to [[graft.operators.Graph.personalizedPageRank]]. */
-  private def pprOracle: String = {
-    val layers = (1 to 4).map { i =>
-      s"""pr$i AS (
-         |  SELECT node, CAST(sum(m) AS BIGINT) AS rank FROM (
-         |    SELECT e.dst AS node, (85 * p.rank) // (100 * d.deg) AS m
-         |    FROM pr${i - 1} p
-         |    JOIN edges e ON e.src = p.node
-         |    JOIN deg d ON d.src = p.node
-         |    UNION ALL
-         |    SELECT node, t AS m FROM seeds CROSS JOIN tele
-         |  ) GROUP BY node HAVING sum(m) > 0)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |edges AS (
-       |  SELECT c AS src, s AS dst FROM pairs
-       |  UNION ALL SELECT s, c FROM pairs),
-       |deg AS (SELECT src, count(*)::BIGINT AS deg FROM edges GROUP BY 1),
-       |seeds AS (SELECT DISTINCT c AS node FROM pairs WHERE c <= 40),
-       |nn AS (SELECT count(*)::BIGINT AS s FROM seeds),
-       |tele AS (SELECT (15000000000000 // (100 * s))::BIGINT AS t,
-       |                (1000000000000 // s)::BIGINT AS r0 FROM nn),
-       |pr0 AS (SELECT node, r0 AS rank FROM seeds CROSS JOIN tele),
-       |$layers
-       |SELECT
-       |  CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-       |    AS node_type,
-       |  (CASE WHEN node % 2 = 0 THEN node ELSE node - 1 END // 2)::BIGINT
-       |    AS entity_id,
-       |  rank
-       |FROM pr4""".stripMargin
   }
 
   /** q21 oracle: 60-bit SHA-lane SimHash, mirroring [[Dedup.simhashPairsSha]]
@@ -5288,39 +5082,6 @@ object SparkEntry {
         |         + (CAST(n_b AS DOUBLE) - eb) * (CAST(n_b AS DOUBLE) - eb) / eb
         |         AS chi2_term
         |FROM s""".stripMargin
-
-  /** q181: the same 4 peel rounds unrolled as chained SQL layers —
-    * bounded-round semantics make "unrolled" exact, not approximate.
-    * Every CTE is MATERIALIZED: each round references the previous edge
-    * set THREE times (two degree-union legs + the probe), so left to
-    * its inlining heuristic DuckDB re-expands the chain 3^4-fold — at
-    * sf0.1 that filled >70 GB of spill before failing; materialization
-    * is the same fix the Spark side's per-round localCheckpoint is. */
-  private def kcoreOracle: String = {
-    val rounds = (1 to 4).map { i =>
-      s"""d$i AS MATERIALIZED (SELECT n, count(*) AS deg FROM (
-         |        SELECT a AS n FROM e${i - 1}
-         |        UNION ALL SELECT b FROM e${i - 1}) GROUP BY 1),
-         |k$i AS MATERIALIZED (SELECT n FROM d$i WHERE deg >= 20),
-         |e$i AS MATERIALIZED (SELECT e.a, e.b FROM e${i - 1} e
-         |        JOIN k$i x ON e.a = x.n JOIN k$i y ON e.b = y.n),"""
-        .stripMargin
-    }.mkString("\n")
-    s"""WITH pairs AS MATERIALIZED (SELECT DISTINCT o_custkey * 2 AS c,
-       |                 l_suppkey * 2 + 1 AS s
-       |               FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |e0 AS MATERIALIZED (SELECT least(c, s) AS a, greatest(c, s) AS b
-       |               FROM pairs),
-       |$rounds
-       |fin AS (SELECT n, count(*) AS deg FROM (
-       |          SELECT a AS n FROM e4 UNION ALL SELECT b FROM e4) GROUP BY 1)
-       |SELECT CASE WHEN n % 2 = 0 THEN 'customer' ELSE 'supplier' END
-       |         AS node_type,
-       |       ((CASE WHEN n % 2 = 0 THEN n ELSE n - 1 END) // 2)::BIGINT
-       |         AS entity_id,
-       |       CAST(deg AS BIGINT) AS degree
-       |FROM fin""".stripMargin
-  }
 
   /** Shared by q191 (batch) and q194 (replay-maintained): the cells are
     * linear sums, so both sides reduce to the same derivation. */
@@ -5985,74 +5746,6 @@ object SparkEntry {
         |JOIN cnt cb ON doc_b = cb.doc_id
         |WHERE n_inter / (ca.n_sh + cb.n_sh - n_inter) >= 0.3""".stripMargin,
 
-    // q95: every step is BIGINT arithmetic (integer division, associative
-    // integer sums), so six recursive PageRank rounds are bit-identical
-    // to Spark's loop under any evaluation order — no rounding needed.
-    // CONSTRAINT: this recursive form inner-joins the message flow, so it
-    // only matches Graph.pageRank (whose rank update is total over the
-    // node set) on graphs where every node has an in-edge — guaranteed
-    // here because the query symmetrizes the edge list. Re-pointing q95
-    // at a DIRECTED graph requires reworking the oracle, not just the
-    // query (an in-degree-0 node would drop out of the CTE's working
-    // table but keep its teleport share in Spark).
-    "q95_pagerank" ->
-      """WITH RECURSIVE
-        |pairs AS (
-        |  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |edges AS (
-        |  SELECT c AS src, s AS dst FROM pairs
-        |  UNION ALL SELECT s, c FROM pairs),
-        |deg AS (SELECT src, count(*)::BIGINT AS deg FROM edges GROUP BY 1),
-        |nn AS (SELECT count(*)::BIGINT AS n FROM deg),
-        |tele AS (
-        |  SELECT (15000000000000 // (100 * n))::BIGINT AS t,
-        |         (1000000000000 // n)::BIGINT AS r0 FROM nn),
-        |pr(iter, node, rank) AS (
-        |  SELECT 0, src, r0 FROM deg CROSS JOIN tele
-        |  UNION ALL
-        |  SELECT p.iter + 1, e.dst,
-        |    (t.t + sum((85 * p.rank) // (100 * d.deg)))::BIGINT
-        |  FROM pr p
-        |  JOIN edges e ON p.node = e.src
-        |  JOIN deg d ON d.src = p.node
-        |  CROSS JOIN tele t
-        |  WHERE p.iter < 6
-        |  GROUP BY 1, 2, t.t)
-        |SELECT
-        |  CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-        |    AS node_type,
-        |  (CASE WHEN node % 2 = 0 THEN node ELSE node - 1 END // 2)::BIGINT
-        |    AS entity_id,
-        |  d.deg, p.rank
-        |FROM pr p JOIN deg d ON d.src = p.node
-        |WHERE p.iter = 6""".stripMargin,
-
-    // q110: min(dist) over the recursive walk == first-visit distance of
-    // the frontier iteration (unit edge weights); integer-exact
-    "q110_bfs" ->
-      """WITH RECURSIVE
-        |pairs AS (
-        |  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |edges AS (
-        |  SELECT c AS src, s AS dst FROM pairs
-        |  UNION ALL SELECT s, c FROM pairs),
-        |walk(node, dist) AS (
-        |  SELECT DISTINCT c AS node, CAST(0 AS BIGINT) AS dist
-        |  FROM pairs WHERE c <= 40
-        |  UNION
-        |  SELECT e.dst, w.dist + 1
-        |  FROM walk w JOIN edges e ON e.src = w.node
-        |  WHERE w.dist < 3)
-        |SELECT
-        |  CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-        |    AS node_type,
-        |  (CASE WHEN node % 2 = 0 THEN node ELSE node - 1 END // 2)::BIGINT
-        |    AS entity_id,
-        |  min(dist) AS dist
-        |FROM walk GROUP BY 1, 2""".stripMargin,
-
     // q111: the identical HT estimator over the identical deterministic
     // sample — dyadic rate 1/4 makes every scale-up exact; the variance
     // factor (1-p)/p^2 = 12 is exact in both engines
@@ -6070,8 +5763,6 @@ object SparkEntry {
          |  round(sqrt(sum(pow(CAST(cents AS DOUBLE), 2.0))
          |             * ((1 - 0.25) / (0.25 * 0.25))), 2) AS se_sum
          |FROM smp GROUP BY priority""".stripMargin,
-
-    "q112_ppr" -> pprOracle,
 
     // q113: UNION ALL of the four grouping sets is the relational mirror
     // of Expand; registers rebuild per level exactly as in the q104
@@ -7190,31 +6881,6 @@ object SparkEntry {
         |         * CAST(total_mass AS DOUBLE)), 6) AS hhi
         |FROM a""".stripMargin,
 
-    // q175: unoriented 3-way closure under a < b < c (each triangle
-    // once, matching the orientation argument), same degree table and
-    // the identical exact-Long cc division
-    "q175_triangles" ->
-      """WITH bi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |            FROM lineitem),
-        |e AS (SELECT DISTINCT x.p AS a, y.p AS b
-        |      FROM bi x JOIN bi y ON x.o = y.o AND x.p < y.p),
-        |deg AS (SELECT n, count(*) AS degree FROM (
-        |          SELECT a AS n FROM e UNION ALL SELECT b FROM e)
-        |        GROUP BY 1),
-        |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |        FROM e e1 JOIN e e2 ON e1.a = e2.a AND e1.b < e2.b
-        |                  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-        |pn AS (SELECT n, count(*) AS n_tri FROM (
-        |         SELECT x AS n FROM tri UNION ALL SELECT y FROM tri
-        |         UNION ALL SELECT z FROM tri)
-        |       GROUP BY 1)
-        |SELECT deg.n AS node, CAST(degree AS BIGINT) AS degree,
-        |       CAST(coalesce(n_tri, 0) AS BIGINT) AS n_tri,
-        |       CAST(2 * coalesce(n_tri, 0) AS DOUBLE)
-        |         / CAST(degree * (degree - 1) AS DOUBLE) AS local_cc
-        |FROM deg LEFT JOIN pn ON deg.n = pn.n
-        |WHERE degree >= 2""".stripMargin,
-
     // q176: same per-customer aggregates, quantile_cont boundaries (the
     // interpolated-percentile twin of Spark's percentile), identical
     // scan-side boundary comparisons, exact segment-cube counts
@@ -7310,34 +6976,6 @@ object SparkEntry {
         |         AS cramers_v
         |FROM a""".stripMargin,
 
-    "q181_kcore" -> kcoreOracle,
-
-    // q182: bounded recursive-CTE walk enumeration; min over ≤4-hop
-    // walks == 4 Bellman-Ford rounds under non-negative weights
-    "q182_sssp" ->
-      """WITH RECURSIVE
-        |pairs AS (SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-        |            count(DISTINCT o_orderkey) AS n
-        |          FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |          GROUP BY 1, 2),
-        |edges AS (SELECT c AS src, s AS dst, greatest(1, 10 - n) AS w
-        |          FROM pairs
-        |          UNION ALL
-        |          SELECT s, c, greatest(1, 10 - n) FROM pairs),
-        |walk(node, cost, hops) AS (
-        |  SELECT DISTINCT c AS node, CAST(0 AS BIGINT) AS cost, 0 AS hops
-        |  FROM pairs WHERE c <= 40
-        |  UNION
-        |  SELECT e.dst, w.cost + e.w, w.hops + 1
-        |  FROM walk w JOIN edges e ON e.src = w.node
-        |  WHERE w.hops < 4)
-        |SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
-        |         AS node_type,
-        |       ((CASE WHEN node % 2 = 0 THEN node ELSE node - 1 END) // 2)
-        |         ::BIGINT AS entity_id,
-        |       CAST(min(cost) AS BIGINT) AS cost
-        |FROM walk GROUP BY 1, 2""".stripMargin,
-
     // q183: the identical (ts, event_id)-ordered lead chain; confidence
     // one exact-Long division (raw)
     "q183_seq_rules" ->
@@ -7406,30 +7044,6 @@ object SparkEntry {
         |       CAST(slope AS BIGINT) AS slope_micro
         |FROM r JOIN n USING (priority)
         |WHERE rk = (np + 1) // 2""".stripMargin,
-
-    // q186: same canonical edges/degrees, same exact-BIGINT moment sums,
-    // r one division of identical exact operands (raw)
-    "q186_assortativity" ->
-      """WITH pairs AS (SELECT DISTINCT o_custkey * 2 AS c,
-        |                 l_suppkey * 2 + 1 AS s
-        |               FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT least(c, s) AS a, greatest(c, s) AS b FROM pairs),
-        |deg AS (SELECT n, count(*) AS deg FROM (
-        |          SELECT a AS n FROM e UNION ALL SELECT b FROM e)
-        |        GROUP BY 1),
-        |wd AS (SELECT da.deg AS x, db.deg AS y
-        |       FROM e JOIN deg da ON e.a = da.n JOIN deg db ON e.b = db.n),
-        |b AS (SELECT x, y FROM wd UNION ALL SELECT y, x FROM wd),
-        |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-        |        CAST(sum(x) AS HUGEINT) AS sx,
-        |        CAST(sum(x * y) AS HUGEINT) AS sxy,
-        |        CAST(sum(x * x) AS HUGEINT) AS sxx FROM b)
-        |SELECT (n // 2)::BIGINT AS n_edges,
-        |       (SELECT count(*)::BIGINT FROM deg) AS n_nodes,
-        |       CASE WHEN n * sxx - sx * sx <> 0
-        |            THEN CAST(n * sxy - sx * sx AS DOUBLE)
-        |                 / CAST(n * sxx - sx * sx AS DOUBLE) END AS r
-        |FROM s""".stripMargin,
 
     // q187: the same adjacent-trigram start positions from DuckDB's list
     // comprehension (1-indexed); exact integer hit counts

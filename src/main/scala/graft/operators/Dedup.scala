@@ -636,11 +636,10 @@ object Dedup {
     var it = 0
     while (!converged && it < maxIters) {
       // shuffle_hash on the label probe: the label table is NODE-sized
-      // and constant across rounds (the q112 PPR lever — its rank
-      // vector is the same shape), so the hash build is a per-partition
+      // and constant across rounds, so the hash build is a per-partition
       // slice of a node-sized vector and the per-round SORTS of the
-      // edge-scale join go away; BFS/SSSP measured the opposite because
-      // their visited/cost tables GROW (see bfsDistances loop note)
+      // edge-scale join go away (a hash build over a table that GROWS
+      // per round measured the opposite)
       val neighborMin = edges
         .join(labels.hint("shuffle_hash"), edges("dst") === labels("doc"))
         .groupBy(col("src")).agg(min(col("component")).as("nmin"))

@@ -170,7 +170,7 @@ object Drift {
         col("__cl").as("c_levels"), col("chi2"),
         // a degenerate single-level dimension makes min(R−1, C−1) = 0;
         // V is undefined there, so emit NULL (the file's convention —
-        // mutualInfo's nmi, degreeAssortativity's r) instead of the
+        // mutualInfo's nmi) instead of the
         // NaN/Infinity a raw division would produce
         when(least(col("__rl") - lit(1), col("__cl") - lit(1)) > 0,
           sqrt(col("chi2") / (col("__t") *

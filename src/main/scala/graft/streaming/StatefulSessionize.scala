@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * Streaming sessionization with explicit keyed state (the custom-state
  * tier of the reference's freshness concern, README.md:83,117)
  * (`flatMapGroupsWithState`) — the custom-state streaming surface
- * complementing [[Streams.sessionWindows]]' built-in `session_window`.
+ * complementing Spark's built-in `session_window`.
  *
  * Why explicit state when `session_window` exists: the state here is an
  * arbitrary case class, so this shape extends to stateful enrichment the

@@ -28,40 +28,6 @@ object Streams {
   private val CidPart = org.apache.spark.sql.types.StructField(
     "cid", org.apache.spark.sql.types.IntegerType)
 
-  /** Watermarked tumbling-window event counts per type — the streaming
-    * analog of the quarterly batch rollup, for monitoring-grade freshness. */
-  def windowedEventCounts(events: DataFrame, tsCol: String, typeCol: String,
-                          window_ : String = "1 hour",
-                          watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_), col(typeCol))
-      .agg(count(lit(1)).as("n_events"))
-
-  /** Native session windows (gap-based), streaming counterpart of the batch
-    * [[graft.operators.Sessionize]] operator. */
-  def sessionWindows(events: DataFrame, tsCol: String, userCol: String,
-                     gap: String = "30 minutes",
-                     watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(userCol))
-      .agg(count(lit(1)).as("n_events"))
-
-  /**
-   * Streaming exact dedup: drop re-deliveries of the same key while their
-   * event times fall within the watermark horizon (state for a key is
-   * evictable once the watermark passes, so state size stays bounded —
-   * the streaming counterpart of [[graft.operators.Dedup.exact]], needed
-   * because landing feeds re-send MAUDE records across files).
-   */
-  def dedupWithinWatermark(events: DataFrame, tsCol: String,
-                           keyCols: Seq[String],
-                           watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
   /**
    * Incremental vigilance refresh: tail the NDJSON landing path and rebuild
    * the staging/fact transforms per micro-batch via foreachBatch (the
@@ -162,9 +128,9 @@ object Streams {
    * [[readSearchIndex]]; corpus-level stats (N, avgdl) are derived at
    * query time from the doc-length table, so they track the upserts.
    *
-   * Re-delivered doc ids are the caller's concern (compose with
-   * [[dedupWithinWatermark]] upstream); unlike [[incrementalPipeline]],
-   * this writer keeps no key set of its own.
+   * Re-delivered doc ids are the caller's concern (drop them upstream);
+   * unlike [[incrementalPipeline]], this writer keeps no key set of its
+   * own.
    */
   def incrementalSearchIndex(docStream: DataFrame, idCol: String, textCol: String,
                              vecCol: String, centroids: DataFrame,
@@ -226,48 +192,6 @@ object Streams {
     if (compactsAfter(batchId, compactEvery))
       compactSearchIndex(batch.sparkSession, outDir, belowId = batchId)
   }
-
-  /**
-   * Streaming dedup admission (the corpus-growth counterpart of
-   * [[incrementalSearchIndex]]): each micro-batch of new documents is
-   * tested against the persisted banded-LSH index of every
-   * previously-admitted doc ([[graft.operators.Dedup.admitIncremental]]),
-   * per-doc decisions land in `decisionsDir/batch_id=`, and the ADMITTED
-   * docs' band buckets are appended to `indexDir/batch_id=` — so the
-   * index only ever grows by deduplicated content and no batch ever
-   * re-shingles the corpus.
-   *
-   * Replay safety (same contract as the compaction hook): the index is
-   * read with `batch_id < current` only, so a replayed batch never sees
-   * the buckets its failed first attempt wrote, and both writes overwrite
-   * their own `batch_id=` partition — idempotent under at-least-once
-   * foreachBatch.
-   */
-  def incrementalDedupAdmit(docStream: DataFrame, idCol: String, textCol: String,
-                            indexDir: String, decisionsDir: String,
-                            threshold: Double, shingleN: Int = 3,
-                            bands: Int = 4, rowsPerBand: Int = 4): DataStreamWriter[Row] =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.Dedup
-        val spark = batch.sparkSession
-        // first batch (or replay of it): nothing admitted yet
-        val index = committedBelow(spark, indexDir, batchId).getOrElse(
-          Dedup.lshIndex(batch.limit(0), idCol, textCol, shingleN, bands, rowsPerBand))
-        val b = batch.cache()
-        try {
-          val decisions = Dedup.admitIncremental(index, b, idCol, textCol,
-            threshold, shingleN, bands, rowsPerBand)
-          decisions.write.mode("overwrite")
-            .parquet(s"$decisionsDir/batch_id=$batchId")
-          val admitted = b.join(
-            graft.ParquetMeta.read(spark, Seq(s"$decisionsDir/batch_id=$batchId"))
-              .filter(col("admitted")).select(col("doc")),
-            b(idCol) === col("doc")).drop("doc")
-          Dedup.lshIndex(admitted, idCol, textCol, shingleN, bands, rowsPerBand)
-            .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
-        } finally { b.unpersist(); () }
-      }
 
   /**
    * Streaming IVF-PQ vector-index maintenance — the vector-side

@@ -199,6 +199,15 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("every declared query has an oracle and every oracle a query") {
+    // retiring a query family must take its oracles along, and a new
+    // query must bring one: Verify hash-compares the two maps by name
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert((oracles -- queries).isEmpty, s"orphan oracles: ${oracles -- queries}")
+    assert((queries -- oracles).isEmpty, s"unoracled queries: ${queries -- oracles}")
+  }
+
   test("q26 hybrid: both legs are candidate-bounded distributed top-N") {
     val p = plan("q26_hybrid_search")
     // candidate caps compile to TakeOrderedAndProject (per-partition top-N,
@@ -669,14 +678,6 @@ class PlanSpec extends SparkSpec {
       p.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
   }
 
-  test("q110 bfs: equi-joins only — no cartesian, no nested-loop frontier expansion") {
-    val p = plan("q110_bfs")
-    assert(!p.contains("CartesianProduct"), s"no cartesian expected:\n$p")
-    // every frontier expansion and visited-set anti-join is key-equi;
-    // a BroadcastNestedLoopJoin would mean a non-equi condition leaked in
-    assert(!p.contains("BroadcastNestedLoopJoin"), s"non-equi join leaked:\n$p")
-  }
-
   test("q111 aqp: sample filter below the aggregate, full table never shuffled") {
     val p = plan("q111_aqp_revenue")
     assert(!p.toLowerCase.contains("join"))
@@ -688,12 +689,6 @@ class PlanSpec extends SparkSpec {
       p.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
     assert(p.indexOf("Filter") > p.indexOf("Exchange hashpartitioning"),
       "sample filter must evaluate below the aggregate exchange")
-  }
-
-  test("q112 ppr: equi-joins only; sparse rank vector never goes cartesian") {
-    val p = plan("q112_ppr")
-    assert(!p.contains("CartesianProduct"), s"no cartesian expected:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"), s"non-equi join leaked:\n$p")
   }
 
   test("q113 cube-distinct: sketches ride the Expand — partial HLL, no join") {
@@ -769,13 +764,13 @@ class PlanSpec extends SparkSpec {
 
   test("q164-q179 tier: no cartesian/NLJ beyond broadcast scalars; pair joins equi") {
     // the round-10 tier's shared scale contract: candidate generation is
-    // always an equi-join (basket pairs, wedge closure, frontier join),
+    // always an equi-join (basket pairs, frontier join),
     // and the only nested-loop joins are broadcast SINGLE-ROW scalar
     // folds (bounds, totals, thresholds — the q121 idiom)
     Seq("q164_stratified_exact", "q165_skyline", "q166_association_rules",
       "q167_drift", "q168_keyness", "q170_vocab_coverage",
       "q171_attribution", "q173_weighted_median", "q174_concentration",
-      "q175_triangles", "q176_rfm", "q179_cramers_v").foreach { q =>
+      "q176_rfm", "q179_cramers_v").foreach { q =>
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
     }
@@ -793,13 +788,6 @@ class PlanSpec extends SparkSpec {
       !p.contains("BroadcastNestedLoopJoin"))
   }
 
-  test("q175 triangles: wedge closure is an equi hash join, part dim never NLJ") {
-    val p = plan("q175_triangles")
-    assert(!p.contains("BroadcastNestedLoopJoin") &&
-      !p.contains("CartesianProduct"),
-      "triangle closing must be the canonical-pair equi-join")
-  }
-
   test("q174/q163 scalar folds: single-row aggregates broadcast, not windowed") {
     // the broadcast-bounds idiom replaced every global total window in
     // the declared surface; these two pin the shape stays
@@ -812,16 +800,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q181-q187 tier: every join equi; no cartesian anywhere") {
-    // q186's single-row node-count fold is the accepted broadcast-scalar
-    // NLJ (the q121 idiom); everywhere else even NLJ is banned
-    Seq("q181_kcore", "q182_sssp", "q183_seq_rules", "q184_ab_test",
-      "q185_theil_sen", "q186_assortativity", "q187_phrase_search")
+    Seq("q183_seq_rules", "q184_ab_test", "q185_theil_sen",
+      "q187_phrase_search")
       .foreach { q =>
         val p = plan(q)
         assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
-        if (q != "q186_assortativity")
-          assert(!p.contains("BroadcastNestedLoopJoin"),
-            s"$q has a nested-loop join")
+        assert(!p.contains("BroadcastNestedLoopJoin"),
+          s"$q has a nested-loop join")
       }
   }
 

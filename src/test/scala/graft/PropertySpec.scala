@@ -293,50 +293,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("pageRank invariants: mass bounded, every rank >= teleport, permutation-proof") {
-    import graft.operators.Graph
-    val edges0 = sample(Gen.zip(Gen.choose(1L, 25L), Gen.choose(1L, 25L)), 120)
-      .filter { case (a, b) => a != b }.distinct
-    val und = (edges0 ++ edges0.map(_.swap)).distinct
-    val out = Graph.pageRank(und.toDF("src", "dst"), 6).collect()
-      .map(r => (r.getLong(0), r.getLong(2)))
-    val n = out.length
-    val tele = (15L * Graph.Scale) / (100L * n)
-    assert(out.map(_._2).sum <= Graph.Scale, "mass cannot exceed the total")
-    out.foreach { case (node, rank) =>
-      assert(rank >= tele, s"node $node rank $rank below teleport $tele") }
-    val shuffled = new scala.util.Random(5).shuffle(und)
-    val again = Graph.pageRank(shuffled.toDF("src", "dst"), 6).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toMap
-    assert(out.toMap === again)
-  }
-
-  test("kCore at a convergence-safe round count == brute-force fixpoint peel") {
-    import graft.operators.Graph
-    val edges = sample(Gen.zip(Gen.choose(1L, 20L), Gen.choose(1L, 20L)), 80)
-      .filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-    for (k <- Seq(2, 3, 4)) {
-      // reference: peel to fixpoint on the driver
-      var es = edges.toSet
-      var changed = true
-      while (changed) {
-        val deg = es.toSeq.flatMap(e => Seq(e._1, e._2))
-          .groupBy(identity).map { case (n, v) => n -> v.size }
-        val keep = deg.filter(_._2 >= k).keySet
-        val next = es.filter(e => keep(e._1) && keep(e._2))
-        changed = next != es
-        es = next
-      }
-      val want = es.toSeq.flatMap(e => Seq(e._1, e._2)).groupBy(identity)
-        .map { case (n, v) => n -> v.size.toLong }
-      // n nodes bounds the peel depth, so `rounds = 21` is a fixpoint
-      val got = Graph.kCore(edges.toDF("s", "d"), k, rounds = 21)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"k=$k")
-    }
-  }
-
   test("theilSen == a BigInt-rational reference median on random series") {
     import graft.operators.Trend
     val pts = sample(Gen.zip(Gen.choose(0L, 40L), Gen.choose(-500L, 500L)), 60)
@@ -480,25 +436,6 @@ class PropertySpec extends SparkSpec {
         assert(math.abs(g - w) <= 0.00005 * (scale + 1), s"$g vs $w") }
     close(run(8), base.map(_ * 8), 8)
     close(run(64), base.map(_ * 64), 64)
-  }
-
-  test("bfs distances: monotone in hop budget; fixpoint stable once diameter reached") {
-    import graft.operators.Graph
-    val edges = sample(Gen.zip(Gen.choose(0L, 40L), Gen.choose(0L, 40L)), 200)
-    val seeds = Seq(0L, 1L)
-    def run(h: Int) = Graph.bfsDistances(edges.toDF("src", "dst"),
-        seeds.toDF("node"), h)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val byHops = (0 to 5).map(run)
-    byHops.sliding(2).foreach { case Seq(a, b) =>
-      // growing the budget never changes an existing distance, only adds
-      a.foreach { case (n, dist) => assert(b(n) === dist) }
-      assert(a.keySet.subsetOf(b.keySet))
-    }
-    // 41 nodes: distance values are always <= hop budget
-    byHops.zipWithIndex.foreach { case (m, h) =>
-      assert(m.values.forall(_ <= h))
-    }
   }
 
   test("bm25 serving layouts agree: one-shot == indexed == sharded posting lists") {

@@ -117,8 +117,8 @@ class DriftSpec extends SparkSpec {
   }
 
   test("cramersV: a single-level dimension yields NULL V, not NaN") {
-    // min(R−1, C−1) = 0 ⇒ V undefined; the file's convention (nmi,
-    // assortativity) is NULL, never NaN/Infinity
+    // min(R−1, C−1) = 0 ⇒ V undefined; the file's convention (nmi) is
+    // NULL, never NaN/Infinity
     val df = Seq(("a", "x"), ("a", "y"), ("a", "x")).toDF("r", "c")
     val r = Drift.cramersV(df, col("r"), col("c")).collect().head
     assert(r.getLong(1) === 1L, "one row level")

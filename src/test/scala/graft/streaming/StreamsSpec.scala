@@ -488,45 +488,6 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming dedup admission: index grows by admitted docs only") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("inc_admit").toString
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = Streams.incrementalDedupAdmit(input.toDS().toDF("doc_id", "text"),
-        "doc_id", "text", s"$base/index", s"$base/decisions", threshold = 0.5)
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    try {
-      // batch 0: two fresh docs + an in-batch exact dup
-      input.addData(
-        (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
-        (2L, "data pipelines shuffle partitions across executors during wide transformations"),
-        (3L, "the quick brown fox jumps over the lazy dog near the river bank"))
-      q.processAllAvailable()
-      // batch 1: a dup of an indexed doc, an appended-token near-dup
-      // (high Jaccard, so banding collides for sure), and fresh content
-      input.addData(
-        (10L, "the quick brown fox jumps over the lazy dog near the river bank"),
-        (11L, "data pipelines shuffle partitions across executors during wide transformations today"),
-        (12L, "astronomy telescopes observe distant galaxies through adaptive optics tonight"))
-      q.processAllAvailable()
-
-      val decisions = spark.read.parquet(s"$base/decisions")
-        .collect().map(r => r.getLong(0) ->
-          (Option(r.get(1)).map(_.asInstanceOf[Long]), r.getBoolean(3))).toMap
-      assert(decisions(1L) === (None, true))
-      assert(decisions(2L) === (None, true))
-      assert(decisions(3L) === (Some(1L), false))   // in-batch dup
-      assert(decisions(10L) === (Some(1L), false))  // dup of indexed doc
-      assert(decisions(11L) === (Some(2L), false))  // near-dup of indexed doc
-      assert(decisions(12L) === (None, true))
-      // the index holds band buckets for admitted docs ONLY
-      assert(spark.read.parquet(s"$base/index").select("doc").distinct()
-        .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 12L))
-    } finally q.stop()
-  }
-
   test("compaction survives a checkpoint replay of the in-flight batch") {
     // The failure mode the belowId contract exists for: foreachBatch(N)
     // returns (having compacted), the process dies BEFORE the checkpoint
@@ -950,29 +911,6 @@ class StreamsSpec extends SparkSpec {
         .select(col("user_id"), col("n_events"), col("duration_sec"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops re-deliveries within the watermark horizon") {
-    import StatefulSessionize.Event
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
-    def ev(key: Long, offSec: Long) =
-      Event(key, new java.sql.Timestamp(t0 + offSec * 1000), key)
-
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val deduped = Streams.dedupWithinWatermark(
-      input.toDS().toDF(), "ts", Seq("user_id"), watermark = "1 hour")
-    val q = deduped.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    try {
-      // key 1 delivered three times, key 2 once — within one horizon
-      input.addData(ev(1, 0), ev(1, 10), ev(2, 20))
-      q.processAllAvailable()
-      input.addData(ev(1, 30))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_stream").collect().map(_.getLong(0)).toSeq
-      assert(ids.sorted === Seq(1L, 2L))
     } finally q.stop()
   }
 

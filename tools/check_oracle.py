@@ -6,7 +6,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [jsonOut]
 Reads each <outDir>/<query>/ parquet written by graft.Verify, runs the
 corresponding oracle SQL from <outDir>/oracle_sql.json in DuckDB against the
 parquet tables in <sfDir>, sorts columns by name and rows by all columns,
-and reports exact-match status per query. With jsonOut, also writes a
+and reports exact-match status per query. An oracle whose query wrote no
+result directory (the query threw in Verify, or a filtered Verify run left
+it out) is a failure. Exit status 1 if any query failed. With jsonOut, also writes a
 driver-shaped per-query record ({rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}) — used for the committed CORRECTNESS_sf01
 artifact (correctness evidence at the scale the bench claims).
@@ -61,6 +63,12 @@ def main(sf_dir: str, out_dir: str, json_out: str = None) -> int:
     import glob
     query_dirs = sorted(d.rstrip("/").split("/")[-1]
                         for d in glob.glob(f"{out_dir}/*/"))
+    # a query that threw in graft.Verify never wrote its directory: it
+    # must fail here, not drop out of the tally
+    for name in sorted(set(oracle) - set(query_dirs)):
+        print(f"FAIL  {name}: no spark result")
+        rec(name, err="no spark result")
+        n_bad += 1
     for name in query_dirs:
         try:
             got = canon(pd.read_parquet(f"{out_dir}/{name}"))
