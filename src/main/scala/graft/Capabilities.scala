@@ -30,6 +30,13 @@ object Capabilities {
   private val outPath = "CAPABILITIES.md"
 
   def main(args: Array[String]): Unit = {
+    Files.writeString(Paths.get(outPath), render())
+    println(s"[capabilities] wrote $outPath (${SparkEntry.queries.size} rows)")
+  }
+
+  /** The full `CAPABILITIES.md` text, read from the source tree under
+    * the working directory (PlanSpec pins the committed file to it). */
+  def render(): String = {
     val src = Files.readString(Paths.get(entryPath))
     val lines = src.linesIterator.toVector
 
@@ -169,8 +176,6 @@ object Capabilities {
          || query | what it evidences | entry point | oracle | spec |
          ||---|---|---|---|---|""".stripMargin
 
-    Files.writeString(Paths.get(outPath),
-      header + "\n" + rows.mkString("\n") + "\n")
-    println(s"[capabilities] wrote $outPath (${rows.size} rows)")
+    header + "\n" + rows.mkString("\n") + "\n"
   }
 }

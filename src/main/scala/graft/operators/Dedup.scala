@@ -369,8 +369,8 @@ object Dedup {
    * Persistable banded-LSH dedup index: one row per (doc, band) carrying
    * the band-key components (`v0..v{rowsPerBand-1}`, `band`) AND the
    * doc's full signature (`mh_*`) — [[bandBuckets]]' layout. Write it out
-   * once (e.g. parquet, or bucketed on the band key via
-   * [[graft.sinks.Publish.bucketedTable]]) and every future batch is
+   * once (e.g. parquet, or a table bucketed on the band key with
+   * Spark's `bucketBy`) and every future batch is
    * admitted against it with [[admitIncremental]] — the already-admitted
    * corpus is never re-shingled or re-signed.
    *

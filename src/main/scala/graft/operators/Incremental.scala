@@ -133,8 +133,8 @@ object Incremental {
    *
    * At 100 TB this is the reason join views are maintained rather than
    * rebuilt: each leg's shuffle is O(delta + matched base rows) — with
-   * the base sides published bucketed on the join keys
-   * ([[graft.sinks.Publish.bucketedTable]]) the base never reshuffles,
+   * the base sides published bucketed on the join keys (Spark's
+   * `bucketBy` tables) the base never reshuffles,
    * and a nightly refresh moves the day's delta, not the history. The
    * delta legs broadcast when small; nothing in the identity requires a
    * full A ⋈ B recompute ever again.

@@ -177,7 +177,7 @@ object Tokenize {
     // localCheckpoint: the token-count aggregate feeds BOTH the
     // driver-side bucket-stats collect and the final bucketed-window
     // plan — without materializing it the fact-sized explode+groupBy
-    // executes twice (the q110/q166 shared-subtree idiom)
+    // executes twice
     val counts = docs.select(explode(tokensCol).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
       // bit_length: bucket 63 = largest counts; conv() is codegen'd
@@ -219,8 +219,7 @@ object Tokenize {
    * Ranking is [[rankedTermCounts]]'s two-phase bucketed prefix (no
    * partition-less window); the fit aggregates the five OLS sufficient
    * statistics (n, Σx, Σy, Σx², Σxy) in ONE pass over the topK-sized
-   * head — the q196 sufficient-statistics shape with logs in place of
-   * integer moments. The sums stay RAW and only the final
+   * head, with logs in place of integer moments. The sums stay RAW and only the final
    * slope/intercept round to 6dp (the chi2 lane: rounding the inputs
    * would bias the fit by the rounding scale itself — measured 1e-6 on
    * an exact cnt = K/r spectrum — while accumulation-order noise on the

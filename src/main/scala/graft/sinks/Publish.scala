@@ -55,65 +55,6 @@ object Publish {
       year(dateCol).isin(years: _*)
   }
 
-  /** Publish a DataFrame as a (partitioned) table in the session catalog. */
-  def table(df: DataFrame, name: String, format: String = "parquet",
-            partitionCols: Seq[String] = Nil, mode: String = "overwrite"): Unit = {
-    val w = df.write.format(format).mode(mode)
-    val pw = if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w
-    pw.saveAsTable(name)
-  }
-
-  /**
-   * Publish as a bucketed (and optionally sorted) table: rows are hash-
-   * distributed into `numBuckets` files per partition by `bucketCols`.
-   * Two tables bucketed the same way equi-join on the bucket columns with
-   * NO shuffle on either side — the write-time co-location that replaces
-   * per-query exchanges for repeated large-×-large joins (the 100 TB
-   * answer when neither side broadcasts).
-   */
-  def bucketedTable(df: DataFrame, name: String, bucketCols: Seq[String],
-                    numBuckets: Int, sortCols: Seq[String] = Nil,
-                    format: String = "parquet", mode: String = "overwrite"): Unit = {
-    require(bucketCols.nonEmpty)
-    if (mode == "overwrite") {
-      // Overwrite semantics extend to a STALE location: if the table is
-      // absent from the catalog but its default directory survives (a
-      // previous process died between writing files and registering, or
-      // the metastore was reset), CTAS would fail with
-      // LOCATION_ALREADY_EXISTS instead of overwriting. Storage-agnostic
-      // via the Hadoop FS API (HDFS/object stores, not just local disk).
-      val spark = df.sparkSession
-      val cat = spark.sessionState.catalog
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(name)
-      if (!cat.tableExists(ident)) {
-        val path = new org.apache.hadoop.fs.Path(cat.defaultTablePath(ident))
-        val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(path)) {
-          // Only remove what a died table-write could have left behind:
-          // Spark data/commit files, partition dirs, temporary dirs.
-          // Anything else parked at the default location (e.g. an
-          // externally-written directory awaiting registration) is not
-          // ours to destroy — refuse loudly instead of deleting.
-          val leftovers = fs.listStatus(path).forall { s =>
-            val n = s.getPath.getName
-            n.startsWith("part-") || n.startsWith(".") || n.startsWith("_") ||
-              (s.isDirectory && n.contains("="))
-          }
-          if (!leftovers)
-            throw new IllegalStateException(
-              s"refusing to overwrite $path: it is not registered as table " +
-                s"'$name' and does not look like a stale Spark table write")
-          fs.delete(path, true)
-        }
-        ()
-      }
-    }
-    val w = df.write.format(format).mode(mode)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    val sw = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
-    sw.saveAsTable(name)
-  }
-
   /** Publish as raw files under `path` (the direct cross-engine surface:
     * DuckDB/Trino scan the same directory). */
   def files(df: DataFrame, path: String, format: String = "parquet",

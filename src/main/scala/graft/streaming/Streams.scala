@@ -659,45 +659,6 @@ object Streams {
     }
 
   /**
-   * Publish the incremental index state as BUCKETED catalog tables
-   * (`<prefix>_tf`/`_dl`/`_assigned`, via
-   * [[graft.sinks.Publish.bucketedTable]]) — the long-lived serving form:
-   * tf and dl are bucketed on `doc`, so the assemble-time postings join
-   * ([[Bm25.assemble]]'s `tf ⋈ dl`) is co-located with NO shuffle on
-   * either side at any corpus size; `assigned` is bucketed on `doc` and
-   * sorted by `cid`, so probed reads skip row groups via parquet min/max
-   * stats. Read back with [[readPublishedIndex]].
-   */
-  def publishSearchIndex(spark: org.apache.spark.sql.SparkSession, outDir: String,
-                         tablePrefix: String, buckets: Int = 32): Unit = {
-    graft.sinks.Publish.bucketedTable(
-      graft.ParquetMeta.read(spark, Seq(s"$outDir/tf"), Seq(BatchIdPart))
-        .drop("batch_id"),
-      s"${tablePrefix}_tf", Seq("doc"), buckets)
-    graft.sinks.Publish.bucketedTable(
-      graft.ParquetMeta.read(spark, Seq(s"$outDir/dl"), Seq(BatchIdPart))
-        .drop("batch_id"),
-      s"${tablePrefix}_dl", Seq("doc"), buckets)
-    graft.sinks.Publish.bucketedTable(
-      graft.ParquetMeta.read(spark, Seq(s"$outDir/assigned"), Seq(BatchIdPart))
-        .drop("batch_id"),
-      s"${tablePrefix}_assigned", Seq("doc"), buckets, sortCols = Seq("cid"))
-  }
-
-  /** Assemble a [[HybridSearch.SearchIndex]] from tables written by
-    * [[publishSearchIndex]] (bucketed: the postings join plans with zero
-    * shuffle exchanges). */
-  def readPublishedIndex(spark: org.apache.spark.sql.SparkSession, tablePrefix: String,
-                         centroids: DataFrame, idCol: String,
-                         vecCol: String): HybridSearch.SearchIndex =
-    HybridSearch.SearchIndex(
-      Bm25.assemble(spark.table(s"${tablePrefix}_tf"),
-        spark.table(s"${tablePrefix}_dl"), cache = false),
-      spark.table(s"${tablePrefix}_assigned"),
-      graft.operators.Knn.centroidMatrix(
-        centroids.select(col(idCol).as("cid"), col(vecCol).as("cv"))))
-
-  /**
    * Watermarked stream-stream interval join — the missing relational
    * primitive between two live feeds (impression→click attribution, probe
    * →response pairing, order→shipment latency): for each left event, match

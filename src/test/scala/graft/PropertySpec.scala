@@ -293,26 +293,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("theilSen == a BigInt-rational reference median on random series") {
-    import graft.operators.Trend
-    val pts = sample(Gen.zip(Gen.choose(0L, 40L), Gen.choose(-500L, 500L)), 60)
-      .distinct.groupBy(_._1).map(_._2.head).toSeq // unique t per point
-    val got = Trend.theilSen(pts.map(p => ("g", p._1, p._2)).toDF("g", "t", "v"),
-        Seq("g"), col("t"), col("v"))
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).head
-    // reference: exact rational slopes floor-scaled via BigInt
-    val slopes = (for {
-      (t1, v1) <- pts; (t2, v2) <- pts if t1 < t2
-    } yield {
-      val a = BigInt(1000000) * BigInt(v2 - v1)
-      val dx = BigInt(t2 - t1)
-      val q = a - (((a % dx) + dx) % dx)
-      (q / dx).toLong
-    }).sorted
-    val want = slopes((slopes.size + 1) / 2 - 1)
-    assert(got === ((pts.size.toLong, slopes.size.toLong, want)))
-  }
-
   test("vectorSum ≡ explode-sum for any grouping, order, and integer-valued data") {
     // the Lloyd-update aggregate's parity property: on integer-valued
     // doubles (order-exact addition) the fixed-width aggregate must match
@@ -419,25 +399,6 @@ class PropertySpec extends SparkSpec {
     assert(whole === oneShot)
   }
 
-  test("ewma scale-equivariance: scaling inputs by 2^k scales the output exactly") {
-    import graft.operators.Trend
-    val rows = sample(Gen.choose(0L, 100000L), 120).zipWithIndex
-      .map { case (v, i) => ("g", i, v) }
-    def run(scale: Long) = Trend.ewma(
-        rows.map { case (g, t, v) => (g, t, v * scale) }.toDF("g", "t", "v"),
-        Seq("g"), $"t", $"v", window = 8)
-      .orderBy("t").collect().map(_.getDouble(3)).toSeq
-    val base = run(1)
-    // power-of-two weights + power-of-two scaling = exact doubles up to
-    // the final round(4): scaled-then-rounded can differ from
-    // rounded-then-scaled by at most the scaled half-ulp of the rounding
-    def close(got: Seq[Double], want: Seq[Double], scale: Long): Unit =
-      got.zip(want).foreach { case (g, w) =>
-        assert(math.abs(g - w) <= 0.00005 * (scale + 1), s"$g vs $w") }
-    close(run(8), base.map(_ * 8), 8)
-    close(run(64), base.map(_ * 64), 64)
-  }
-
   test("bm25 serving layouts agree: one-shot == indexed == sharded posting lists") {
     import graft.operators.Bm25
     // random corpora over a small token pool so terms collide heavily
@@ -510,60 +471,6 @@ class PropertySpec extends SparkSpec {
       assert(ap(q).getAs[Long]("ap_num") === apNum, s"q$q ap_num")
       assert(ap(q).getAs[Long]("ap_den") ===
         scale * math.min(nRel, k.toLong), s"q$q ap_den")
-    }
-  }
-
-  test("matchRecognize agrees with a reference run matcher on random series") {
-    // values in {0..3} so flats (no-symbol rows) and repeated shapes are
-    // common; order = global index (unique per key)
-    val raw = sample(Gen.zip(Gen.choose(1L, 8L), Gen.choose(0, 3)), 600)
-      .zipWithIndex.map { case ((k, v), i) => (s"k$k", i.toLong, v.toDouble) }
-    def refMatches(rows: Seq[(Long, Double)], pat: Seq[String]): Seq[(Long, Long, Double)] = {
-      val sorted = rows.sortBy(_._1)
-      val syms: Seq[Option[String]] = sorted.indices.map { i =>
-        if (i == 0) None
-        else {
-          val d = sorted(i)._2 - sorted(i - 1)._2
-          if (d < 0) Some("down") else if (d > 0) Some("up") else None
-        }
-      }
-      var runs = Vector.empty[(Option[String], Vector[Int])]
-      sorted.indices.foreach { i =>
-        if (runs.nonEmpty && runs.last._1 == syms(i))
-          runs = runs.init :+ ((syms(i), runs.last._2 :+ i))
-        else runs = runs :+ ((syms(i), Vector(i)))
-      }
-      val k = pat.size
-      val out = Vector.newBuilder[(Long, Long, Double)]
-      var i = 0
-      while (i + k <= runs.size) {
-        val w = runs.slice(i, i + k)
-        if (w.map(_._1) == pat.map(Option(_))) {
-          val idxs = w.flatMap(_._2)
-          out += ((sorted(idxs.head)._1, sorted(idxs.last)._1,
-            idxs.map(sorted(_)._2).min))
-          i += k // AFTER MATCH SKIP PAST LAST ROW
-        } else i += 1
-      }
-      out.result()
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("k")).orderBy(col("o"))
-    val pre = raw.toDF("k", "o", "v")
-      .withColumn("dv", col("v") - lag(col("v"), 1).over(w))
-    for (pattern <- Seq(Seq("down", "up"), Seq("down", "up", "down", "up"))) {
-      val got = graft.operators.Patterns.matchRecognize(pre, col("k"),
-          col("o"), col("o"),
-          Seq("down" -> (col("dv") < 0), "up" -> (col("dv") > 0)),
-          pattern, col("v"))
-        .select(col("key"), col("o_start"), col("o_end"), col("v_min"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      val expected = raw.groupBy(_._1).flatMap { case (k, rows) =>
-        refMatches(rows.map(r => (r._2, r._3)), pattern)
-          .map(m => (k, m._1, m._2, m._3))
-      }.toSet
-      assert(got === expected, s"pattern $pattern")
     }
   }
 

@@ -141,64 +141,6 @@ class PublishSpec extends SparkSpec {
     assert(back.filter(col("yyyy") === 2023).count() === 2)
   }
 
-  test("bucketed tables equi-join with zero shuffles") {
-    import spark.implicits._
-    val facts = (0L until 1000L).map(i => (i % 50, i, i * 1.5))
-      .toDF("custkey", "orderkey", "amount")
-    val dim = (0L until 50L).map(i => (i, s"cust_$i")).toDF("custkey", "name")
-    Publish.bucketedTable(facts, "orders_bkt", Seq("custkey"), numBuckets = 4)
-    Publish.bucketedTable(dim, "customer_bkt", Seq("custkey"), numBuckets = 4)
-    try {
-      // disable broadcast so the join would otherwise shuffle both sides
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("orders_bkt")
-        .join(spark.table("customer_bkt"), "custkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join should be shuffle-free:\n$plan")
-      assert(joined.count() === 1000)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE orders_bkt")
-      spark.sql("DROP TABLE customer_bkt")
-    }
-  }
-
-  test("bucketed sink: stale leftovers are cleared, foreign data is refused") {
-    import spark.implicits._
-    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val cat = spark.sessionState.catalog
-    def defaultPath(name: String) = new java.io.File(new java.net.URI(
-      cat.defaultTablePath(spark.sessionState.sqlParser.parseTableIdentifier(name)).toString))
-
-    // a died writer's leftovers (part- files, no catalog entry) are swept
-    val stale = defaultPath("bkt_stale_test")
-    stale.mkdirs()
-    java.nio.file.Files.writeString(stale.toPath.resolve("part-00000-dead.parquet"), "junk")
-    Publish.bucketedTable(df, "bkt_stale_test", Seq("k"), numBuckets = 2)
-    try assert(spark.table("bkt_stale_test").count() === 2)
-    finally spark.sql("DROP TABLE bkt_stale_test")
-
-    // unrelated data parked at the default location is NOT ours to destroy
-    val foreign = defaultPath("bkt_foreign_test")
-    foreign.mkdirs()
-    java.nio.file.Files.writeString(foreign.toPath.resolve("somebody_elses.csv"), "x,y\n1,2\n")
-    intercept[IllegalStateException] {
-      Publish.bucketedTable(df, "bkt_foreign_test", Seq("k"), numBuckets = 2)
-    }
-    assert(foreign.toPath.resolve("somebody_elses.csv").toFile.exists())
-    java.nio.file.Files.delete(foreign.toPath.resolve("somebody_elses.csv"))
-    java.nio.file.Files.delete(foreign.toPath)
-  }
-
-  test("table sink: registered in the session catalog and queryable") {
-    Publish.table(mart, "fact_pub_test", partitionCols = Seq("yyyy"))
-    assert(spark.table("fact_pub_test").count() === 3)
-    assert(spark.sql("SELECT count(*) FROM fact_pub_test WHERE yyyy = 2023")
-      .head().getLong(0) === 2)
-    spark.sql("DROP TABLE fact_pub_test")
-  }
-
   private def partFiles(dir: String): Array[java.io.File] =
     new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
 

@@ -207,23 +207,6 @@ class StreamsSpec extends SparkSpec {
       val idx4 = Streams.readSearchIndex(spark, base, centroids, "doc_id", "embedding")
       assert(Bm25.scoreIndexed(idx4.bm25, Seq("leak"))
         .collect().map(_.getLong(0)).toSet === Set(10L, 12L, 13L))
-
-      // ---- bucketed publication: same answers, shuffle-free assemble join ----
-      Streams.publishSearchIndex(spark, base, "idx_spec", buckets = 4)
-      val pub = Streams.readPublishedIndex(spark, "idx_spec", centroids,
-        "doc_id", "embedding")
-      assert(Bm25.scoreIndexed(pub.bm25, Seq("leak"))
-        .collect().map(_.getLong(0)).toSet === Set(10L, 12L, 13L))
-      assert(pub.assigned.select("doc").collect().map(_.getLong(0)).toSet ===
-        Set(10L, 11L, 12L, 13L))
-      val savedBt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joinPlan = spark.table("idx_spec_tf").join(spark.table("idx_spec_dl"), "doc")
-          .queryExecution.executedPlan.toString
-        assert(!joinPlan.contains("Exchange hashpartitioning"),
-          s"bucketed tf-dl join must not shuffle, got:\n$joinPlan")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBt)
     } finally q.stop()
   }
 
