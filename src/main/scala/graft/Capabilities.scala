@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /**
  * Generates `CAPABILITIES.md` — the query → operator → oracle → spec
@@ -83,9 +84,13 @@ object Capabilities {
         lines(j).trim.startsWith("/**"))) {
         block.prepend(lines(j).trim); j -= 1
       }
-      val text = block.map(_.stripPrefix("/**").stripPrefix("*/")
+      val joined = block.map(_.stripPrefix("/**").stripPrefix("*/")
           .stripPrefix("*").trim).mkString(" ")
         .replaceAll("\\s+", " ").trim
+      // a [[...]] link that wraps onto the next doc line comes back with
+      // the join's space inside it: close it up before links are matched
+      val text = """\[\[[^\]]*\]\]""".r.replaceAllIn(joined,
+        m => Regex.quoteReplacement(m.matched.replaceAll("\\s", "")))
       // prefer an operator-package link (the entry point) over an
       // incidental functions/ShaLanes-style citation appearing earlier
       val allLinks = """\[\[([A-Za-z0-9.$#_]+)\]\]""".r

@@ -2389,58 +2389,8 @@ object SparkEntry {
         date_format(col("window.end"), "yyyy-MM-dd").as("w_end"),
         col("event_type"), col("n"), col("v_sum"))
 
-  /** q159: seasonal-trend decomposition ([[graft.operators.Trend
-    * .seasonalDecompose]] — the classical guard against weekly
-    * periodicity tripping the q08 early-signal z-score): daily event
-    * counts per type decompose into centered-MA trend, mean-detrended
-    * weekday seasonal, and residual. Bit-exact on raw doubles by the
-    * lcm-scaling argument in the operator scaladoc (integer frame sums,
-    * one division per output, the seasonal group sum made
-    * order-independent by scaling to integer-valued doubles) — the
-    * hash gate runs on UNROUNDED floats, like q108's EWMA. */
-  private def seasonalDecomposeQ(s: SparkSession, d: String): DataFrame = {
-    val daily = events(s, d)
-      .groupBy(col("event_type"),
-        expr("CAST(ts AS LONG) DIV 86400").as("day"))
-      .agg(count(lit(1)).as("n"))
-    graft.operators.Trend.seasonalDecompose(daily, Seq("event_type"),
-        col("day"), col("n"))
-      .select(col("event_type"),
-        date_format(to_timestamp(col("day") * 86400), "yyyy-MM-dd").as("d"),
-        col("n"), col("trend"), col("seasonal"), col("residual"))
-  }
-
-  /** q160: CUSUM changepoint detection ([[graft.operators.Trend.cusum]]
-    * — the slow-drift sequential detector beside q159's decomposition
-    * and q08's point z-score): per event type, the in-control mean is
-    * the floor of the first-14-observed-days average (floor of one
-    * exact division — deterministic), deviations use dyadic slack 0.5,
-    * and the recursion C_t = max(0, C_{t-1}+d_t) runs as its closed
-    * form S_t − min(0, S_0..S_t) — two ordered windows, no recursion.
-    * All-exact doubles (operator scaladoc), gate on raw values; alarm
-    * emitted as 0/1 per house no-boolean rule. */
-  private def cusumQ(s: SparkSession, d: String): DataFrame = {
-    val daily = events(s, d)
-      .groupBy(col("event_type"), expr("CAST(ts AS LONG) DIV 86400").as("day"))
-      .agg(count(lit(1)).as("n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("day"))
-    val target = daily.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= 14)
-      .groupBy(col("event_type"))
-      .agg(floor(avg(col("n"))).cast("double").as("mu0"))
-    graft.operators.Trend.cusum(
-        daily.join(broadcast(target), Seq("event_type")),
-        Seq("event_type"), col("day"), col("n"), col("mu0"),
-        slack = 0.5, threshold = 24.0)
-      .select(col("event_type"),
-        date_format(to_timestamp(col("day") * 86400), "yyyy-MM-dd").as("d"),
-        col("n"), col("mu0"), col("s"), col("cusum"),
-        col("alarm").cast("long").as("alarm"))
-  }
-
-  /** q161: regression trend test (the LINEAR companion to q160's CUSUM:
-    * "is this series drifting, and how fast?") — per event type over
+  /** q161: regression trend test ("is this series drifting, and how
+    * fast?") — per event type over
     * the daily counts, the bivariate aggregate family: regr_slope /
     * regr_intercept (events/day drift), corr (direction strength), and
     * n. Pure two-pass-free built-in aggregates (one grouped pass,
@@ -2455,59 +2405,6 @@ object SparkEntry {
         round(regr_slope(col("n"), col("day")), 6).as("slope"),
         round(regr_intercept(col("n"), col("day")), 6).as("intercept"),
         round(corr(col("n"), col("day")), 6).as("r"))
-
-  /** q162: alarm-tier freshness replay (q106's agg-IVM lifecycle feeding
-    * q160's detector): three event micro-batches (event_id mod 3)
-    * maintain the per-(type, day) counts mart through on-disk parquet
-    * state round-trips — `Incremental.aggregate` per drop,
-    * `mergeAggregates` against the persisted prior state, O(mart +
-    * delta) per batch, facts never rescanned — then CUSUM runs over the
-    * MAINTAINED state. Oracle is q160's batch pipeline verbatim:
-    * maintained-under-replay == recomputed-from-scratch is exactly the
-    * freshness claim (the reference's `target_lag` posture for the
-    * alarm view). */
-  private def alarmReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Incremental
-    val dir = replayStateDir(s, "q162", d)
-    val keys = Seq("event_type", "day")
-    val ev = events(s, d).select(col("event_type"),
-      expr("CAST(ts AS LONG) DIV 86400").as("day"), col("event_id"))
-    // q146's round-12 fold idiom (r16): the maintained state is carried
-    // across batches as a localCheckpoint-ed frame instead of re-reading
-    // each just-written parquet version; every version is still
-    // PUBLISHED, and the declared readout still consumes the published
-    // state_2 — only the intermediate read-backs (+ listings) go away
-    var state: Option[DataFrame] = None
-    (0 until 3).foreach { i =>
-      val part = Incremental.aggregate(
-        ev.filter(pmod(col("event_id"), lit(3)) === i), keys, Nil)
-      val merged = (state match {
-        case None => part
-        case Some(prev) =>
-          Incremental.mergeAggregates(Seq(prev, part), keys, Nil)
-      }).localCheckpoint()
-      merged.write.mode("overwrite").parquet(s"$dir/state_$i")
-      state = Some(merged)
-    }
-    // explicit schema from the frame just written (r17 floor lever:
-    // per-call parquet schema inference measured ~70 ms — OPTIMIZATION_r17.md)
-    val daily = s.read.schema(state.get.schema).parquet(s"$dir/state_2")
-      .select(col("event_type"), col("day"), col("n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("day"))
-    val target = daily.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= 14)
-      .groupBy(col("event_type"))
-      .agg(floor(avg(col("n"))).cast("double").as("mu0"))
-    graft.operators.Trend.cusum(
-        daily.join(broadcast(target), Seq("event_type")),
-        Seq("event_type"), col("day"), col("n"), col("mu0"),
-        slack = 0.5, threshold = 24.0)
-      .select(col("event_type"),
-        date_format(to_timestamp(col("day") * 86400), "yyyy-MM-dd").as("d"),
-        col("n"), col("mu0"), col("s"), col("cusum"),
-        col("alarm").cast("long").as("alarm"))
-  }
 
   /** Benford first-digit probabilities log10(1+1/d), pinned as DECIMAL
     * LITERALS (not computed — libm log10 may differ by an ulp across
@@ -2526,8 +2423,7 @@ object SparkEntry {
     * probabilities pinned as identical decimal literals in both engines
     * (never computed via libm), chi-square contribution per digit.
     * Integer counts; expected and chi2 are single correctly-rounded ops
-    * on identical operands — bit-exact raw doubles at the gate, the
-    * q159/q160 discipline. */
+    * on identical operands — bit-exact raw doubles at the gate. */
   private def benfordQ(s: SparkSession, d: String): DataFrame = {
     val digit = substring(
       expr("CAST(round(o_totalprice * 100) AS BIGINT)").cast("string"), 1, 1)
@@ -2564,50 +2460,6 @@ object SparkEntry {
         "lang", col("doc_id"), total = 100L)
       .select(col("doc_id"), col("lang"), col("rk"))
 
-  /** q167: distribution drift between event epochs (first vs second half
-    * of January) across two binnings — the raw category and a 50-unit
-    * value band ([[graft.operators.Drift.stability]]): PSI terms
-    * (rounded 6dp — the ln lane) and chi-square homogeneity terms (raw
-    * doubles, q163 discipline) per bin, one contingency aggregate per
-    * dimension. */
-  private def driftQ(s: SparkSession, d: String): DataFrame = {
-    val ev = events(s, d)
-    val inA = col("ts") < to_timestamp(lit("2024-01-16"))
-    val cols = Seq("dim", "bin", "n_a", "n_b", "p_a", "p_b",
-      "psi_term", "chi2_term").map(col)
-    Drift.stability(ev, col("event_type"), inA)
-      .withColumn("dim", lit("event_type")).select(cols: _*)
-      .unionAll(
-        Drift.stability(ev,
-            floor(col("value") / lit(50.0)).cast("long").cast("string"), inA)
-          .withColumn("dim", lit("value_band")).select(cols: _*))
-  }
-
-  /** q168: term keyness between source cohorts (src0–9 vs src10–19) —
-    * Dunning G² log-likelihood per term ([[graft.operators.Drift
-    * .keyness]]), the vocabulary-drift screen over document shards.
-    * Integer cross-products decide `leans`; G² rides the round-6 ln
-    * lane. Tokenization is the q45 contract (single-space split). */
-  private def keynessQ(s: SparkSession, d: String): DataFrame =
-    Drift.keyness(documents(s, d), split(col("text"), " "),
-      substring(col("source"), 4, 10).cast("int") < 10, minCount = 20L)
-
-  /** q169: two-sided linear interpolation of the per-priority daily
-    * order-count series over its gap-bearing day spine
-    * ([[graft.operators.Trend.interpolateLinear]]) — the line-drawing
-    * sibling of q125's forward-fill. Numerators are Long-exact; the one
-    * division and final addition are correctly-rounded on identical
-    * operands, so v_interp hashes RAW (q159/q160 discipline). */
-  private def interpolateQ(s: SparkSession, d: String): DataFrame = {
-    // o_orderdate reads as TIMESTAMP_NTZ; the session pins UTC, so the
-    // NTZ→LTZ cast is micros-identical to DuckDB's epoch() of the file
-    val daily = orders(s, d).groupBy(col("o_orderpriority").as("priority"),
-        expr("CAST(CAST(o_orderdate AS TIMESTAMP) AS LONG) DIV 86400")
-          .as("day"))
-      .agg(count(lit(1)).as("n"))
-    Trend.interpolateLinear(daily, Seq("priority"), col("day"), col("n"))
-  }
-
   /** q170: nucleus (top-p) vocabulary coverage — the minimal
     * frequency-ranked term prefix covering 95% of corpus tokens
     * ([[graft.operators.Tokenize.coverageCutoff]]); membership decided
@@ -2615,18 +2467,6 @@ object SparkEntry {
     * tokenizer-sizing question asked before fixing a vocab. */
   private def vocabCoverageQ(s: SparkSession, d: String): DataFrame =
     Tokenize.coverageCutoff(documents(s, d), split(col("text"), " "), 95L)
-
-  /** q172: autocorrelation function of the per-type daily event series
-    * at lags 1–7 ([[graft.operators.Trend.acf]]) — the seasonality
-    * diagnostic ahead of q159's decomposition. One window materializes
-    * all lags, `stack` unpivots scan-side, one grouped `corr` per
-    * (type, lag); moments accumulate → round-6 lane (q161's). */
-  private def acfQ(s: SparkSession, d: String): DataFrame = {
-    val daily = events(s, d)
-      .groupBy(col("event_type"), expr("CAST(ts AS LONG) DIV 86400").as("day"))
-      .agg(count(lit(1)).as("n"))
-    Trend.acf(daily, Seq("event_type"), col("day"), col("n"), maxLag = 7)
-  }
 
   /** q173: exact weighted median per return flag — the quantity below
     * which half the extended-price MONEY sits
@@ -2703,88 +2543,6 @@ object SparkEntry {
       .drop("__grp")
   }
 
-  /** q178: time-weighted average event value per type
-    * ([[graft.operators.Trend.timeWeightedAvg]]) — each observation
-    * holds until the next, so irregular sampling can't bias the mean;
-    * micros clock, (ts, event_id) tie-break, round-6 product sums. */
-  private def twapQ(s: SparkSession, d: String): DataFrame =
-    Trend.timeWeightedAvg(events(s, d), Seq("event_type"),
-      unix_micros(col("ts")), col("value"), col("event_id"))
-
-  /** q179: Cramér's V between event type and weekday
-    * ([[graft.operators.Drift.cramersV]]) — the R×C independence screen
-    * over the 35-cell contingency table; χ² rides the round-6 lane, V
-    * derives from the ROUNDED χ² via correctly-rounded sqrt/division
-    * (deterministic, no second lane). */
-  private def cramersQ(s: SparkSession, d: String): DataFrame =
-    Drift.cramersV(events(s, d), col("event_type"),
-      expr("(CAST(ts AS LONG) DIV 86400) % 7"))
-
-  /** q180: the drift monitor under freshness replay — three event
-    * micro-batches (event_id mod 3) maintain the per-(dim, bin)
-    * contingency mart through on-disk parquet state round-trips
-    * (q106's [[graft.operators.Incremental]] aggregate/merge lifecycle,
-    * O(mart + delta) per batch, facts never rescanned), then q167's
-    * derived metrics run over the MAINTAINED counts
-    * ([[graft.operators.Drift.stabilityFromCounts]]). The oracle is
-    * q167's batch SQL verbatim — maintained-under-replay == recomputed
-    * IS the freshness claim (the q162 posture, extended to the
-    * data-quality tier). */
-  private def driftReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Incremental
-    val dir = replayStateDir(s, "q180", d)
-    val inA = col("ts") < to_timestamp(lit("2024-01-16"))
-    val facts = events(s, d).select(col("event_id"),
-        explode(array(
-          struct(lit("event_type").as("dim"), col("event_type").as("bin")),
-          struct(lit("value_band").as("dim"),
-            floor(col("value") / lit(50.0)).cast("long").cast("string")
-              .as("bin")))).as("db"),
-        when(inA, 1L).otherwise(0L).as("a"))
-      .select(col("event_id"), col("db.dim").as("dim"),
-        col("db.bin").as("bin"), col("a"), (lit(1L) - col("a")).as("b"))
-    val keys = Seq("dim", "bin")
-    // carried-state fold (the q146/q162 idiom): versions still published,
-    // intermediate parquet read-backs removed
-    var carried: Option[DataFrame] = None
-    (0 until 3).foreach { i =>
-      val part = Incremental.aggregate(
-        facts.filter(pmod(col("event_id"), lit(3)) === i), keys,
-        Seq("a", "b"))
-      val merged = (carried match {
-        case None => part
-        case Some(prev) =>
-          Incremental.mergeAggregates(Seq(prev, part), keys, Seq("a", "b"))
-      }).localCheckpoint()
-      merged.write.mode("overwrite").parquet(s"$dir/state_$i")
-      carried = Some(merged)
-    }
-    // explicit schema from the frame just written (r17 floor lever)
-    val state = s.read.schema(carried.get.schema).parquet(s"$dir/state_2")
-    val cols = Seq("dim", "bin", "n_a", "n_b", "p_a", "p_b",
-      "psi_term", "chi2_term").map(col)
-    def forDim(dim: String) = Drift.stabilityFromCounts(
-        state.filter(col("dim") === dim)
-          .select(col("bin"), col("sum_a").as("n_a"), col("sum_b").as("n_b")))
-      .withColumn("dim", lit(dim)).select(cols: _*)
-    forDim("event_type").unionAll(forDim("value_band"))
-  }
-
-  /** q185: Theil–Sen robust trend of monthly order volume per priority
-    * ([[graft.operators.Trend.theilSen]]) — the median pairwise slope
-    * in integer micro-units via an explicit pmod floor division (so
-    * Spark's truncating `div` and DuckDB's floor `//` agree on negative
-    * slopes), lower-median VALUE selection: no float anywhere. Pairs
-    * are month×month per priority — series-sized, partition-local. */
-  private def theilSenQ(s: SparkSession, d: String): DataFrame = {
-    val monthly = orders(s, d)
-      .groupBy(col("o_orderpriority").as("priority"),
-        expr("CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT)")
-          .as("t"))
-      .agg(count(lit(1)).as("v"))
-    Trend.theilSen(monthly, Seq("priority"), col("t"), col("v"))
-  }
-
   /** q187: exact phrase search over positional postings
     * ([[graft.operators.Bm25.phraseSearch]]) — "slow hash batch" as an
     * ADJACENT trigram, not a bag of terms: scan-side term-selective
@@ -2810,17 +2568,7 @@ object SparkEntry {
       .withColumn("tile", ntile(4).over(w).cast("long"))
   }
 
-  /** q189: M4 downsampling of the per-type event-value series
-    * ([[graft.operators.Trend.m4Downsample]]) — the error-free chart
-    * reducer: 16 equal time bins × (first, last, min, max) in integer
-    * cents; duplicate ticks pre-collapsed so first/last selection is
-    * tie-free in both engines. */
-  private def m4Q(s: SparkSession, d: String): DataFrame =
-    Trend.m4Downsample(events(s, d), Seq("event_type"),
-      expr("CAST(ts AS LONG)"),
-      expr("CAST(round(value * 100) AS BIGINT)"), buckets = 16)
-
-  /** q193: categorical distribution profile over the q180 dim/bin
+  /** q193: categorical distribution profile over a (dim, value)
     * explode ([[graft.operators.Profile.categoricalProfile]]) — mode
     * with the lexical tie-break PINNED (an unpinned mode is a flaky
     * gate), Shannon entropy + [0,1] normalization for the degenerate-
@@ -2835,28 +2583,6 @@ object SparkEntry {
       .select(col("db.dim").as("dim"), col("db.v").as("v"))
     Profile.categoricalProfile(cells, col("dim"), col("v"))
   }
-
-  /** q195: mutual information between event type and weekday
-    * ([[graft.operators.Drift.mutualInfo]]) — the information-theoretic
-    * dependence measure over q179's exact contingency pair, plus the
-    * min-entropy normalization; only OBSERVED cells contribute (the
-    * x·ln x → 0 limit), logs ride the round-6 lane, nmi derives from
-    * the rounded values (q179 discipline). */
-  private def mutualInfoQ(s: SparkSession, d: String): DataFrame =
-    Drift.mutualInfo(events(s, d), col("event_type"),
-      expr("(CAST(ts AS LONG) DIV 86400) % 7"))
-
-  /** q196: two-feature OLS per return flag
-    * ([[graft.operators.Trend.ols2]]) — price ~ quantity + discount by
-    * Cramer's rule over nine exact-Long sufficient statistics: the
-    * one-pass distributed regression (facts reduce to one grouped
-    * aggregate; the solve is scan-side on group rows). Betas round-6;
-    * the oracle writes the identical determinant dag. */
-  private def ols2Q(s: SparkSession, d: String): DataFrame =
-    Trend.ols2(lineitem(s, d), Seq("l_returnflag"),
-      col("l_quantity"),
-      expr("CAST(round(l_discount * 100) AS BIGINT)"),
-      expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
 
   /** q197: consistent-hash rebalance audit
     * ([[graft.operators.Shard.rebalanceMatrix]]) — the (owner-before,
@@ -2908,49 +2634,6 @@ object SparkEntry {
         round(percentile(col("gap"), lit(0.9)), 4).as("p90_s"))
   }
 
-  /** q200: the M4 dashboard mart under freshness replay — a FIXED
-    * January-2024 viewport (dashboard contract: bins can't move when
-    * data arrives) maintained through three event micro-batches: the
-    * per-tick cell grid is MERGEABLE state (counts sum, tick min/max
-    * re-min/max — [[graft.operators.Incremental]]'s mins/maxs path),
-    * so maintained == recomputed bit-exactly and q189's derivation
-    * ([[graft.operators.Trend.m4FromTicks]]) runs over the maintained
-    * mart. The q180 posture extended to min/max-shaped state. */
-  private def m4ReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Incremental
-    val dir = replayStateDir(s, "q200", d)
-    val T0 = 1704067200L // epoch '2024-01-01'
-    val T1 = 1706745599L // epoch '2024-02-01' - 1
-    val facts = events(s, d)
-      .select(col("event_id"), col("event_type"),
-        expr("CAST(ts AS LONG)").as("__t"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-      .filter(col("__t").between(T0, T1))
-      .withColumn("bin", expr(s"((__t - ${T0}L) * 16L) div ${T1 - T0 + 1}L"))
-    val keys = Seq("event_type", "bin", "__t")
-    // carried-state fold (the q146/q162 idiom): versions still published,
-    // intermediate parquet read-backs removed
-    var state: Option[DataFrame] = None
-    (0 until 3).foreach { i =>
-      val part = Incremental.aggregate(
-        facts.filter(pmod(col("event_id"), lit(3)) === i), keys,
-        sums = Nil, mins = Seq("v"), maxs = Seq("v"))
-      val merged = (state match {
-        case None => part
-        case Some(prev) => Incremental.mergeAggregates(
-          Seq(prev, part), keys, sums = Nil, mins = Seq("v"), maxs = Seq("v"))
-      }).localCheckpoint()
-      merged.write.mode("overwrite").parquet(s"$dir/state_$i")
-      state = Some(merged)
-    }
-    Trend.m4FromTicks(
-      s.read.schema(state.get.schema) // r17 floor lever: skip re-inference
-        .parquet(s"$dir/state_2").select(col("event_type"), col("bin"),
-        col("__t"), col("n").as("__c"), col("min_v").as("__lo"),
-        col("max_v").as("__hi")),
-      Seq("event_type"))
-  }
-
   /** q203: leakage-safe group k-fold assignment
     * ([[graft.operators.Curate.groupKFold]]) — every event of a user
     * lands in the same CV fold because the fold is a pure SHA-lane
@@ -2964,15 +2647,6 @@ object SparkEntry {
       .agg(count_distinct(col("user_id")).as("n_groups"),
         count(lit(1)).as("n_rows"))
 
-  /** q204: Jensen–Shannon divergence between the even- and odd-user
-    * event-type distributions ([[graft.operators.Drift.jensenShannon]])
-    * — the bounded symmetric drift score (≤ ln 2, defined on partial
-    * support where PSI blows up); one 2×K cell aggregate, single-row
-    * totals broadcast back, log accumulation → round-6 lane. */
-  private def jsdQ(s: SparkSession, d: String): DataFrame =
-    Drift.jensenShannon(events(s, d),
-      pmod(col("user_id"), lit(2)) === 0, col("event_type"))
-
   /** q205: Chao1 vocabulary-richness estimate over the documents corpus
     * ([[graft.operators.Tokenize.chao1Richness]]) — observed types plus
     * the singleton/doubleton unseen-mass estimate (bias-corrected form);
@@ -2980,17 +2654,6 @@ object SparkEntry {
     * division (raw). */
   private def chao1Q(s: SparkSession, d: String): DataFrame =
     Tokenize.chao1Richness(documents(s, d), Text.tokens(col("text")))
-
-  /** q206: two-sample Kolmogorov–Smirnov D between urgent
-    * (1-URGENT/2-HIGH) and other orders' price distributions in exact
-    * cents ([[graft.operators.Drift.ksStatistic]]) — the bin-free
-    * distribution compare; the ECDF prefix is the q170 bucketed
-    * two-phase distributed prefix (no partition-less window), the
-    * argmax decided in cross-multiplied Longs, D one exact division. */
-  private def ksQ(s: SparkSession, d: String): DataFrame =
-    Drift.ksStatistic(orders(s, d),
-      expr("CAST(round(o_totalprice * 100) AS BIGINT)"),
-      col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
 
   /** q207: per-document n-gram repetition profile
     * ([[graft.operators.Tokenize.repetitionStats]], trigrams) — the
@@ -3005,7 +2668,7 @@ object SparkEntry {
     * naturalness screen: OLS of ln cnt on ln rank via five sufficient
     * statistics over the bucketed two-phase ranking (q170's prefix, no
     * partition-less window); sums round-6, slope/intercept derived from
-    * the rounded operands (q179 discipline). */
+    * the rounded operands. */
   private def zipfQ(s: SparkSession, d: String): DataFrame =
     Tokenize.zipfSlope(documents(s, d), Text.tokens(col("text")), topK = 100)
 
@@ -3020,8 +2683,8 @@ object SparkEntry {
       n = 2, threshold = 0.6)
 
   /** q210: replay-maintained KMV distinct-count state — the freshness
-    * posture (q180 sums, q200 min/max) extended to a THIRD state
-    * shape: bounded ORDER STATISTICS. Three document
+    * posture of the q117/q119 replays extended to another state shape:
+    * bounded ORDER STATISTICS. Three document
     * micro-batches fold per-lang token-lane sets through
     * [[graft.operators.Sketch.kmvTruncate]] (≤ k rows per lang
     * persisted per version); k-minima are exact under merge-truncate,
@@ -3032,7 +2695,7 @@ object SparkEntry {
     * state read; history never rescanned. */
   private def kmvReplayQ(s: SparkSession, d: String): DataFrame = {
     val dir = replayStateDir(s, "q210", d)
-    // carried-state fold (the q146/q162 idiom): versions still published,
+    // carried-state fold (the q146 idiom): versions still published,
     // intermediate parquet read-backs removed
     var state: Option[DataFrame] = None
     (0 until 3).foreach { i =>
@@ -3053,16 +2716,6 @@ object SparkEntry {
       s.read.schema(state.get.schema).parquet(s"$dir/state_2"),
       Seq("lang"), k = 256)
   }
-
-  /** q211: MAD-based robust outliers per event type
-    * ([[graft.operators.Trend.robustOutliers]], modified z > 3.5) — the
-    * Iglewicz–Hoaglin screen with a 50% breakdown point, vs the mean/
-    * stddev signal's masking under heavy contamination; two grouped
-    * exact-percentile passes, group-sized stats broadcast back, fact
-    * table never shuffled. */
-  private def robustOutliersQ(s: SparkSession, d: String): DataFrame =
-    Trend.robustOutliers(events(s, d), Seq("event_type"), col("event_id"),
-      expr("CAST(round(value * 100) AS BIGINT)"), threshold = 3.5)
 
   /** q213: one-step SCD-1 CHANGE FEED over the MAUDE ingest state
     * ([[graft.streaming.Streams.scd1ChangeFeed]] — the Snowflake STREAM /
@@ -3846,20 +3499,6 @@ object SparkEntry {
         unix_timestamp(col("ts")).as("ts_sec")),
       col("user_id"), col("ts_sec"), bucketBits = 10)
 
-  /** q108: EWMA smoothing of daily revenue per priority — the signal
-    * tier's recency-weighted companion to the q08 rolling z-score. α is
-    * 1/2 so every weight is a power of two: with integer-cent inputs
-    * the whole smoother is exact doubles and hash-matches the DuckDB
-    * lag-chain oracle bit-for-bit. One ordered window, scan-side array
-    * math ([[Trend.ewma]]). */
-  private def ewmaQ(s: SparkSession, d: String): DataFrame = {
-    val daily = orders(s, d).groupBy(
-        col("o_orderpriority").as("priority"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
-    Trend.ewma(daily, Seq("priority"), col("day"), col("cents"), window = 8)
-  }
-
   /** q109: k-anonymity / l-diversity audit over (event_type, day) as
     * the quasi-identifier and user_id as the sensitive attribute — the
     * governance-tier group-size screen ([[Privacy.kAnonymityAudit]]):
@@ -3888,18 +3527,6 @@ object SparkEntry {
         grouping(col("month")).cast("long").as("g_m"),
         count(lit(1)).as("n"),
         round(call_function("graft_hll", col("lane"), lit(6)), 4).as("est_users"))
-  }
-
-  /** q114: robust daily-revenue outlier screen per priority — MAD-based
-    * modified z-scores ([[Trend.robustOutlierStats]]), the heavy-tail-
-    * safe companion to q08's rolling mean/stddev signal (an extreme day
-    * inflates a stddev and hides itself; it barely moves a median). */
-  private def robustSignalsQ(s: SparkSession, d: String): DataFrame = {
-    val daily = orders(s, d).groupBy(
-        col("o_orderpriority").as("priority"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
-    Trend.robustOutlierStats(daily, Seq("priority"), col("cents"), z = 3.5)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -4009,10 +3636,8 @@ object SparkEntry {
     "q105_kmv_overlap"       -> (kmvOverlapQ _),
     "q106_incremental_agg"   -> (incrementalAggQ _),
     "q107_zone_map"          -> (zoneMapQ _),
-    "q108_ewma"              -> (ewmaQ _),
     "q109_k_anonymity"       -> (kAnonQ _),
     "q113_cube_distinct"     -> (cubeDistinctQ _),
-    "q114_robust_signals"    -> (robustSignalsQ _),
     "q115_variant_extract"   -> (variantExtract _),
     "q116_scd1_replay"       -> (scd1ReplayQ _),
     "q117_distinct_replay"   -> (distinctReplayQ _),
@@ -4056,44 +3681,26 @@ object SparkEntry {
     "q155_auto_mask"           -> (autoMaskQ _),
     "q157_epoch_shuffle"       -> (epochShuffleQ _),
     "q158_hopping_window"      -> (hoppingWindowQ _),
-    "q159_seasonal_decompose"  -> (seasonalDecomposeQ _),
-    "q160_cusum"               -> (cusumQ _),
     "q161_regression_trend"    -> (regressionTrendQ _),
-    "q162_alarm_replay"        -> (alarmReplayQ _),
     "q163_benford"             -> (benfordQ _),
     "q164_stratified_exact"    -> (stratifiedExactQ _),
-    "q167_drift"               -> (driftQ _),
-    "q168_keyness"             -> (keynessQ _),
-    "q169_interpolate"         -> (interpolateQ _),
     "q170_vocab_coverage"      -> (vocabCoverageQ _),
-    "q172_acf"                 -> (acfQ _),
     "q173_weighted_median"     -> (weightedMedianQ _),
     "q174_concentration"       -> (concentrationQ _),
     "q176_rfm"                 -> (rfmQ _),
     "q177_islands"             -> (islandsQ _),
-    "q178_twap"                -> (twapQ _),
-    "q179_cramers_v"           -> (cramersQ _),
-    "q180_drift_replay"        -> (driftReplayQ _),
-    "q185_theil_sen"           -> (theilSenQ _),
     "q187_phrase_search"       -> (phraseSearchQ _),
     "q188_rank_surface"        -> (rankSurfaceQ _),
-    "q189_m4_downsample"       -> (m4Q _),
     "q193_cat_profile"         -> (catProfileQ _),
-    "q195_mutual_info"         -> (mutualInfoQ _),
-    "q196_ols2"                -> (ols2Q _),
     "q197_consistent_hash"     -> (consistentHashQ _),
     "q198_equidepth_hist"      -> (equiDepthQ _),
     "q199_conversion_latency"  -> (convLatencyQ _),
-    "q200_m4_replay"           -> (m4ReplayQ _),
     "q203_group_kfold"         -> (groupKFoldQ _),
-    "q204_jensen_shannon"      -> (jsdQ _),
     "q205_chao1_richness"      -> (chao1Q _),
-    "q206_ks_statistic"        -> (ksQ _),
     "q207_repetition"          -> (repetitionQ _),
     "q208_zipf_slope"          -> (zipfQ _),
     "q209_containment"         -> (containmentQ _),
     "q210_kmv_replay"          -> (kmvReplayQ _),
-    "q211_robust_outliers"     -> (robustOutliersQ _),
     "q212_publish_interop"     -> (publishInteropQ _),
     "q213_change_feed"         -> (changeFeedQ _),
     "q214_scd2_snapshot"       -> (scd2SnapshotQ _),
@@ -4287,32 +3894,6 @@ object SparkEntry {
        |  min(a0) AS min_a, max(a0) AS max_a,
        |  min(b0) AS min_b, max(b0) AS max_b
        |FROM zv GROUP BY bucket""".stripMargin
-  }
-
-  /** q108 oracle: the EWMA numerator as an explicit 8-term lag chain
-    * (weights are 2^-k, written as exact decimal literals), denominator
-    * in the closed form `2 − 2^{1−n}` — identical exact-double terms to
-    * [[graft.operators.Trend.ewma]]'s array fold. */
-  private def ewmaOracle: String = {
-    val terms = (1 until 8).map { k =>
-      val wt = (BigDecimal(1) / BigDecimal(1L << k)).bigDecimal.toPlainString
-      s"coalesce(lag(cents, $k) OVER w, 0) * $wt"
-    }.mkString("\n    + ")
-    s"""WITH daily AS (
-       |  SELECT o_orderpriority AS priority,
-       |    strftime(o_orderdate, '%Y-%m-%d') AS day,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS cents
-       |  FROM orders GROUP BY 1, 2)
-       |SELECT priority, day, cents,
-       |  round((CAST(cents AS DOUBLE)
-       |    + $terms)
-       |   / (2 - pow(2.0, -(CAST(count(*) OVER wf AS DOUBLE) - 1))), 4)
-       |   AS ewma
-       |FROM daily
-       |WINDOW w AS (PARTITION BY priority ORDER BY day),
-       |  wf AS (PARTITION BY priority ORDER BY day
-       |         ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)""".stripMargin
   }
 
   /** q21 oracle: 60-bit SHA-lane SimHash, mirroring [[Dedup.simhashPairsSha]]
@@ -4782,75 +4363,6 @@ object SparkEntry {
        |  ELSE 255.0 / ((CAST(lane_k AS DOUBLE) + 1.0) / 1152921504606846977.0) END, 4) AS est_distinct
        |FROM kk""".stripMargin
 
-  /** q160/q162 shared oracle: the batch CUSUM pipeline — q162 gates
-    * its incrementally-maintained replay against this exact text. */
-  private val cusumOracle: String =
-        """WITH daily AS (
-          |  SELECT event_type,
-          |         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-          |         count(*) AS n
-          |  FROM events GROUP BY 1, 2
-          |), rk AS (
-          |  SELECT *, row_number() OVER (PARTITION BY event_type
-          |    ORDER BY day) AS rn
-          |  FROM daily
-          |), mu AS (
-          |  SELECT event_type, CAST(floor(avg(n)) AS DOUBLE) AS mu0
-          |  FROM rk WHERE rn <= 14 GROUP BY event_type
-          |), d2 AS (
-          |  SELECT d.event_type, d.day, d.n, mu.mu0,
-          |         d.n - mu.mu0 - 0.5 AS dev
-          |  FROM daily d JOIN mu USING (event_type)
-          |), s2 AS (
-          |  SELECT *, sum(dev) OVER (PARTITION BY event_type
-          |    ORDER BY day) AS s
-          |  FROM d2
-          |), c2 AS (
-          |  SELECT *, s - least(min(s) OVER (PARTITION BY event_type
-          |    ORDER BY day), 0.0) AS cusum
-          |  FROM s2
-          |)
-          |SELECT event_type,
-          |       strftime(DATE '1970-01-01' + CAST(day AS INTEGER),
-          |         '%Y-%m-%d') AS d,
-          |       CAST(n AS BIGINT) AS n, mu0, s, cusum,
-          |       CAST(cusum > 24.0 AS BIGINT) AS alarm
-          |FROM c2""".stripMargin
-
-  /** Shared by q167 (batch) and q180 (replay-maintained). */
-  private def driftOracle: String =
-    """WITH e AS (SELECT event_type, value,
-        |             (ts < TIMESTAMP '2024-01-16') AS ina FROM events),
-        |u AS (SELECT 'event_type' AS dim, event_type AS bin, ina FROM e
-        |      UNION ALL
-        |      SELECT 'value_band',
-        |             CAST(CAST(floor(value / 50) AS BIGINT) AS VARCHAR), ina
-        |      FROM e),
-        |t AS (SELECT dim, bin,
-        |        sum(CASE WHEN ina THEN 1 ELSE 0 END) AS n_a,
-        |        sum(CASE WHEN ina THEN 0 ELSE 1 END) AS n_b
-        |      FROM u GROUP BY 1, 2),
-        |w AS (SELECT dim, bin, n_a, n_b,
-        |        sum(n_a) OVER (PARTITION BY dim) AS ta,
-        |        sum(n_b) OVER (PARTITION BY dim) AS tb
-        |      FROM t),
-        |s AS (SELECT dim, bin, n_a, n_b, ta, tb,
-        |        CAST(n_a AS DOUBLE) / CAST(ta AS DOUBLE) AS p_a,
-        |        CAST(n_b AS DOUBLE) / CAST(tb AS DOUBLE) AS p_b,
-        |        CAST(n_a + n_b AS DOUBLE) * CAST(ta AS DOUBLE)
-        |          / CAST(ta + tb AS DOUBLE) AS ea,
-        |        CAST(n_a + n_b AS DOUBLE) * CAST(tb AS DOUBLE)
-        |          / CAST(ta + tb AS DOUBLE) AS eb
-        |      FROM w)
-        |SELECT dim, bin, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |       p_a, p_b,
-        |       CASE WHEN n_a > 0 AND n_b > 0
-        |            THEN round((p_a - p_b) * ln(p_a / p_b), 6) END AS psi_term,
-        |       (CAST(n_a AS DOUBLE) - ea) * (CAST(n_a AS DOUBLE) - ea) / ea
-        |         + (CAST(n_b AS DOUBLE) - eb) * (CAST(n_b AS DOUBLE) - eb) / eb
-        |         AS chi2_term
-        |FROM s""".stripMargin
-
   def oracleSql: Map[String, String] = Map(
     "q41_stratified_sample" ->
       s"""SELECT doc_id, lang FROM (
@@ -4906,8 +4418,6 @@ object SparkEntry {
     "q50_lsh_admit" -> lshAdmitOracle,
     "q51_zorder" -> zorderOracle,
     "q107_zone_map" -> zoneMapOracle,
-    "q108_ewma" -> ewmaOracle,
-
     "q109_k_anonymity" ->
       """SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
         |  count(*) AS n, count(DISTINCT user_id) AS l,
@@ -5529,30 +5039,6 @@ object SparkEntry {
          |FROM cnt c JOIN est e ON c.g_et = e.g_et AND c.g_m = e.g_m
          |  AND c.event_type IS NOT DISTINCT FROM e.event_type
          |  AND c.month IS NOT DISTINCT FROM e.month""".stripMargin,
-
-    // q114: med/mad interpolate exact integer-cent halves (double-exact),
-    // and the outlier compare is the multiplied form on identical doubles
-    "q114_robust_signals" ->
-      """WITH daily AS (
-        |  SELECT o_orderpriority AS priority,
-        |    strftime(o_orderdate, '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS cents
-        |  FROM orders GROUP BY 1, 2),
-        |med AS (SELECT priority,
-        |    quantile_cont(CAST(cents AS DOUBLE), 0.5) AS med
-        |  FROM daily GROUP BY 1),
-        |dev AS (SELECT d.priority, m.med,
-        |    abs(CAST(d.cents AS DOUBLE) - m.med) AS dev
-        |  FROM daily d JOIN med m ON d.priority = m.priority),
-        |mad AS (SELECT priority, quantile_cont(dev, 0.5) AS mad
-        |  FROM dev GROUP BY 1)
-        |SELECT v.priority, count(*) AS n,
-        |  round(max(v.med), 4) AS med, round(max(a.mad), 4) AS mad,
-        |  CAST(sum(CASE WHEN 0.6745 * v.dev > 3.5 * a.mad
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM dev v JOIN mad a ON v.priority = a.priority
-        |GROUP BY v.priority""".stripMargin,
 
     // q115: the Spark side round-trips every value through a VARIANT
     // (to_json → try_parse_json → try_variant_get); the oracle reads the
@@ -6212,54 +5698,6 @@ object SparkEntry {
         |       event_type, count(*) AS n, CAST(round(sum(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS v_sum
         |FROM x GROUP BY 1, 2, 3""".stripMargin,
 
-    // q159: the decomposition restated with the SAME exact arithmetic —
-    // integer frame sums cast to double, trend as one division, the
-    // detrended value scaled by lcm(1..7)=420 so the seasonal group sum
-    // adds integer-valued doubles (order-independent), seasonal and
-    // residual as single divisions/subtractions on identical operands;
-    // raw doubles hash-match with NO rounding
-    "q159_seasonal_decompose" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-        |         count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), t AS (
-        |  SELECT event_type, day, n,
-        |         CAST(sum(n) OVER f AS DOUBLE) AS s,
-        |         CAST(count(n) OVER f AS DOUBLE) AS k
-        |  FROM daily
-        |  WINDOW f AS (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |), d2 AS (
-        |  SELECT *, s / k AS trend,
-        |         420.0 * n - (420.0 / k) * s AS det420,
-        |         day % 7 AS pos
-        |  FROM t
-        |), s2 AS (
-        |  SELECT *, sum(det420) OVER (PARTITION BY event_type, pos) AS sdet,
-        |            count(*) OVER (PARTITION BY event_type, pos) AS cdet
-        |  FROM d2
-        |)
-        |SELECT event_type,
-        |       strftime(DATE '1970-01-01' + CAST(day AS INTEGER),
-        |         '%Y-%m-%d') AS d,
-        |       CAST(n AS BIGINT) AS n, trend,
-        |       sdet / (cdet * 420.0) AS seasonal,
-        |       n - trend - (sdet / (cdet * 420.0)) AS residual
-        |FROM s2""".stripMargin,
-
-    // q160: CUSUM restated — same prefix mean (floor of one exact
-    // division), same dyadic deviations, running sum then running min
-    // in SEPARATE CTEs (DuckDB rejects nested window calls); day is
-    // unique per series so the default RANGE frame equals Spark's ROWS
-    "q160_cusum" -> cusumOracle,
-
-    // q162: the SAME batch pipeline is the oracle for the replayed
-    // (incrementally maintained, disk-state) counts feeding CUSUM —
-    // maintained == recomputed IS the freshness claim
-    "q162_alarm_replay" -> cusumOracle,
-
     // q163: Benford restated — exact cents, first digit, the same nine
     // decimal-literal probabilities (cast to DOUBLE: DuckDB parses bare
     // decimals as DECIMAL), expected/chi2 as single ops on identical
@@ -6314,83 +5752,6 @@ object SparkEntry {
         |SELECT r.doc_id, r.lang, CAST(r.rk AS BIGINT) AS rk
         |FROM r JOIN a USING (lang) WHERE r.rk <= a.alloc""".stripMargin,
 
-    // q167: the same 2×K contingency tables (per dim), shares and
-    // expectations as the identical chained correctly-rounded float ops
-    // on integer counts (chi2 raw), PSI through round-6 (the ln lane).
-    "q167_drift" -> driftOracle,
-
-    // q180: identical oracle — the incrementally maintained contingency
-    // mart must serve the SAME metrics the batch recompute yields
-    // (maintained == recomputed IS the freshness claim, q162's posture)
-    "q180_drift_replay" -> driftOracle,
-
-    // q168: the same G² pipeline — cohort-conditional term counts, one
-    // vocabulary window for totals, integer cross-products for `leans`,
-    // expectations as the identical chained float ops, G² through
-    // round-6 (the ln lane)
-    "q168_keyness" ->
-      """WITH toks AS (SELECT (CAST(substr(source, 4) AS INT) < 10) AS a,
-        |                unnest(str_split(text, ' ')) AS term
-        |              FROM documents),
-        |t AS (SELECT term, sum(CASE WHEN a THEN 1 ELSE 0 END) AS n_a,
-        |             sum(CASE WHEN a THEN 0 ELSE 1 END) AS n_b
-        |      FROM toks GROUP BY 1),
-        |w AS (SELECT *, sum(n_a) OVER () AS ta, sum(n_b) OVER () AS tb
-        |      FROM t),
-        |f AS (SELECT * FROM w WHERE n_a + n_b >= 20),
-        |s AS (SELECT term, n_a, n_b, ta, tb,
-        |        CAST(n_a + n_b AS DOUBLE) * CAST(ta AS DOUBLE)
-        |          / CAST(ta + tb AS DOUBLE) AS ea,
-        |        CAST(n_a + n_b AS DOUBLE) * CAST(tb AS DOUBLE)
-        |          / CAST(ta + tb AS DOUBLE) AS eb
-        |      FROM f)
-        |SELECT term, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |       CASE WHEN n_a * tb > n_b * ta THEN 'A'
-        |            WHEN n_a * tb < n_b * ta THEN 'B' ELSE '=' END AS leans,
-        |       round(2 * (CASE WHEN n_a > 0 THEN CAST(n_a AS DOUBLE)
-        |                    * ln(CAST(n_a AS DOUBLE) / ea) ELSE 0 END
-        |                + CASE WHEN n_b > 0 THEN CAST(n_b AS DOUBLE)
-        |                    * ln(CAST(n_b AS DOUBLE) / eb) ELSE 0 END), 6)
-        |         AS g2
-        |FROM s""".stripMargin,
-
-    // q169: the identical spine + bracketing-observation windows (the
-    // q125 IGNORE NULLS idiom, both frame directions); the interpolation
-    // numerator is BIGINT-exact, one division + one addition — raw
-    // doubles hash-match
-    "q169_interpolate" ->
-      """WITH daily AS (SELECT o_orderpriority AS priority,
-        |        CAST(floor(epoch(o_orderdate) / 86400) AS BIGINT) AS t,
-        |        count(*) AS n FROM orders GROUP BY 1, 2),
-        |r AS (SELECT priority, min(t) AS t0, max(t) AS t1
-        |      FROM daily GROUP BY 1),
-        |spine AS (SELECT priority, unnest(generate_series(t0, t1)) AS t
-        |          FROM r),
-        |j AS (SELECT s.priority, s.t, d.n FROM spine s
-        |      LEFT JOIN daily d ON s.priority = d.priority AND s.t = d.t),
-        |w AS (SELECT priority, t, n,
-        |        last_value(n IGNORE NULLS) OVER wb AS pv,
-        |        last_value(CASE WHEN n IS NOT NULL THEN t END IGNORE NULLS)
-        |          OVER wb AS pt,
-        |        first_value(n IGNORE NULLS) OVER wf AS nv,
-        |        first_value(CASE WHEN n IS NOT NULL THEN t END IGNORE NULLS)
-        |          OVER wf AS nt
-        |      FROM j
-        |      WINDOW wb AS (PARTITION BY priority ORDER BY t
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |             wf AS (PARTITION BY priority ORDER BY t
-        |        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT priority, t, CAST(n IS NOT NULL AS BIGINT) AS observed,
-        |       CAST(n AS BIGINT) AS n,
-        |       CASE WHEN n IS NOT NULL THEN CAST(n AS DOUBLE)
-        |            WHEN pv IS NULL THEN CAST(nv AS DOUBLE)
-        |            WHEN nv IS NULL THEN CAST(pv AS DOUBLE)
-        |            ELSE CAST(pv AS DOUBLE)
-        |              + CAST((nv - pv) * (t - pt) AS DOUBLE)
-        |                / CAST(nt - pt AS DOUBLE)
-        |       END AS v_interp
-        |FROM w""".stripMargin,
-
     // q170: same rank + running-sum over the vocabulary, the minimal-
     // prefix membership as the identical cross-multiplied integer
     // comparison
@@ -6408,25 +5769,6 @@ object SparkEntry {
         |      FROM c)
         |SELECT term, cnt, rk, cum_cnt, total_cnt
         |FROM w WHERE 100 * (cum_cnt - cnt) < 95 * total_cnt""".stripMargin,
-
-    // q172: the same lag columns unpivoted by UNION (DuckDB's stack),
-    // corr dropping NULL-lagged pairs on both sides, round-6 moments
-    "q172_acf" -> {
-      val legs = (1 to 7).map(k =>
-        s"""SELECT event_type, CAST($k AS BIGINT) AS lag,
-           |        CAST(n AS DOUBLE) AS v, CAST(l$k AS DOUBLE) AS lv FROM l"""
-          .stripMargin).mkString("\n      UNION ALL\n      ")
-      s"""WITH daily AS (SELECT event_type,
-        |        CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-        |        count(*) AS n FROM events GROUP BY 1, 2),
-        |l AS (SELECT event_type, n,
-        |        ${(1 to 7).map(k => s"lag(n, $k) OVER w AS l$k").mkString(", ")}
-        |      FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-        |u AS ($legs)
-        |SELECT event_type, lag, CAST(count(lv) AS BIGINT) AS n_pairs,
-        |       round(corr(v, lv), 6) AS acf
-        |FROM u GROUP BY 1, 2""".stripMargin
-    },
 
     // q173: identical distinct-value weight curve and integer crossing
     // test — both engines land on the same row with no float anywhere
@@ -6516,77 +5858,6 @@ object SparkEntry {
         |       CAST(sum(n) AS BIGINT) AS n_orders
         |FROM g GROUP BY priority, grp""".stripMargin,
 
-    // q178: same micros lead() durations under the same tie-break; the
-    // product sum rides round-6
-    "q178_twap" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) AS t, value AS v,
-        |             event_id FROM events),
-        |l AS (SELECT event_type, v,
-        |        lead(t) OVER (PARTITION BY event_type
-        |          ORDER BY t, event_id) - t AS dt
-        |      FROM e)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_intervals,
-        |       CAST(sum(dt) AS BIGINT) AS total_dt,
-        |       round(sum(v * CAST(dt AS DOUBLE)) / CAST(sum(dt) AS DOUBLE), 6)
-        |         AS twap
-        |FROM l WHERE dt IS NOT NULL GROUP BY 1""".stripMargin,
-
-    // q179: the same cells/marginals over the FULL R×C grid (a
-    // zero-observed cell still contributes exp to chi2); chi2 rounded
-    // 6, V from the ROUNDED chi2 via correctly-rounded sqrt/division
-    "q179_cramers_v" ->
-      """WITH cells AS (SELECT event_type AS r,
-        |        (CAST(floor(epoch(ts) / 86400) AS BIGINT) % 7) AS c,
-        |        count(*) AS n FROM events GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(n) AS rt FROM cells GROUP BY 1),
-        |ct AS (SELECT c, sum(n) AS ct FROM cells GROUP BY 1),
-        |t AS (SELECT sum(n) AS t, count(DISTINCT r) AS rl,
-        |             count(DISTINCT c) AS cl FROM cells),
-        |j AS (SELECT coalesce(cells.n, 0) AS n, rt.rt, ct.ct,
-        |             t.t, t.rl, t.cl
-        |      FROM rt CROSS JOIN ct
-        |      LEFT JOIN cells ON cells.r = rt.r AND cells.c = ct.c
-        |      CROSS JOIN t),
-        |a AS (SELECT t, rl, cl,
-        |        round(sum((CAST(n AS DOUBLE)
-        |            - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)
-        |              / CAST(t AS DOUBLE))
-        |          * (CAST(n AS DOUBLE)
-        |            - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)
-        |              / CAST(t AS DOUBLE))
-        |          / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)
-        |              / CAST(t AS DOUBLE))), 6) AS chi2
-        |      FROM j GROUP BY 1, 2, 3)
-        |SELECT CAST(t AS BIGINT) AS n, CAST(rl AS BIGINT) AS r_levels,
-        |       CAST(cl AS BIGINT) AS c_levels, chi2,
-        |       sqrt(chi2 / CAST(t * least(rl - 1, cl - 1) AS DOUBLE))
-        |         AS cramers_v
-        |FROM a""".stripMargin,
-
-    // q185: same pair slopes in integer micro-units under the same
-    // explicit pmod floor division, same lower-median rank — no float
-    "q185_theil_sen" ->
-      """WITH m AS (SELECT o_orderpriority AS priority,
-        |        CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1
-        |          AS BIGINT) AS t,
-        |        CAST(count(*) AS BIGINT) AS v
-        |      FROM orders GROUP BY 1, 2),
-        |p AS (SELECT a.priority, 1000000 * (b.v - a.v) AS dy,
-        |        b.t - a.t AS dx
-        |      FROM m a JOIN m b ON a.priority = b.priority AND a.t < b.t),
-        |s AS (SELECT priority,
-        |        (dy - ((dy % dx) + dx) % dx) // dx AS slope FROM p),
-        |r AS (SELECT priority, slope,
-        |        row_number() OVER (PARTITION BY priority ORDER BY slope)
-        |          AS rk,
-        |        count(*) OVER (PARTITION BY priority) AS np FROM s),
-        |n AS (SELECT priority, count(*) AS n_points FROM m GROUP BY 1)
-        |SELECT r.priority, CAST(n_points AS BIGINT) AS n_points,
-        |       CAST(np AS BIGINT) AS n_pairs,
-        |       CAST(slope AS BIGINT) AS slope_micro
-        |FROM r JOIN n USING (priority)
-        |WHERE rk = (np + 1) // 2""".stripMargin,
-
     // q187: the same adjacent-trigram start positions from DuckDB's list
     // comprehension (1-indexed); exact integer hit counts
     "q187_phrase_search" ->
@@ -6610,102 +5881,6 @@ object SparkEntry {
         |       CAST(ntile(4) OVER w AS BIGINT) AS tile
         |FROM o WINDOW w AS (PARTITION BY priority
         |  ORDER BY cents, o_orderkey)""".stripMargin,
-
-    // q189: identical integer bin arithmetic; arg_min/arg_max are
-    // tie-free because the (type, bin, t) grid is pre-collapsed
-    "q189_m4_downsample" ->
-      """WITH e AS (SELECT event_type,
-        |        CAST(floor(epoch(ts)) AS BIGINT) AS t,
-        |        CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |b AS (SELECT event_type, min(t) AS t0, max(t) AS t1
-        |      FROM e GROUP BY 1),
-        |x AS (SELECT e.event_type, ((t - t0) * 16) // (t1 - t0 + 1) AS bin,
-        |        t, v
-        |      FROM e JOIN b ON e.event_type = b.event_type),
-        |g1 AS (SELECT event_type, bin, t, count(*) AS c,
-        |         min(v) AS lo, max(v) AS hi
-        |       FROM x GROUP BY 1, 2, 3)
-        |SELECT event_type, CAST(bin AS BIGINT) AS bin,
-        |       CAST(sum(c) AS BIGINT) AS n,
-        |       CAST(arg_min(t, t) AS BIGINT) AS t_first,
-        |       CAST(arg_min(lo, t) AS BIGINT) AS v_first,
-        |       CAST(arg_max(t, t) AS BIGINT) AS t_last,
-        |       CAST(arg_max(hi, t) AS BIGINT) AS v_last,
-        |       CAST(min(lo) AS BIGINT) AS v_min,
-        |       CAST(max(hi) AS BIGINT) AS v_max
-        |FROM g1 GROUP BY 1, 2""".stripMargin,
-
-    // q195: same observed-cell MI sum and marginal entropies, same
-    // round-6 lane, nmi from the ROUNDED values
-    "q195_mutual_info" ->
-      """WITH cells AS (SELECT event_type AS x,
-        |        (CAST(floor(epoch(ts) / 86400) AS BIGINT) % 7) AS y,
-        |        count(*) AS n
-        |      FROM events GROUP BY 1, 2),
-        |xt AS (SELECT x, sum(n) AS xt FROM cells GROUP BY 1),
-        |yt AS (SELECT y, sum(n) AS yt FROM cells GROUP BY 1),
-        |t AS (SELECT sum(n) AS t, count(DISTINCT x) AS xl,
-        |             count(DISTINCT y) AS yl FROM cells),
-        |mi AS (SELECT t, xl, yl,
-        |        round(sum((CAST(n AS DOUBLE) / CAST(t AS DOUBLE))
-        |          * ln(CAST(n AS DOUBLE) / CAST(t AS DOUBLE)
-        |              * CAST(t AS DOUBLE) * CAST(t AS DOUBLE)
-        |              / (CAST(xt AS DOUBLE) * CAST(yt AS DOUBLE)))), 6)
-        |          AS mi
-        |       FROM cells JOIN xt USING (x) JOIN yt USING (y)
-        |       CROSS JOIN t GROUP BY 1, 2, 3),
-        |hx AS (SELECT round(sum(-(CAST(xt AS DOUBLE) / CAST(t AS DOUBLE))
-        |          * ln(CAST(xt AS DOUBLE) / CAST(t AS DOUBLE))), 6) AS h_x
-        |       FROM xt CROSS JOIN t),
-        |hy AS (SELECT round(sum(-(CAST(yt AS DOUBLE) / CAST(t AS DOUBLE))
-        |          * ln(CAST(yt AS DOUBLE) / CAST(t AS DOUBLE))), 6) AS h_y
-        |       FROM yt CROSS JOIN t)
-        |SELECT CAST(t AS BIGINT) AS n, CAST(xl AS BIGINT) AS x_levels,
-        |       CAST(yl AS BIGINT) AS y_levels, mi, h_x, h_y,
-        |       CASE WHEN least(h_x, h_y) > 0.0
-        |            THEN round(mi / least(h_x, h_y), 6) END AS nmi
-        |FROM mi CROSS JOIN hx CROSS JOIN hy""".stripMargin,
-
-    // q196: the same nine exact-Long moments and the same Cramer
-    // determinant dag (identical parenthesization); betas round-6
-    "q196_ols2" ->
-      """WITH b AS (SELECT l_returnflag AS rf,
-        |        CAST(l_quantity AS BIGINT) AS x1,
-        |        CAST(round(l_discount * 100) AS BIGINT) AS x2,
-        |        CAST(round(l_extendedprice * 100) AS BIGINT) AS y
-        |      FROM lineitem),
-        |m AS (SELECT rf, count(*) AS n,
-        |        CAST(sum(x1) AS BIGINT) AS s1,
-        |        CAST(sum(x2) AS BIGINT) AS s2,
-        |        CAST(sum(y) AS BIGINT) AS sy,
-        |        CAST(sum(x1 * x1) AS BIGINT) AS s11,
-        |        CAST(sum(x2 * x2) AS BIGINT) AS s22,
-        |        CAST(sum(x1 * x2) AS BIGINT) AS s12,
-        |        CAST(sum(x1 * y) AS BIGINT) AS s1y,
-        |        CAST(sum(x2 * y) AS BIGINT) AS s2y
-        |      FROM b GROUP BY 1),
-        |c AS (SELECT rf, n,
-        |        CAST(n AS DOUBLE) AS dn, CAST(s1 AS DOUBLE) AS d1,
-        |        CAST(s2 AS DOUBLE) AS d2, CAST(sy AS DOUBLE) AS dy,
-        |        CAST(s11 AS DOUBLE) AS d11, CAST(s22 AS DOUBLE) AS d22,
-        |        CAST(s12 AS DOUBLE) AS d12, CAST(s1y AS DOUBLE) AS d1y,
-        |        CAST(s2y AS DOUBLE) AS d2y
-        |      FROM m),
-        |e AS (SELECT rf, n,
-        |        dn * (d11 * d22 - d12 * d12) - d1 * (d1 * d22 - d12 * d2)
-        |          + d2 * (d1 * d12 - d11 * d2) AS det,
-        |        dy * (d11 * d22 - d12 * d12) - d1 * (d1y * d22 - d12 * d2y)
-        |          + d2 * (d1y * d12 - d11 * d2y) AS det0,
-        |        dn * (d1y * d22 - d12 * d2y) - dy * (d1 * d22 - d12 * d2)
-        |          + d2 * (d1 * d2y - d1y * d2) AS det1,
-        |        dn * (d11 * d2y - d1y * d12) - d1 * (d1 * d2y - d1y * d2)
-        |          + dy * (d1 * d12 - d11 * d2) AS det2
-        |      FROM c)
-        |SELECT rf AS l_returnflag, CAST(n AS BIGINT) AS n,
-        |       CASE WHEN det <> 0.0 THEN round(det0 / det, 6) END AS b0,
-        |       CASE WHEN det <> 0.0 THEN round(det1 / det, 6) END AS b1,
-        |       CASE WHEN det <> 0.0 THEN round(det2 / det, 6) END AS b2
-        |FROM e""".stripMargin,
 
     // q197: both rings rebuilt from sha256 over range() CTEs (the q25
     // hyperplane pattern); successor = arg_min over pt >= h (ring
@@ -6758,30 +5933,6 @@ object SparkEntry {
         |       CAST(max(c) AS BIGINT) AS v_max
         |FROM x GROUP BY 1""".stripMargin,
 
-    // q200: one-shot SQL over the same FIXED viewport — the per-tick
-    // grid is mergeable (counts sum, min/max re-min/max), so the
-    // replay-maintained mart reduces to this exactly
-    "q200_m4_replay" ->
-      """WITH e AS (SELECT event_type,
-        |        CAST(floor(epoch(ts)) AS BIGINT) AS t,
-        |        CAST(round(value * 100) AS BIGINT) AS v FROM events
-        |      WHERE CAST(floor(epoch(ts)) AS BIGINT)
-        |        BETWEEN 1704067200 AND 1706745599),
-        |x AS (SELECT event_type,
-        |        ((t - 1704067200) * 16) // 2678400 AS bin, t, v FROM e),
-        |g1 AS (SELECT event_type, bin, t, count(*) AS c,
-        |         min(v) AS lo, max(v) AS hi
-        |       FROM x GROUP BY 1, 2, 3)
-        |SELECT event_type, CAST(bin AS BIGINT) AS bin,
-        |       CAST(sum(c) AS BIGINT) AS n,
-        |       CAST(arg_min(t, t) AS BIGINT) AS t_first,
-        |       CAST(arg_min(lo, t) AS BIGINT) AS v_first,
-        |       CAST(arg_max(t, t) AS BIGINT) AS t_last,
-        |       CAST(arg_max(hi, t) AS BIGINT) AS v_last,
-        |       CAST(min(lo) AS BIGINT) AS v_min,
-        |       CAST(max(hi) AS BIGINT) AS v_max
-        |FROM g1 GROUP BY 1, 2""".stripMargin,
-
     // q203: the identical SHA fold lane rebuilt in SQL (lane is
     // non-negative, so % == pmod)
     "q203_group_kfold" ->
@@ -6792,40 +5943,6 @@ object SparkEntry {
         |SELECT fold, CAST(count(DISTINCT user_id) AS BIGINT) AS n_groups,
         |       CAST(count(*) AS BIGINT) AS n_rows
         |FROM f GROUP BY 1""".stripMargin,
-
-    // q204: the same 2xK cells and per-side x*ln(x/m) terms; jsd_norm
-    // divides the ROUNDED jsd by ln(2) (same correctly-rounded double
-    // in both engines)
-    "q204_jensen_shannon" ->
-      """WITH cells AS (SELECT event_type AS c,
-        |        sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS p,
-        |        sum(CASE WHEN user_id % 2 = 0 THEN 0 ELSE 1 END) AS q
-        |      FROM events GROUP BY 1),
-        |t AS (SELECT sum(p) AS n_p, sum(q) AS n_q, count(*) AS k_cats
-        |      FROM cells),
-        |j AS (SELECT CAST(t.n_p AS BIGINT) AS n_p,
-        |        CAST(t.n_q AS BIGINT) AS n_q,
-        |        CAST(t.k_cats AS BIGINT) AS k_cats,
-        |        CASE WHEN min(t.n_p) > 0 AND min(t.n_q) > 0 THEN
-        |          round(sum(
-        |            CASE WHEN cells.p > 0 THEN
-        |              (CAST(cells.p AS DOUBLE) / CAST(t.n_p AS DOUBLE))
-        |              * ln((CAST(cells.p AS DOUBLE) / CAST(t.n_p AS DOUBLE))
-        |                / ((CAST(cells.p AS DOUBLE) / CAST(t.n_p AS DOUBLE)
-        |                    + CAST(cells.q AS DOUBLE)
-        |                      / CAST(t.n_q AS DOUBLE)) / 2.0))
-        |            ELSE 0.0 END
-        |          + CASE WHEN cells.q > 0 THEN
-        |              (CAST(cells.q AS DOUBLE) / CAST(t.n_q AS DOUBLE))
-        |              * ln((CAST(cells.q AS DOUBLE) / CAST(t.n_q AS DOUBLE))
-        |                / ((CAST(cells.p AS DOUBLE) / CAST(t.n_p AS DOUBLE)
-        |                    + CAST(cells.q AS DOUBLE)
-        |                      / CAST(t.n_q AS DOUBLE)) / 2.0))
-        |            ELSE 0.0 END) / 2.0, 6) END AS jsd
-        |      FROM cells CROSS JOIN t
-        |      GROUP BY t.n_p, t.n_q, t.k_cats)
-        |SELECT n_p, n_q, k_cats, jsd, round(jsd / ln(2.0), 6) AS jsd_norm
-        |FROM j""".stripMargin,
 
     // q205: same type-count fold; chao1 is one exact-integer-operand
     // division (raw)
@@ -6845,29 +5962,6 @@ object SparkEntry {
         |         + CAST(f1 * (f1 - 1) AS DOUBLE)
         |           / CAST(2 * (f2 + 1) AS DOUBLE) AS chao1
         |FROM a""".stripMargin,
-
-    // q206: the oracle takes the plain full-sort window (oracle-side
-    // only); the argmax is the same exact Long cross-multiplication
-    "q206_ks_statistic" ->
-      """WITH g AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-        |        sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                 THEN 1 ELSE 0 END) AS ca,
-        |        sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                 THEN 0 ELSE 1 END) AS cb
-        |      FROM orders GROUP BY 1),
-        |t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
-        |w AS (SELECT sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS cuma,
-        |        sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |          PRECEDING AND CURRENT ROW) AS cumb
-        |      FROM g)
-        |SELECT CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
-        |       CAST(count(*) AS BIGINT) AS n_values,
-        |       CASE WHEN t.na > 0 AND t.nb > 0 THEN
-        |         CAST(max(abs(cuma * t.nb - cumb * t.na)) AS DOUBLE)
-        |           / (CAST(t.na AS DOUBLE) * CAST(t.nb AS DOUBLE))
-        |       END AS d_stat
-        |FROM w CROSS JOIN t GROUP BY t.na, t.nb""".stripMargin,
 
     // q207: the oracle takes the explode+groupBy shape (oracle-side
     // only; the engine folds per doc scan-side) — max count == max
@@ -7316,25 +6410,6 @@ object SparkEntry {
     // verbatim (k-minima exact under merge-truncate)
     "q210_kmv_replay" -> kmvOracle,
 
-    // q211: same two-median derivation; medians interpolate on exact
-    // integer cents (quantile_cont == Spark percentile on dyadic
-    // midpoints); membership decided on the raw modified z
-    "q211_robust_outliers" ->
-      """WITH v AS (SELECT event_type, event_id AS id,
-        |        CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |m AS (SELECT event_type, quantile_cont(CAST(v AS DOUBLE), 0.5)
-        |        AS med FROM v GROUP BY 1),
-        |d AS (SELECT v.event_type, v.id, v.v, m.med,
-        |        abs(CAST(v.v AS DOUBLE) - m.med) AS ad
-        |      FROM v JOIN m USING (event_type)),
-        |md AS (SELECT event_type, quantile_cont(ad, 0.5) AS mad
-        |       FROM d GROUP BY 1)
-        |SELECT d.event_type, d.id, d.v, d.med, md.mad,
-        |       round(0.6745 * (CAST(d.v AS DOUBLE) - d.med) / md.mad, 6)
-        |         AS modified_z
-        |FROM d JOIN md USING (event_type)
-        |WHERE md.mad > 0.0
-        |  AND abs(0.6745 * (CAST(d.v AS DOUBLE) - d.med) / md.mad) > 3.5""".stripMargin,
     // q213: the feed recomputed flat from the base columns — per key,
     // the keep-latest winner among drops {0,1} vs among {0,1,2}; a
     // different (or newly appearing) winner IS the change row, with the

@@ -44,10 +44,6 @@ object ShaLanes {
   /** 60-bit lane of `sha256(input)` (first 15 hex chars by default). */
   def lane(input: Column, start: Int = 1): Column = hexLane(sha2(input, 256), start)
 
-  /** Lane mapped to [-1, 1) as a DOUBLE (hyperplane components). */
-  def signedUnit(input: Column): Column =
-    lane(input) / lit(HalfLane) - lit(1.0)
-
   // ------------------------------------------------------- DuckDB SQL text
 
   /** DuckDB: parse 15 hex chars of `hexSql` starting at `start` as BIGINT. */

@@ -74,13 +74,6 @@ object Vec {
     call_function("graft_vector_sum", vec)
   }
 
-  /** Squared L2 distance (useful for IVF assignment without the sqrt). */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   // ---------------------------------------------------------- quantization
 
   /** Per-vector symmetric int8 scale: max |x_i| (0.0 for the zero/empty

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{F, ShaLanes, Text, Vec}
+import graft.functions.{ShaLanes, Text, Vec}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.Vec
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**

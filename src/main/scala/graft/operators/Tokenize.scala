@@ -219,8 +219,7 @@ object Tokenize {
    * Ranking is [[rankedTermCounts]]'s two-phase bucketed prefix (no
    * partition-less window); the fit aggregates the five OLS sufficient
    * statistics (n, Σx, Σy, Σx², Σxy) in ONE pass over the topK-sized
-   * head — the q196 sufficient-statistics shape with logs in place of
-   * integer moments. The sums stay RAW and only the final
+   * head, with logs in place of integer moments. The sums stay RAW and only the final
    * slope/intercept round to 6dp (the chi2 lane: rounding the inputs
    * would bias the fit by the rounding scale itself — measured 1e-6 on
    * an exact cnt = K/r spectrum — while accumulation-order noise on the

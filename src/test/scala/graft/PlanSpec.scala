@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /**
  * Physical-plan regression tests: the scale properties SURVEY.md §4 calls
@@ -206,6 +206,19 @@ class PlanSpec extends SparkSpec {
     val oracles = SparkEntry.oracleSql.keySet
     assert((oracles -- queries).isEmpty, s"orphan oracles: ${oracles -- queries}")
     assert((queries -- oracles).isEmpty, s"unoracled queries: ${queries -- oracles}")
+    // and a retired query takes its citations along: every qNN token in
+    // the main sources must name a query the catalog still declares
+    val live = queries.map(_.takeWhile(_ != '_'))
+    val cite = """\bq[0-9]{2,3}\b""".r
+    val stale = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.flatMap {
+          case (line, i) =>
+            cite.findAllIn(line).filterNot(live).map(q => s"$f:${i + 1}: $q")
+        }
+      }
+    assert(stale.isEmpty, s"citations of retired queries:\n${stale.mkString("\n")}")
   }
 
   test("CAPABILITIES.md is current: it equals what graft.Capabilities renders") {
@@ -214,6 +227,9 @@ class PlanSpec extends SparkSpec {
     val committed = java.nio.file.Files.readString(
       java.nio.file.Paths.get("CAPABILITIES.md"))
     val rendered = Capabilities.render()
+    // every [[...]] link must resolve into plain text, wrapped ones too
+    val rawLinks = rendered.linesIterator.filter(_.contains("[[")).toSeq
+    assert(rawLinks.isEmpty, s"unresolved [[ links in rows:\n${rawLinks.mkString("\n")}")
     if (rendered != committed) {
       val (have, want) = (committed.linesIterator.toSet, rendered.linesIterator.toSet)
       fail("CAPABILITIES.md is stale: regenerate with sbt \"runMain graft.Capabilities\"\n" +
@@ -679,14 +695,6 @@ class PlanSpec extends SparkSpec {
       p.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
   }
 
-  test("q108 ewma: grouped days then ONE ordered window, no joins") {
-    val p = plan("q108_ewma")
-    assert(!p.toLowerCase.contains("join"))
-    assert(countOf(p, "Window") === 1, s"exactly one window exec:\n$p")
-    assert(countOf(p, "Exchange hashpartitioning") <= 2,
-      p.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
-  }
-
   test("q109 k-anonymity: one QI-keyed aggregate pipeline, no joins, no window") {
     val p = plan("q109_k_anonymity")
     assert(!p.toLowerCase.contains("join") && !p.contains("Window"))
@@ -699,13 +707,6 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Expand"), s"expected cube Expand:\n$p")
     assert(p.contains("partial_graft_hll"), s"sketch must aggregate map-side:\n$p")
     assert(!p.toLowerCase.contains("join"))
-  }
-
-  test("q114 robust stats: per-group medians broadcast back; values never self-join") {
-    val p = plan("q114_robust_signals")
-    assert(countOf(p, "BroadcastHashJoin") >= 2,
-      s"med and mad should come back as broadcasts:\n$p")
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"))
   }
 
   test("q139/q141 graded eval: bounded top-k ranking, broadcast centroid probe") {
@@ -769,9 +770,8 @@ class PlanSpec extends SparkSpec {
     // the round-10 tier's shared scale contract: the only nested-loop
     // joins are broadcast SINGLE-ROW scalar folds (bounds, totals,
     // thresholds — the q121 idiom)
-    Seq("q164_stratified_exact", "q167_drift", "q168_keyness",
-      "q170_vocab_coverage", "q173_weighted_median", "q174_concentration",
-      "q176_rfm", "q179_cramers_v").foreach { q =>
+    Seq("q164_stratified_exact", "q170_vocab_coverage",
+      "q173_weighted_median", "q174_concentration", "q176_rfm").foreach { q =>
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
     }
@@ -789,30 +789,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q181-q187 tier: every join equi; no cartesian anywhere") {
-    Seq("q185_theil_sen", "q187_phrase_search")
-      .foreach { q =>
-        val p = plan(q)
-        assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
-        assert(!p.contains("BroadcastNestedLoopJoin"),
-          s"$q has a nested-loop join")
-      }
+    val p = plan("q187_phrase_search")
+    assert(!p.contains("CartesianProduct"), "q187 has a cartesian product")
+    assert(!p.contains("BroadcastNestedLoopJoin"), "q187 has a nested-loop join")
   }
 
   test("q188-q192 tier: stats broadcast back; facts never self-join") {
     // rank surface: one window, no join at all
     val p188 = plan("q188_rank_surface")
     assert(countOf(p188, "Window") === 1 && !p188.toLowerCase.contains("join"))
-    assert(!plan("q189_m4_downsample").contains("CartesianProduct"),
-      "q189 cartesian")
   }
 
   test("q193-q199 tier: scalar folds broadcast; q196/q197 join-free shapes") {
-    // two-feature OLS: facts reduce to ONE aggregate exchange; the
-    // Cramer solve is scan-side on group rows — no join, no window
-    val p196 = plan("q196_ols2")
-    assert(!p196.toLowerCase.contains("join") && !p196.contains("Window"))
-    assert(countOf(p196, "Exchange hashpartitioning") <= 1,
-      p196.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
     // consistent hashing: ownership is a scan-side array HOF — the only
     // exchange is the final movement-matrix aggregate
     val p197 = plan("q197_consistent_hash")
@@ -823,32 +811,19 @@ class PlanSpec extends SparkSpec {
     val p198 = plan("q198_equidepth_hist")
     assert(!p198.contains("Window") && (p198.contains("BroadcastExchange")
       || p198.contains("BroadcastNestedLoopJoin")))
-    Seq("q193_cat_profile", "q195_mutual_info",
-      "q199_conversion_latency").foreach { q =>
+    Seq("q193_cat_profile", "q199_conversion_latency").foreach { q =>
       assert(!plan(q).contains("CartesianProduct"), s"$q cartesian")
     }
   }
 
-  test("q204: stats-tier joins are broadcast-only, never sort-merge") {
-    // marginals/totals are label-sized or single-row — every join must
-    // be a broadcast (hash over matched labels, NLJ only for the
-    // single-row total folds); a SortMergeJoin here would shuffle the
-    // cell table for no reason
-    val p = plan("q204_jensen_shannon")
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"expected broadcast-only stats joins:\n$p")
-  }
-
   test("q206/q208: the two-phase prefix joins its bucket offsets broadcast") {
-    // offsets are ≤64 driver rows broadcast back; the value/term table
-    // must never shuffle for the offset join, and the window must be
+    // offsets are ≤64 driver rows broadcast back; the term table must
+    // never shuffle for the offset join, and the window must be
     // __bk-partitioned (the partition-less ban is pinned globally)
-    Seq("q206_ks_statistic", "q208_zipf_slope").foreach { q =>
-      val p = plan(q)
-      assert(p.contains("BroadcastHashJoin"), s"$q: offsets not broadcast:\n$p")
-      assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-        s"$q: unexpected heavy join:\n$p")
-    }
+    val p = plan("q208_zipf_slope")
+    assert(p.contains("BroadcastHashJoin"), s"offsets not broadcast:\n$p")
+    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
+      s"unexpected heavy join:\n$p")
   }
 
   test("q209 containment: shingle self-join shuffled-hash, counts broadcast") {

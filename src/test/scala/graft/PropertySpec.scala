@@ -293,26 +293,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("theilSen == a BigInt-rational reference median on random series") {
-    import graft.operators.Trend
-    val pts = sample(Gen.zip(Gen.choose(0L, 40L), Gen.choose(-500L, 500L)), 60)
-      .distinct.groupBy(_._1).map(_._2.head).toSeq // unique t per point
-    val got = Trend.theilSen(pts.map(p => ("g", p._1, p._2)).toDF("g", "t", "v"),
-        Seq("g"), col("t"), col("v"))
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).head
-    // reference: exact rational slopes floor-scaled via BigInt
-    val slopes = (for {
-      (t1, v1) <- pts; (t2, v2) <- pts if t1 < t2
-    } yield {
-      val a = BigInt(1000000) * BigInt(v2 - v1)
-      val dx = BigInt(t2 - t1)
-      val q = a - (((a % dx) + dx) % dx)
-      (q / dx).toLong
-    }).sorted
-    val want = slopes((slopes.size + 1) / 2 - 1)
-    assert(got === ((pts.size.toLong, slopes.size.toLong, want)))
-  }
-
   test("vectorSum ≡ explode-sum for any grouping, order, and integer-valued data") {
     // the Lloyd-update aggregate's parity property: on integer-valued
     // doubles (order-exact addition) the fixed-width aggregate must match
@@ -417,25 +397,6 @@ class PropertySpec extends SparkSpec {
       .select("k", "state", "seq").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(whole === oneShot)
-  }
-
-  test("ewma scale-equivariance: scaling inputs by 2^k scales the output exactly") {
-    import graft.operators.Trend
-    val rows = sample(Gen.choose(0L, 100000L), 120).zipWithIndex
-      .map { case (v, i) => ("g", i, v) }
-    def run(scale: Long) = Trend.ewma(
-        rows.map { case (g, t, v) => (g, t, v * scale) }.toDF("g", "t", "v"),
-        Seq("g"), $"t", $"v", window = 8)
-      .orderBy("t").collect().map(_.getDouble(3)).toSeq
-    val base = run(1)
-    // power-of-two weights + power-of-two scaling = exact doubles up to
-    // the final round(4): scaled-then-rounded can differ from
-    // rounded-then-scaled by at most the scaled half-ulp of the rounding
-    def close(got: Seq[Double], want: Seq[Double], scale: Long): Unit =
-      got.zip(want).foreach { case (g, w) =>
-        assert(math.abs(g - w) <= 0.00005 * (scale + 1), s"$g vs $w") }
-    close(run(8), base.map(_ * 8), 8)
-    close(run(64), base.map(_ * 64), 64)
   }
 
   test("bm25 serving layouts agree: one-shot == indexed == sharded posting lists") {
