@@ -19,21 +19,20 @@ import org.apache.spark.sql.SparkSession
  */
 object Graft {
 
-  /** Apply engine configs + function registration to an existing session,
-    * and attach the engine's optimizer rules (idempotently) — the runtime
-    * twin of deploying with
-    * `spark.sql.extensions=graft.GraftSparkExtensions`.
+  /** Apply engine configs + function registration to an existing session
+    * — the runtime twin of deploying with
+    * `spark.sql.extensions=graft.GraftSparkExtensions`. The session keeps
+    * Catalyst's stock optimizer; the engine adds functions, not rules.
     *
     * ANSI contract: the engine's overflow-safety arguments assume ANSI
-    * arithmetic (the Spark 4 default) — e.g. ZOrder.zoneMap's range
-    * normalization multiplies by 2^31-1 and relies on ANSI to fail loudly
-    * past a 2^32 dimension range instead of silently wrapping into
-    * garbage buckets. configure() PINS ANSI on only when the session is
-    * already at the default; a host session that explicitly disabled it
-    * keeps its setting (forcing it session-wide would change the host's
-    * OWN queries — silent-null casts and wrapping arithmetic would start
-    * throwing). Operators that require the guard assert it locally
-    * (ZOrder.zoneMap throws up front under a non-ANSI session).
+    * arithmetic (the Spark 4 default) — e.g. [[graft.operators.Profile.histogram]]
+    * bins with the integer product `(v - min) * buckets` and relies on
+    * ANSI to fail loudly when it overflows a long instead of silently
+    * wrapping into garbage buckets. configure() PINS ANSI on only when
+    * the session is already at the default; a host session that
+    * explicitly disabled it keeps its setting (forcing it session-wide
+    * would change the host's OWN queries — silent-null casts and
+    * wrapping arithmetic would start throwing), and gets a warning.
     *
     * The [[StaticConf]] settings are not applied here: Spark reads them
     * only when a session is built, so neither can be applied to a running
@@ -53,14 +52,10 @@ object Graft {
     else
       org.apache.log4j.Logger.getLogger(getClass)
         .warn("spark.sql.ansi.enabled=false on host session: graft keeps " +
-          "your setting, but ANSI-guarded operators (ZOrder.zoneMap) will " +
-          "refuse to run — see Graft.configure scaladoc")
+          "your setting, but ANSI-guarded arithmetic (Profile.histogram's " +
+          "binning) can then wrap on overflow instead of failing — see " +
+          "Graft.configure scaladoc")
     GraftExpressions.register(spark)
-    Seq(graft.plans.BoundLevenshtein, graft.plans.MvRewrite).foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-    }
     spark
   }
 

@@ -18,17 +18,11 @@ import org.apache.spark.sql.SparkSessionExtensions
  * executor without the imperative
  * [[graft.functions.expressions.GraftExpressions.register]] call the
  * operator entry points also perform defensively. Same builder list as
- * that imperative path — one source of truth.
- *
- * Also injects the engine's optimizer rules
- * ([[graft.plans.BoundLevenshtein]]) into Catalyst's operator
- * optimization batch; [[graft.Graft.configure]] attaches the same rules
- * to an already-built session via `experimental.extraOptimizations`.
+ * that imperative path — one source of truth. Functions only: the
+ * optimizer stays stock Catalyst.
  */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.expressions.GraftExpressions.all.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.BoundLevenshtein)
-    ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
   }
 }

@@ -43,11 +43,6 @@ object SparkEntry {
   private val MoneyDec = org.apache.spark.sql.types.DecimalType(12, 2)
   private def moneySum(factors: Column*): Column =
     round(sum(factors.map(_.cast(MoneyDec)).reduce(_ * _)), 2).cast("double")
-  /** The exact decimal sum itself (no rounding shell) — for derived
-    * shells like `sum/count` that must divide BEFORE rounding; cast to
-    * double at the use site so the division runs on identical IEEE
-    * operands in both engines. */
-  private def moneySumRaw(c: Column): Column = sum(c.cast(MoneyDec))
 
   /** Flagship: rolling z-score "early signals" over quarterly order counts
     * per priority class (the reference's v_ae_early_signals semantics). */
@@ -307,15 +302,6 @@ object SparkEntry {
     Dedup.lshNearDupPairs(embeddings(s, d), "vec_id", "embedding",
       threshold = 0.3, bits = 8, tables = 2, sig = Knn.lshSignatureSha)
 
-  /** Funnel (q73): view → click → purchase stage per user over the
-    * events stream ([[Funnel.stages]] — greedy earliest-match automaton,
-    * one user-keyed shuffle of step-typed events only). Order key =
-    * microsecond event time (the engines' shared truncation) with
-    * event_id as the unique tiebreak. */
-  private def funnelQ(s: SparkSession, d: String): DataFrame =
-    Funnel.stages(events(s, d), col("user_id"), unix_micros(col("ts")),
-      col("event_id"), col("event_type"), Seq("view", "click", "purchase"))
-
   /** PQ reconstruction fidelity (q80): cosine between each vector and
     * its decode(encode(v)) under the SHA codebook — the quantization-
     * error audit of the q60 index ([[Pq.decodeCol]]; encode is the
@@ -406,16 +392,6 @@ object SparkEntry {
       .withColumn("keep",
         col("quality_ok") && col("not_repetitive") && col("fluent"))
   }
-
-  /** Retention cohorts (q74): distinct active users per (first-activity
-    * week, week offset) — [[Cohorts.retention]]; the distinct and the
-    * cohort min share one user-keyed partitioning. The cohort week is
-    * emitted as a yyyy-MM-dd string per the determinism conventions
-    * above (a raw DATE column hash-compares engine-dependently). */
-  private def retentionQ(s: SparkSession, d: String): DataFrame =
-    Cohorts.retention(events(s, d), col("user_id"), col("ts"))
-      .select(date_format(col("cohort_week"), "yyyy-MM-dd").as("cohort_week"),
-        col("week_offset"), col("n_users"))
 
   /** Label cohesion (q71): per-label mean embedding + average member
     * cosine ([[Knn.labelCohesion]] — fixed-width vector-sum aggregate,
@@ -509,10 +485,6 @@ object SparkEntry {
 
   private def bm25(s: SparkSession, d: String): DataFrame =
     Bm25.score(documents(s, d), "doc_id", "text", Seq("spark", "join", "fast"))
-
-  private def sessionize(s: SparkSession, d: String): DataFrame =
-    Sessionize(events(s, d), col("user_id"), col("ts"), col("event_id"),
-      gapSeconds = 1800)
 
   /** Oracle-parity sign-LSH kNN: SHA-256-derived hyperplanes the DuckDB
     * oracle rebuilds from a range()-CTE (see [[graft.functions.expressions.LshSigSha]]). */
@@ -678,16 +650,6 @@ object SparkEntry {
       n = 2, threshold = 0.2)
     Dedup.connectedComponents(pairs, "doc_a", "doc_b", driverBudgetBytes = 0L)
   }
-
-  /** Z-order (Morton) clustering values over (user_id, second-resolution
-    * event time) — the key [[graft.functions.ZOrder.cluster]] lays files
-    * out by so parquet min/max stats prune on EITHER dimension. Declared
-    * so the interleaving bit math itself is oracled; the layout effect
-    * (per-file range narrowing) is ZOrderSpec's file-statistics test. */
-  private def zorderValues(s: SparkSession, d: String): DataFrame =
-    events(s, d).select(col("event_id"),
-      graft.functions.ZOrder.zvalue(col("user_id"),
-        unix_timestamp(col("ts"))).as("zvalue"))
 
   /** Corpus profiling: exact token-count quantiles per language tag
     * (the DuckDB-oracled form; [[Sketch.quantilesApprox]] is the
@@ -1167,7 +1129,7 @@ object SparkEntry {
   /** Shared changelog for q89/q90: events as a per-user state log —
     * `error` is a tombstone, anything else an upsert of the user's
     * current activity state. Order key = microsecond event time with
-    * event_id as the unique tiebreak (the q73 convention). */
+    * event_id as the unique tiebreak. */
   private def userChangelog(s: SparkSession, d: String): DataFrame =
     events(s, d).select(col("user_id"),
       col("event_type").as("state"),
@@ -1286,10 +1248,10 @@ object SparkEntry {
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents")),
       col("cents"), buckets = 20)
 
-  /** q122: event-sequence transition matrix — the Markov-chain companion
-    * to the funnel (q73) and retention (q74) analytics: for each user's
-    * time-ordered event stream, count (state → next state) transitions
-    * and their per-source-state probabilities. ONE user-keyed window
+  /** q122: event-sequence transition matrix — the Markov-chain view of
+    * user behavior: for each user's time-ordered event stream, count
+    * (state → next state) transitions and their per-source-state
+    * probabilities. ONE user-keyed window
     * shuffle derives the successor, then a tiny (|states|²-bounded)
     * aggregate; probabilities are exact integer ratios rounded at the
     * end, so the doubles hash-match any engine. */
@@ -1442,57 +1404,6 @@ object SparkEntry {
         round(col("c.s"), 6).as("adc_dist"))
   }
 
-  /** q127: driver-gated evidence for the stateful-streaming funnel — the
-    * events stream, split into three time-sliced micro-batches, replays
-    * the EXACT per-group automaton body of
-    * [[graft.streaming.StatefulFunnel]]'s flatMapGroupsWithState
-    * ([[graft.streaming.StatefulFunnel.transition]]: sort by (event-time
-    * millis, event_id), greedy earliest-match, O(1) carried state); only
-    * the state-store plumbing differs (a cogrouped state Dataset per
-    * batch instead of GroupState). Declared result = every stage-reach
-    * emission across the replay. The oracle computes the same greedy
-    * sequential match relationally (first 'view', first 'click' strictly
-    * after it, first 'purchase' after that, all under the stream's own
-    * (ms, event_id) order) — valid as a one-shot rebuild because the
-    * time-sliced batches preserve global event order, the in-order case
-    * StreamsSpec pins against the batch operator. Scale: one user-keyed
-    * cogroup shuffle per batch over (delta + state), state O(1) per
-    * user. */
-  private def funnelReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.StatefulFunnel
-    import StatefulFunnel.{Event, FunnelState, StageReached}
-    import s.implicits._
-    val steps = Seq("view", "click", "purchase")
-    val ev = events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .as[Event]
-    val cuts = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00")
-      .map(c => lit(c).cast("timestamp"))
-    val batches = Seq(
-      ev.filter(col("ts") < cuts(0)),
-      ev.filter(col("ts") >= cuts(0) && col("ts") < cuts(1)),
-      ev.filter(col("ts") >= cuts(1)))
-    var state = s.emptyDataset[(Long, FunnelState)]
-    var emissions = s.emptyDataset[StageReached]
-    batches.foreach { b =>
-      // one pass computes both next-state and emissions; localCheckpoint
-      // materializes it so the two reads don't re-run the cogroup (and
-      // the per-batch lineage never stacks — same rationale as the
-      // connected-components rounds)
-      val stepped = b.groupByKey(_.user_id)
-        .cogroup(state.groupByKey(_._1)) { (u, evIt, stIt) =>
-          val (st, out, _) = StatefulFunnel.transition(u, evIt,
-            stIt.toSeq.headOption.map(_._2), steps)
-          Iterator((u, st, out))
-        }.localCheckpoint()
-      state = stepped.map { case (u, st, _) => (u, st) }
-      emissions = emissions.union(stepped.flatMap(_._3))
-    }
-    emissions.toDF()
-      .select(col("user_id"), col("stage"),
-        unix_millis(col("ts")).as("ts_ms"), col("converted"))
-  }
-
   /** q128: driver-gated evidence for the streaming search-index tier —
     * the BM25 half of the reference's `target_lag` freshness story
     * (README.md:83,117; q126 evidences the vector half). Documents
@@ -1535,81 +1446,6 @@ object SparkEntry {
     }
     val idx = Streams.readSearchIndex(s, dir, cents, "doc_id", "embedding")
     Bm25.scoreIndexed(idx.bm25, Seq("spark", "join", "fast"))
-  }
-
-  /** q129: driver-gated evidence for the stateful-streaming sessionizer
-    * — the custom-state tier's last member, closing the set with q127
-    * (every flatMapGroupsWithState operator now has a gate-evidenced
-    * replay). Three time-sliced event batches replay
-    * [[graft.streaming.StatefulSessionize.transition]] (the extracted
-    * automaton body: (event-time millis, event_id) sort, gap-close, O(1)
-    * open-session state) with state carried in a cogrouped Dataset;
-    * end-of-log open sessions are flushed via
-    * [[graft.streaming.StatefulSessionize.closeSession]] exactly as the
-    * stream's watermark timeout would. The oracle is the gaps-and-islands
-    * rebuild under the stream's own millisecond order key (q24's shape at
-    * second granularity; millis here because `Timestamp.getTime` is the
-    * operator's clock). */
-  private def sessionizeReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.StatefulSessionize
-    import StatefulSessionize.{Event, OpenSession, Session}
-    import s.implicits._
-    val gapMs = 1800 * 1000L
-    val ev = events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id")).as[Event]
-    val cuts = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00")
-      .map(c => lit(c).cast("timestamp"))
-    val batches = Seq(
-      ev.filter(col("ts") < cuts(0)),
-      ev.filter(col("ts") >= cuts(0) && col("ts") < cuts(1)),
-      ev.filter(col("ts") >= cuts(1)))
-    var state = s.emptyDataset[(Long, OpenSession)]
-    var emissions = s.emptyDataset[Session]
-    batches.foreach { b =>
-      val stepped = b.groupByKey(_.user_id)
-        .cogroup(state.groupByKey(_._1)) { (u, evIt, stIt) =>
-          val (open, closed) = StatefulSessionize.transition(u, evIt,
-            stIt.toSeq.headOption.map(_._2), gapMs)
-          Iterator((u, open, closed))
-        }.localCheckpoint()
-      state = stepped.flatMap { case (u, open, _) => open.map(u -> _) }
-      emissions = emissions.union(stepped.flatMap(_._3))
-    }
-    val flushed = state.map { case (u, open) =>
-      StatefulSessionize.closeSession(u, open) }
-    emissions.union(flushed).toDF()
-      .select(col("user_id"),
-        unix_millis(col("start_ts")).as("start_ms"),
-        unix_millis(col("end_ts")).as("end_ms"),
-        col("n_events").cast("long").as("n_events"),
-        col("duration_sec"))
-  }
-
-  /** q130: the stream-stream interval join run as a declared query — the
-    * last spec-only streaming member. Unlike the foreachBatch replays
-    * (q116–q128), [[graft.streaming.Streams.streamIntervalJoin]] is a
-    * declarative wrapper whose entire semantics live in its join
-    * condition, and `withWatermark` is a no-op on batch inputs — so the
-    * declared query calls the EXACT production function on batch frames
-    * (views ⋈ clicks per user within 15 minutes, the impression→click
-    * attribution shape) and the oracle recomputes the interval join
-    * relationally. What this evidences is the condition/alias logic the
-    * stream executes; the state-eviction behavior (watermark bounds) is
-    * StreamsSpec-pinned where it belongs. */
-  private def intervalJoinQ(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.Streams
-    val ev = events(s, d)
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts").as("l_ts"), col("event_id").as("view_id"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("r_ts"), col("event_id").as("click_id"))
-    Streams.streamIntervalJoin(views, clicks, Seq("user_id"),
-        "l_ts", "r_ts", within = "15 minutes")
-      .select(col("l.user_id").as("user_id"),
-        col("l.view_id").as("view_id"),
-        col("r.click_id").as("click_id"),
-        expr("(unix_micros(r_ts) - unix_micros(l_ts)) div 1000000")
-          .as("lag_sec"))
   }
 
   /** q131: embedding-space eval-set decontamination
@@ -2135,103 +1971,6 @@ object SparkEntry {
       "q01_pricing_summary" -> pricingSummary(s, d),
       "q04_region_nation_revenue" -> regionNationRevenue(s, d)))
 
-  /** q149: transparent materialized-view rewrite
-    * ([[graft.plans.MvRewrite]] — Snowflake's MV auto-rewrite; the
-    * reference's marts are dbt materializations queried by name,
-    * dbt_project.yml:13-15, and this closes the remaining gap: an
-    * AD-HOC query equivalent to a maintained mart silently USES it).
-    * The order-priority rollup is materialized and registered; the
-    * SAME aggregate re-issued against the base table is then REQUIRED
-    * to have been rewritten onto the mart scan — the require makes the
-    * green gate row rewrite evidence, not just result evidence — and
-    * an enclosing filter + derived column on top prove the preserved
-    * attribute ids keep downstream operators binding. Oracle recomputes
-    * flat from orders, so the mart's contents are themselves gated.
-    * Scale: the rewrite replaces the fact scan + shuffle with an
-    * aggregate-sized mart scan at plan time — the entire point of the
-    * feature at 100 TB. Registry cleared in finally: rewrite scope must
-    * not leak into other declared queries' plans. */
-  private def mvRewriteQ(s: SparkSession, d: String): DataFrame = {
-    import graft.plans.MvCatalog
-    Graft.configure(s)
-    val root = replayStateDir(s, "q149", d)
-    def rollup() = orders(s, d)
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"),
-        moneySum(col("o_totalprice")).as("revenue"))
-    try {
-      MvCatalog.materialize(s, "mv_priority_rollup", rollup(),
-        s"$root/mv_priority_rollup.parquet")
-      val reissued = rollup()
-        .filter(col("n_orders") > 0)
-        .withColumn("avg_order_value",
-          round(col("revenue") / col("n_orders"), 2))
-      val physical = reissued.queryExecution.executedPlan.toString
-      require(physical.contains("mv_priority_rollup.parquet"),
-        s"MV rewrite did not fire; plan:\n$physical")
-      // bounded collect (≤ #priorities = 5 rows): pins the gate rows to
-      // the REWRITTEN execution — returning the lazy frame would let
-      // Verify's coalesce().write recompile after the finally clears
-      // the registry and silently fall back to the base tables
-      val out = reissued.collect()
-      s.createDataFrame(s.sparkContext.parallelize(out.toList, 1),
-        reissued.schema)
-    } finally MvCatalog.clear()
-  }
-
-  /** q150: MV ROLLUP subsumption ([[graft.plans.MvRewrite]]'s data-cube
-    * leg — q149 is the exact-match rewrite; this is the classic "one
-    * finest-grain mart serves every coarser rollup": the registered
-    * mart groups by (priority, status), and a query grouping by STATUS
-    * alone is re-aggregated OVER the mart — sum→sum of sums, count→sum
-    * of counts, min/max→min/max of mins/maxes — with the scalar shells
-    * (round, a hand-written mean ratio) riding over substituted
-    * aggregate leaves. REQUIRED to scan the mart; oracle recomputes
-    * flat from orders. The mart total is the exact decimal sum
-    * ([[moneySum]] discipline), so sum-of-group-sums EQUALS the flat
-    * sum as a rational number — the rewrite is exact, not
-    * round-2-absorbed; counts are exact. Scale: the cube property is
-    * THE mart-economics feature — one maintained fine-grain mart
-    * answers the whole rollup lattice without touching the fact. */
-  private def mvRollupQ(s: SparkSession, d: String): DataFrame = {
-    import graft.plans.MvCatalog
-    Graft.configure(s)
-    val root = replayStateDir(s, "q150", d)
-    // the mart's total is the EXACT decimal sum (moneySum discipline):
-    // sum-of-group-sums then equals the flat sum as a rational number,
-    // so the rollup rewrite is exact rather than round-2-absorbed
-    def fine() = orders(s, d)
-      .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        moneySumRaw(col("o_totalprice")).as("total"),
-        min(col("o_totalprice")).as("min_total"),
-        max(col("o_totalprice")).as("max_total"))
-    try {
-      MvCatalog.materialize(s, "mv_priority_status", fine(),
-        s"$root/mv_priority_status.parquet")
-      val coarse = orders(s, d)
-        .groupBy(col("o_orderstatus"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          moneySum(col("o_totalprice")).as("revenue"),
-          round(moneySumRaw(col("o_totalprice")).cast("double") /
-            count(lit(1)), 2)
-            .as("avg_order_value"),
-          round(min(col("o_totalprice")), 2).as("min_total"),
-          round(max(col("o_totalprice")), 2).as("max_total"))
-      val physical = coarse.queryExecution.executedPlan.toString
-      require(physical.contains("mv_priority_status.parquet"),
-        s"MV rollup rewrite did not fire; plan:\n$physical")
-      require(!physical.contains("orders.parquet"),
-        "rollup must not touch the base fact")
-      // bounded collect (≤ #statuses = 3 rows): pins the gate rows to
-      // the rewritten execution, as in q149
-      val out = coarse.collect()
-      s.createDataFrame(s.sparkContext.parallelize(out.toList, 1),
-        coarse.schema)
-    } finally MvCatalog.clear()
-  }
-
   /** q151: aggregation policy ([[graft.operators.Privacy
     * .aggregationPolicy]] — Snowflake's aggregation-policy semantics,
     * the ENFORCED sibling of the q109 k-anonymity AUDIT): orders may
@@ -2239,8 +1978,7 @@ object SparkEntry {
     * under-floor customers (sf0.01) fold into one NULL-key remainder
     * row, the 124 at/above the floor surface as themselves, and totals
     * are preserved either way. count re-aggregates as the sum of
-    * partial counts, sum/max directly — the same distributivity the MV
-    * rollup leg (q150) relies on. Oracle states the two-level
+    * partial counts, sum/max directly. Oracle states the two-level
     * CASE-then-regroup relationally; round(…,2) absorbs the
     * remainder's float accumulation-order drift per house rules. */
   private def aggPolicyQ(s: SparkSession, d: String): DataFrame =
@@ -3487,18 +3225,6 @@ object SparkEntry {
       keys, Seq("cents"), mins = Seq("cents"), maxs = Seq("cents"))
   }
 
-  /** q107: zone-map statistics over the q51 z-value space — per z-range
-    * bucket (top 10 bits ≈ one clustered file) the row count and BOTH
-    * dimensions' min/max, i.e. the stats table a data-skipping reader
-    * prunes against. The declared query oracles the stats aggregation;
-    * the skipping EFFECT (tight rectangles vs a hash layout) is
-    * ZOrderSpec's quantified assertion. */
-  private def zoneMapQ(s: SparkSession, d: String): DataFrame =
-    graft.functions.ZOrder.zoneMap(
-      events(s, d).select(col("user_id"),
-        unix_timestamp(col("ts")).as("ts_sec")),
-      col("user_id"), col("ts_sec"), bucketBits = 10)
-
   /** q109: k-anonymity / l-diversity audit over (event_type, day) as
     * the quasi-identifier and user_id as the sensitive attribute — the
     * governance-tier group-size screen ([[Privacy.kAnonymityAudit]]):
@@ -3553,7 +3279,6 @@ object SparkEntry {
     "q21_simhash_pairs"      -> (simhashPairs _),
     "q22_embedding_neardup"  -> (embeddingNearDup _),
     "q23_bm25"               -> (bm25 _),
-    "q24_sessionize"         -> (sessionize _),
     "q25_lsh_knn"            -> (lshKnn _),
     "q26_hybrid_search"      -> (hybridSearch _),
     "q27_ivf_knn"            -> (ivfKnn _),
@@ -3580,7 +3305,6 @@ object SparkEntry {
     "q48_resize_plan"        -> (resizePlanQuery _),
     "q49_quality_checks"     -> (qualityChecks _),
     "q50_lsh_admit"          -> (lshAdmit _),
-    "q51_zorder"             -> (zorderValues _),
     "q52_cms_counts"         -> (cmsTokenCounts _),
     "q53_corpus_build"       -> (corpusBuild _),
     "q54_quantize_i8"        -> (quantizeEmbeddings _),
@@ -3602,8 +3326,6 @@ object SparkEntry {
     "q70_corpus_report"      -> (corpusReport _),
     "q71_label_cohesion"     -> (labelCohesionQ _),
     "q72_hard_negatives"     -> (hardNegativesQ _),
-    "q73_funnel"             -> (funnelQ _),
-    "q74_retention"          -> (retentionQ _),
     "q75_model_filter"       -> (modelFilterQ _),
     "q76_normalize"          -> (normalizeQ _),
     "q77_coverage_shift"     -> (coverageShiftQ _),
@@ -3635,7 +3357,6 @@ object SparkEntry {
     "q104_hll_distinct"      -> (hllDistinctTokens _),
     "q105_kmv_overlap"       -> (kmvOverlapQ _),
     "q106_incremental_agg"   -> (incrementalAggQ _),
-    "q107_zone_map"          -> (zoneMapQ _),
     "q109_k_anonymity"       -> (kAnonQ _),
     "q113_cube_distinct"     -> (cubeDistinctQ _),
     "q115_variant_extract"   -> (variantExtract _),
@@ -3650,10 +3371,7 @@ object SparkEntry {
     "q124_point_in_time"     -> (pointInTimeQ _),
     "q125_forward_fill"      -> (forwardFillQ _),
     "q126_vec_index_replay"  -> (vectorIndexReplayQ _),
-    "q127_funnel_replay"     -> (funnelReplayQ _),
     "q128_search_index_replay" -> (searchIndexReplayQ _),
-    "q129_sessionize_replay"   -> (sessionizeReplayQ _),
-    "q130_interval_join"       -> (intervalJoinQ _),
     "q131_semantic_decontam"   -> (semanticDecontaminateQ _),
     "q132_dup_span_dedup"      -> (dupSpanQ _),
     "q133_retrieval_eval"      -> (retrievalEvalQ _),
@@ -3672,8 +3390,6 @@ object SparkEntry {
     "q146_signals_ivm"         -> (signalsIvmQ _),
     "q147_lineage"             -> (lineageQ _),
     "q148_column_lineage"      -> (lineageColumnsQ _),
-    "q149_mv_rewrite"          -> (mvRewriteQ _),
-    "q150_mv_rollup"           -> (mvRollupQ _),
     "q151_agg_policy"          -> (aggPolicyQ _),
     "q152_conditional_mask"    -> (conditionalMaskQ _),
     "q153_projection_policy"   -> (projectionPolicyQ _),
@@ -3843,58 +3559,6 @@ object SparkEntry {
       |  UNION
       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
       |SELECT src AS doc, min(dst) AS component FROM reach GROUP BY src""".stripMargin
-
-  /** q51 oracle: the identical bit-spread chain as
-    * [[graft.functions.ZOrder.zvalue]] — (shift, mask) steps applied to
-    * the 31-bit-masked inputs via a CTE chain, then odd/even interleave. */
-  private def zorderOracle: String = {
-    val steps = Seq(16 -> 0x0000FFFF0000FFFFL, 8 -> 0x00FF00FF00FF00FFL,
-      4 -> 0x0F0F0F0F0F0F0F0FL, 2 -> 0x3333333333333333L,
-      1 -> 0x5555555555555555L)
-    val ctes = steps.zipWithIndex.map { case ((s, m), i) =>
-      s"""z${i + 1} AS (SELECT event_id,
-         |  ((a | (a << $s)) & $m) AS a, ((b | (b << $s)) & $m) AS b FROM z$i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH z0 AS (
-       |  SELECT event_id,
-       |    user_id & 2147483647 AS a,
-       |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) & 2147483647 AS b
-       |  FROM events),
-       |$ctes
-       |SELECT event_id, a | (b << 1) AS zvalue FROM z5""".stripMargin
-  }
-
-  /** q107 oracle: bounds pass → integer range-normalization onto the
-    * 31-bit interleave domain (`//` floors like Spark's DIV on the
-    * non-negative operands here) → the q51 bit-spread CTE chain carrying
-    * the ORIGINAL dims → per-z-bucket stats aggregate. */
-  private def zoneMapOracle: String = {
-    val steps = Seq(16 -> 0x0000FFFF0000FFFFL, 8 -> 0x00FF00FF00FF00FFL,
-      4 -> 0x0F0F0F0F0F0F0F0FL, 2 -> 0x3333333333333333L,
-      1 -> 0x5555555555555555L)
-    val ctes = steps.zipWithIndex.map { case ((s, m), i) =>
-      s"""z${i + 1} AS (SELECT a0, b0,
-         |  ((a | (a << $s)) & $m) AS a, ((b | (b << $s)) & $m) AS b FROM z$i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT user_id AS a0,
-       |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS b0
-       |  FROM events),
-       |bd AS (SELECT min(a0) AS a_min, max(a0) AS a_max,
-       |              min(b0) AS b_min, max(b0) AS b_max FROM e),
-       |z0 AS (SELECT a0, b0,
-       |    ((a0 - a_min) * 2147483647 // greatest(a_max - a_min, 1))
-       |      & 2147483647 AS a,
-       |    ((b0 - b_min) * 2147483647 // greatest(b_max - b_min, 1))
-       |      & 2147483647 AS b
-       |  FROM e CROSS JOIN bd),
-       |$ctes,
-       |zv AS (SELECT a0, b0, (a | (b << 1)) >> 52 AS bucket FROM z5)
-       |SELECT bucket, count(*) AS n,
-       |  min(a0) AS min_a, max(a0) AS max_a,
-       |  min(b0) AS min_b, max(b0) AS max_b
-       |FROM zv GROUP BY bucket""".stripMargin
-  }
 
   /** q21 oracle: 60-bit SHA-lane SimHash, mirroring [[Dedup.simhashPairsSha]]
     * (prefixBits=8 → bucket = fingerprint >> 52; Hamming ≤ 8). */
@@ -4416,8 +4080,6 @@ object SparkEntry {
 
     "q20_minhash_lsh" -> minhashOracle,
     "q50_lsh_admit" -> lshAdmitOracle,
-    "q51_zorder" -> zorderOracle,
-    "q107_zone_map" -> zoneMapOracle,
     "q109_k_anonymity" ->
       """SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
         |  count(*) AS n, count(DISTINCT user_id) AS l,
@@ -4435,41 +4097,6 @@ object SparkEntry {
     // assignment/encode are per-row (no cross-batch state at all)
     "q126_vec_index_replay" -> vecIndexReplayOracle,
 
-    // q127: greedy earliest-match funnel rebuilt relationally under the
-    // STREAM's own order key (event-time millis, event_id — Timestamp
-    // .getTime semantics, vs q73's micros): stage k+1 is the first
-    // step-event strictly after stage k's match in (ms, event_id) order.
-    // One row per stage actually reached; replay == one-shot because the
-    // time-sliced batches preserve that global order.
-    "q127_funnel_replay" ->
-      """WITH ev AS (SELECT user_id, epoch_ns(ts) // 1000000 AS ms,
-        |    event_id, event_type
-        |  FROM events WHERE event_type IN ('view', 'click', 'purchase')),
-        |s1 AS (SELECT user_id, ms, event_id FROM (
-        |  SELECT user_id, ms, event_id,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ms, event_id)
-        |      AS rk
-        |  FROM ev WHERE event_type = 'view') WHERE rk = 1),
-        |s2 AS (SELECT user_id, ms, event_id FROM (
-        |  SELECT e.user_id, e.ms, e.event_id,
-        |    row_number() OVER (PARTITION BY e.user_id
-        |      ORDER BY e.ms, e.event_id) AS rk
-        |  FROM ev e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click'
-        |    AND (e.ms > s1.ms OR (e.ms = s1.ms AND e.event_id > s1.event_id)))
-        |  WHERE rk = 1),
-        |s3 AS (SELECT user_id, ms, event_id FROM (
-        |  SELECT e.user_id, e.ms, e.event_id,
-        |    row_number() OVER (PARTITION BY e.user_id
-        |      ORDER BY e.ms, e.event_id) AS rk
-        |  FROM ev e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase'
-        |    AND (e.ms > s2.ms OR (e.ms = s2.ms AND e.event_id > s2.event_id)))
-        |  WHERE rk = 1)
-        |SELECT user_id, CAST(1 AS BIGINT) AS stage, ms AS ts_ms,
-        |  FALSE AS converted FROM s1
-        |UNION ALL SELECT user_id, CAST(2 AS BIGINT), ms, FALSE FROM s2
-        |UNION ALL SELECT user_id, CAST(3 AS BIGINT), ms, TRUE FROM s3""".stripMargin,
     "q53_corpus_build" ->
       """WITH t AS (SELECT doc_id, source, text, str_split(text, ' ') AS toks FROM documents),
         |m AS (SELECT doc_id, source, text, toks,
@@ -5535,34 +5162,6 @@ object SparkEntry {
         |  ('q14_dedup_exact', 'documents.parquet'))
         |  AS t(model, source)""".stripMargin,
 
-    // q149: flat recompute from orders — the declared side materialized
-    // the rollup, re-issued the query, REQUIRED the plan to scan the
-    // mart, and returned the mart-derived rows; equality here gates the
-    // whole materialize->rewrite->serve path
-    "q149_mv_rewrite" ->
-      """SELECT o_orderpriority,
-        |       count(*) AS n_orders,
-        |       CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS revenue,
-        |       round(CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) / count(*), 2) AS avg_order_value
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |HAVING count(*) > 0""".stripMargin,
-
-    // q150: flat recompute from orders — the declared side served the
-    // rollup FROM the (priority, status) mart (plan-required), so
-    // equality proves sum/count/min/max re-aggregation over group
-    // partials matches the flat computation; round(…,2) absorbs
-    // double accumulation-order drift per house rules
-    "q150_mv_rollup" ->
-      """SELECT o_orderstatus,
-        |       count(*) AS n_orders,
-        |       CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS revenue,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / count(*), 2) AS avg_order_value,
-        |       round(min(o_totalprice), 2) AS min_total,
-        |       round(max(o_totalprice), 2) AS max_total
-        |FROM orders
-        |GROUP BY o_orderstatus""".stripMargin,
-
     // q151: the aggregation policy stated relationally — group, NULL
     // the under-floor keys, regroup; counts re-aggregate as sums (cast
     // back to BIGINT: DuckDB's sum-of-BIGINT widens to HUGEINT)
@@ -6195,31 +5794,6 @@ object SparkEntry {
          |    sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_unique
          |  FROM p JOIN c USING (h) GROUP BY doc)""".stripMargin,
 
-    // q73: the greedy automaton as iterated "first qualifying occurrence
-    // strictly after the previous match" struct-mins (equivalent by the
-    // greedy-subsequence property); order = microsecond truncation
-    // (epoch_ns // 1000 ≡ Spark's unix_micros after Tables' DIV 1000)
-    // with event_id tiebreak
-    "q73_funnel" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_ns(ts) // 1000 AS us, event_id AS eid, event_type AS t
-        |  FROM events WHERE event_type IN ('view', 'click', 'purchase')),
-        |s1 AS (SELECT user_id, min((us, eid)) AS k1 FROM ev
-        |  WHERE t = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min((us, eid)) AS k2 FROM ev e
-        |  JOIN s1 USING (user_id) WHERE t = 'click' AND (us, eid) > k1
-        |  GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min((us, eid)) AS k3 FROM ev e
-        |  JOIN s2 USING (user_id) WHERE t = 'purchase' AND (us, eid) > k2
-        |  GROUP BY e.user_id)
-        |SELECT u.user_id,
-        |  (CASE WHEN k3 IS NOT NULL THEN 3 WHEN k2 IS NOT NULL THEN 2
-        |        WHEN k1 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS stage_reached,
-        |  k3 IS NOT NULL AS converted
-        |FROM (SELECT DISTINCT user_id FROM ev) u
-        |LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-        |LEFT JOIN s3 USING (user_id)""".stripMargin,
-
     // q77: assignment against the trained centroids, slice = odd vec_id;
     // all ratios are exact integer-derived divisions, so the shift flag
     // compares bit-identical doubles in both engines
@@ -6302,18 +5876,6 @@ object SparkEntry {
         |SELECT doc_id, quality_ok, not_repetitive, fluent,
         |  quality_ok AND not_repetitive AND fluent AS keep
         |FROM q JOIN r USING (doc_id) JOIN f USING (doc_id)""".stripMargin,
-
-    // q74: identical cohort math; ISO Monday week buckets in both engines
-    "q74_retention" ->
-      """WITH w AS (
-        |  SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS wk
-        |  FROM events),
-        |c AS (SELECT user_id, min(wk) AS cohort_week FROM w GROUP BY 1)
-        |SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-        |  ((wk - cohort_week) // 7)::BIGINT AS week_offset,
-        |  count(DISTINCT user_id)::BIGINT AS n_users
-        |FROM w JOIN c USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
 
     // q71: per-label position-wise mean (the q47 Lloyd-mean shape), then
     // average member cosine to it — round-4 absorbs the engines' mean
@@ -6758,62 +6320,6 @@ object SparkEntry {
     // N/avgdl derive at read time from the unioned dl table), so q23's
     // one-shot oracle binds verbatim
     "q128_search_index_replay" -> bm25Oracle,
-
-    // q129: gaps-and-islands rebuilt under the STREAM's own clock
-    // (event-time millis, event_id — Timestamp.getTime semantics; q24's
-    // batch twin uses second truncation). Replay == one-shot because the
-    // time-sliced batches preserve that global order and the end-of-log
-    // flush closes exactly the sessions the watermark timeout would.
-    "q129_sessionize_replay" ->
-      """WITH base AS (SELECT user_id, epoch_ns(ts) // 1000000 AS ms,
-        |    event_id FROM events),
-        |flagged AS (
-        |  SELECT user_id, ms, event_id,
-        |    CASE WHEN lag(ms) OVER w IS NULL
-        |           OR ms - lag(ms) OVER w > 1800000 THEN 1 ELSE 0 END AS is_new
-        |  FROM base
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-        |sess AS (
-        |  SELECT user_id, ms,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ms, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged)
-        |SELECT user_id, min(ms) AS start_ms, max(ms) AS end_ms,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  (max(ms) - min(ms)) // 1000 AS duration_sec
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-
-    // q130: inclusive two-sided interval join in DuckDB microseconds —
-    // identical bounds to the production function's timestamp arithmetic
-    "q130_interval_join" ->
-      """WITH v AS (SELECT user_id, epoch_ns(ts) // 1000 AS us, event_id
-        |  FROM events WHERE event_type = 'view'),
-        |c AS (SELECT user_id, epoch_ns(ts) // 1000 AS us, event_id
-        |  FROM events WHERE event_type = 'click')
-        |SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-        |  (c.us - v.us) // 1000000 AS lag_sec
-        |FROM v JOIN c ON v.user_id = c.user_id
-        |  AND c.us >= v.us AND c.us <= v.us + 900000000""".stripMargin,
-
-    "q24_sessionize" ->
-      """WITH base AS (
-        |  SELECT user_id,
-        |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec, event_id
-        |  FROM events),
-        |flagged AS (
-        |  SELECT user_id, ts_sec, event_id,
-        |    CASE WHEN lag(ts_sec) OVER w IS NULL
-        |           OR ts_sec - lag(ts_sec) OVER w > 1800 THEN 1 ELSE 0 END AS is_new
-        |  FROM base
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts_sec,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  max(ts_sec) - min(ts_sec) AS duration_sec
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
 
     "q26_hybrid_search" ->
       """WITH corpus AS (

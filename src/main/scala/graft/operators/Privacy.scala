@@ -166,8 +166,7 @@ object Privacy {
     * aggregates plus the group size; groups under the floor have their
     * keys NULLed (Snowflake's remainder-row convention) and fold into
     * ONE remainder row by re-aggregation — sum/min/max re-aggregate
-    * directly, counts re-aggregate as the SUM of partial counts (the
-    * same distributivity [[graft.plans.MvRewrite]]'s rollup leg uses).
+    * directly, counts re-aggregate as the SUM of partial counts.
     * Every group therefore surfaces: either as itself (size ≥ floor)
     * or inside the remainder — totals are preserved, small groups are
     * not individually identifiable.

@@ -56,10 +56,9 @@ object Profile {
 
   /**
    * Equi-width histogram of an integral column — the distribution half
-   * of profiling (and the same bounds-then-bucket shape as
-   * [[graft.functions.ZOrder.zoneMap]]): `buckets` equal-width bins over
-   * the observed [min, max], each reporting its count and its own
-   * min/max (so a reader can see intra-bin skew). Bin assignment is
+   * of profiling: `buckets` equal-width bins over the observed
+   * [min, max], each reporting its count and its own min/max (so a
+   * reader can see intra-bin skew). Bin assignment is
    * INTEGER arithmetic — `(v - min) * buckets DIV (max - min + 1)` — so
    * any engine reproduces the exact same binning; a floating-point
    * `floor` would disagree at bin boundaries. Empty bins are absent (a
@@ -76,7 +75,7 @@ object Profile {
     val bounds = v.agg(min(col("v")).as("v_min"), max(col("v")).as("v_max"))
     v.crossJoin(broadcast(bounds))
       // DIV, not `/`: Spark's Column `/` is double division; DIV keeps
-      // the binning integer-exact (ANSI guards the product, zoneMap-style)
+      // the binning integer-exact (ANSI fails the product on overflow)
       .withColumn("bucket",
         expr(s"(v - v_min) * $buckets DIV (v_max - v_min + 1)"))
       .groupBy(col("bucket"))

@@ -118,12 +118,15 @@ object Publish {
    * like Delta OPTIMIZE, never a full-table rewrite unless the whole
    * table is fragmented). Data files never buffer on the driver.
    *
-   * Crash safety (the [[graft.streaming.Streams]] swap contract): the
-   * compacted leaf is written to a sibling `.compact_tmp_<leaf>` dir and
-   * swapped in by rename; a crash leaves either (tmp + original leaf) —
-   * recovered by discarding the tmp — or (tmp only, leaf deleted) —
-   * recovered by completing the rename. [[compact]] runs recovery over
-   * the whole tree before compacting, so no crash point loses rows.
+   * Crash safety — its own three-rename protocol, separate from the
+   * commit-marker protocol of `batch_id=` compaction in
+   * [[graft.streaming.Streams]]: the compacted leaf is written to a
+   * sibling `.compact_tmp_<leaf>` dir, the leaf is renamed aside to
+   * `.compact_old_<leaf>`, the tmp is renamed into its place, and the
+   * old copy is deleted. Every crash point leaves at least one complete
+   * copy, and [[compact]] runs recovery over the whole tree before
+   * compacting (the cases are listed at `recoverPair`), so no crash
+   * point loses rows.
    *
    * Returns the compaction report — one row per leaf partition
    * (`partition` relative to `dir`, "." for the root): files/bytes

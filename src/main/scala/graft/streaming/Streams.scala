@@ -177,11 +177,11 @@ object Streams {
     } finally { b.unpersist(); () }
     // In-line maintenance (opt-in): every `compactEvery` batches,
     // fold the accumulated batch partitions into one. Running HERE —
-    // synchronously, between micro-batches — is the one place the
-    // non-transactional caveat of [[compactSearchIndex]] vanishes:
-    // the stream is the only writer and it is idle until this hook
-    // returns. A week of target_lag-style refreshes then never
-    // accumulates more than `compactEvery` directories per table.
+    // synchronously, between micro-batches — meets the single-writer
+    // assumption of [[compactSearchIndex]]: the stream is the only
+    // writer and it is idle until this hook returns. A week of
+    // target_lag-style refreshes then never accumulates more than
+    // `compactEvery` directories per table.
     // `belowId = batchId` keeps the CURRENT batch out of the fold: it
     // is not checkpoint-committed yet, so a crash after this hook
     // replays it — and its `mode("overwrite")` write to
@@ -419,8 +419,9 @@ object Streams {
   /** Fold the vector index's committed `batch_id=` directories into one,
     * PRESERVING the `cid=` sublayout ([[compactBatchPartitions]] would
     * flatten it, and the list-pruned read is the table's whole point).
-    * Same tmp-write → delete → rename swap and replay contract as the
-    * generic form. */
+    * Same commit-marker protocol as [[compactSearchIndex]] describes:
+    * [[compactWith]] commits the fold, and [[recoverCompactLeftovers]]
+    * rolls a crashed one back (no marker) or forward (marker). */
   def compactVectorIndex(spark: org.apache.spark.sql.SparkSession,
                          outDir: String, belowId: Long = Long.MaxValue): Unit =
     compactWith(spark, outDir, belowId) { (tmp, _) =>
@@ -516,12 +517,16 @@ object Streams {
    * strictly greater than every compacted id, so new partitions never
    * collide with the compacted one.
    *
-   * Runs as a periodic maintenance job between refresh windows. The swap
-   * is write-tmp → delete-originals → rename-in: a crash between the last
-   * two steps re-runs cleanly (the tmp dir is rewritten), but a crash
-   * after rename with a concurrent in-flight writer batch is the usual
-   * non-transactional-compaction caveat — the transactional answer is the
-   * Iceberg publication surface (S6), environment-blocked here.
+   * Runs as a periodic maintenance job between refresh windows, or
+   * in-line from the stream (`compactEvery`). Each table folds under
+   * [[compactWith]]'s commit-marker protocol: write the fold into a tmp
+   * dir, create the commit marker (the commit point), delete the
+   * sources, rename tmp → `batch_id=<maxId>`, drop the marker. A crash
+   * before the marker leaves every source intact, and the next fold
+   * drops the tmp; a crash after it rolls FORWARD —
+   * [[recoverCompactLeftovers]] runs before each fold and finishes the
+   * deletes and the rename. The protocol assumes one writer: it does not
+   * coordinate with a concurrent writer of the ids it folds.
    *
    * `belowId` (exclusive) restricts the fold to batch ids strictly below
    * it — REQUIRED when called from inside a live stream's `foreachBatch`
@@ -657,45 +662,6 @@ object Streams {
         .repartition(filesPer)
         .write.mode("overwrite").parquet(tmp.toString)
     }
-
-  /**
-   * Watermarked stream-stream interval join — the missing relational
-   * primitive between two live feeds (impression→click attribution, probe
-   * →response pairing, order→shipment latency): for each left event, match
-   * right events with the same key whose event time falls in
-   * `[leftTs, leftTs + within]`.
-   *
-   * Both sides carry watermarks, and the join condition bounds rightTs
-   * relative to leftTs from BOTH directions — together that is exactly
-   * what lets Spark compute a state eviction horizon for each side: a
-   * buffered left row is droppable once the right watermark passes
-   * `leftTs + within`; a buffered right row once the left watermark
-   * passes `rightTs`. Without the two-sided bound the state store grows
-   * without limit (Spark accepts the query but buffers forever — the
-   * classic stream-join OOM at 100 TB/day feeds). State is hash-
-   * partitioned by key: scale-out is by key cardinality, and a hot key
-   * is a real skew concern the caller addresses upstream (salt the key
-   * into sub-lanes and union, as [[graft.operators.Salt]] does for batch).
-   *
-   * `joinType` may be `inner`, `left_outer` (unmatched left emits once
-   * the watermark proves no match can arrive — the "impression with no
-   * click" lane), or `right_outer`.
-   */
-  def streamIntervalJoin(left: DataFrame, right: DataFrame,
-                         keyCols: Seq[String],
-                         leftTs: String, rightTs: String,
-                         within: String = "15 minutes",
-                         leftWatermark: String = "30 minutes",
-                         rightWatermark: String = "30 minutes",
-                         joinType: String = "inner"): DataFrame = {
-    val l = left.withWatermark(leftTs, leftWatermark).alias("l")
-    val r = right.withWatermark(rightTs, rightWatermark).alias("r")
-    val keyCond = keyCols.map(k => col(s"l.$k") === col(s"r.$k"))
-      .reduce(_ && _)
-    val timeCond = col(s"r.$rightTs") >= col(s"l.$leftTs") &&
-      col(s"r.$rightTs") <= col(s"l.$leftTs") + expr(s"INTERVAL $within")
-    l.join(r, keyCond && timeCond, joinType)
-  }
 
   /**
    * Streaming SCD-1 state maintenance — the streaming MERGE INTO: fold a

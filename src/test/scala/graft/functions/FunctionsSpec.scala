@@ -116,7 +116,7 @@ class FunctionsSpec extends SparkSpec {
     // all four digest offsets agree between Column and JVM forms
     ShaLanes.LaneOffsets.foreach { o =>
       val c = Seq("offsets").toDF("s")
-        .select(ShaLanes.lane(col("s"), o)).head.getLong(0)
+        .select(ShaLanes.lane(col("s"), o)).head().getLong(0)
       assert(c === ShaLanes.jvmLane("offsets".getBytes("UTF-8"), o))
     }
   }

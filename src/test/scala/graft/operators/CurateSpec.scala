@@ -162,7 +162,7 @@ class CurateSpec extends SparkSpec {
     val out = Curate.perGroupQuota(df, col("src"), col("id"), n = 4)
     assert(out.count() === 12)
     assert(out.groupBy("src").count().collect().forall(_.getLong(1) === 4))
-    assert(out.agg(max(col("rk"))).head.getLong(0) === 4L)
+    assert(out.agg(max(col("rk"))).head().getLong(0) === 4L)
   }
 
   test("weightedSample: k per group, deterministic, row-order invariant") {

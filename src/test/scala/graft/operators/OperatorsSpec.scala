@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** EarlySignals window-frame semantics, Sessionize, Enrich, Multimodal. */
+/** EarlySignals window-frame semantics, Enrich, Multimodal. */
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -69,23 +69,6 @@ class OperatorsSpec extends SparkSpec {
       .toDF("k", "quarter_index", "n_events")
     val out = EarlySignals.signals(flat, Seq("k")).orderBy("quarter_index").collect()
     assert(out(2).isNullAt(out(2).fieldIndex("z_score"))) // std = 0
-  }
-
-  test("sessionize splits on gap, aggregates per session") {
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def ts(s: Long) = new java.sql.Timestamp(t0.getTime + s * 1000)
-    val events = Seq(
-      (1L, ts(0), 100L), (1L, ts(100), 101L), (1L, ts(2000), 102L),
-      (2L, ts(50), 200L))
-      .toDF("user_id", "ts", "event_id")
-    val out = Sessionize(events, col("user_id"), col("ts"), col("event_id"), 1800)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getAs[Long]("n_events"), r.getAs[Long]("duration_sec"))).toMap
-    assert(out === Map(
-      (1L, 1L) -> (2L, 100L),
-      (1L, 2L) -> (1L, 0L),
-      (2L, 1L) -> (1L, 0L)))
   }
 
   test("heuristic enrichment: topic, severity, guarded summary") {
@@ -206,45 +189,6 @@ class OperatorsSpec extends SparkSpec {
     assert(out((3L, 0L)) === ((1L, "")))
     // NULL text yields no rows
     assert(!out.keys.exists(_._1 == 4L))
-  }
-
-  test("funnel: greedy stage matching, order ties broken by id, typeless users absent") {
-    val ev = Seq(
-      // u1: full conversion in order
-      (1L, 10L, 1L, "view"), (1L, 20L, 2L, "click"), (1L, 30L, 3L, "purchase"),
-      // u2: click precedes view -> only stage 1 (view found, no later click)
-      (2L, 10L, 4L, "click"), (2L, 20L, 5L, "view"), (2L, 30L, 6L, "error"),
-      // u3: non-step + early purchase skipped; converts via later events
-      (3L, 10L, 7L, "view"), (3L, 11L, 8L, "purchase"), (3L, 12L, 9L, "click"),
-      (3L, 13L, 10L, "purchase"),
-      // u4: no step-typed events at all -> absent
-      (4L, 10L, 11L, "error"),
-      // u5: same timestamp — id order decides: view(id 12) then click(id 13)
-      (5L, 10L, 12L, "view"), (5L, 10L, 13L, "click")
-    ).toDF("user_id", "ord", "event_id", "event_type")
-    val out = Funnel.stages(ev, col("user_id"), col("ord"), col("event_id"),
-        col("event_type"), Seq("view", "click", "purchase"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-    assert(out === Map(
-      1L -> ((3L, true)), 2L -> ((1L, false)), 3L -> ((3L, true)),
-      5L -> ((2L, false))))
-  }
-
-  test("retention cohorts: offsets from first-activity week, users counted once") {
-    def ts(day: String) = java.sql.Timestamp.valueOf(s"$day 12:00:00")
-    // 2024-01-01 is a Monday; u1 active weeks 0,1,3 (twice in week 0);
-    // u2 first appears in week 1, active weeks 1,2
-    val ev = Seq(
-      (1L, ts("2024-01-01")), (1L, ts("2024-01-03")), (1L, ts("2024-01-08")),
-      (1L, ts("2024-01-22")),
-      (2L, ts("2024-01-10")), (2L, ts("2024-01-15"))
-    ).toDF("user_id", "ts")
-    val out = Cohorts.retention(ev, col("user_id"), col("ts"))
-      .collect().map(r => (r.getDate(0).toString, r.getLong(1)) -> r.getLong(2))
-      .toMap
-    assert(out === Map(
-      ("2024-01-01", 0L) -> 1L, ("2024-01-01", 1L) -> 1L, ("2024-01-01", 3L) -> 1L,
-      ("2024-01-08", 0L) -> 1L, ("2024-01-08", 1L) -> 1L))
   }
 
   test("lm surprisal: hand-computed smoothed unigram, OOV bucket, null text dropped") {

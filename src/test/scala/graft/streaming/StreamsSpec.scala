@@ -792,111 +792,6 @@ class StreamsSpec extends SparkSpec {
     assert(!Streams.scd2AsOf(hist, 0L).columns.contains("valid_from"))
   }
 
-  test("stateful sessionize: in-batch close, timeout close, exact durations") {
-    import StatefulSessionize.{Event, Session}
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
-    def ev(user: Long, offSec: Long, id: Long) =
-      Event(user, new java.sql.Timestamp(t0 + offSec * 1000), id)
-
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val q = StatefulSessionize(input.toDS(), gapSeconds = 60, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("sessions").outputMode("append").start()
-    try {
-      // batch 1: one user, a 3-event session then a gap-breaking event →
-      // the first session closes in-batch
-      input.addData(ev(1, 0, 1), ev(1, 30, 2), ev(1, 45, 3), ev(1, 200, 4))
-      q.processAllAvailable()
-      val afterB1 = spark.table("sessions").as[Session].collect()
-      assert(afterB1.map(s => (s.user_id, s.n_events, s.duration_sec)).toSet ===
-        Set((1L, 3, 45L)))
-
-      // batch 2: far-future event advances the watermark past the open
-      // session's gap horizon; batch 3 (empty-ish nudge) fires the timeout
-      input.addData(ev(2, 10000, 5))
-      q.processAllAvailable()
-      input.addData(ev(2, 10001, 6))
-      q.processAllAvailable()
-      val all = spark.table("sessions").as[Session].collect()
-      assert(all.map(s => (s.user_id, s.n_events, s.duration_sec)).toSet ===
-        Set((1L, 3, 45L), (1L, 1, 0L)))
-    } finally q.stop()
-  }
-
-  test("stateful funnel emits stage transitions; final stages match the batch operator") {
-    import StatefulFunnel.{Event, StageReached}
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
-    def ev(user: Long, offSec: Long, id: Long, t: String) =
-      Event(user, new java.sql.Timestamp(t0 + offSec * 1000), id, t)
-    val steps = Seq("view", "click", "purchase")
-
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val q = StatefulFunnel(input.toDS(), steps, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("funnel").outputMode("append").start()
-    try {
-      // batch 1: u1 views+clicks (purchase pending); u2 clicks before
-      // viewing (only the view advances); noise types ignored
-      input.addData(
-        ev(1, 0, 1, "view"), ev(1, 10, 2, "click"), ev(1, 11, 3, "error"),
-        ev(2, 0, 4, "click"), ev(2, 10, 5, "view"))
-      q.processAllAvailable()
-      // batch 2: u1 converts; u2's click NOW arrives after its view
-      input.addData(ev(1, 20, 6, "purchase"), ev(2, 20, 7, "click"))
-      q.processAllAvailable()
-
-      val rows = spark.table("funnel").as[StageReached].collect()
-      val byUser = rows.groupBy(_.user_id).view
-        .mapValues(_.map(r => (r.stage, r.converted)).sortBy(_._1).toSeq).toMap
-      assert(byUser(1L) === Seq((1L, false), (2L, false), (3L, true)))
-      assert(byUser(2L) === Seq((1L, false), (2L, false)))
-
-      // in-order feed ⇒ final stage per user == the batch operator's
-      val history = Seq(
-        (1L, 0L, 1L, "view"), (1L, 10L, 2L, "click"), (1L, 11L, 3L, "error"),
-        (2L, 0L, 4L, "click"), (2L, 10L, 5L, "view"),
-        (1L, 20L, 6L, "purchase"), (2L, 20L, 7L, "click"))
-        .toDF("user_id", "ord", "event_id", "event_type")
-      val batch = graft.operators.Funnel.stages(history, col("user_id"),
-          col("ord"), col("event_id"), col("event_type"), steps)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val finalStage = rows.groupBy(_.user_id).view
-        .mapValues(_.map(_.stage).max).toMap
-      assert(finalStage === batch)
-    } finally q.stop()
-  }
-
-  test("stateful sessionize agrees with the batch Sessionize oracle") {
-    import StatefulSessionize.Event
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
-    val events = for (u <- 1L to 5L; i <- 0L until 20L) yield
-      Event(u, new java.sql.Timestamp(t0 + (i * 700 + u * 13) * 1000), u * 100 + i)
-
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val q = StatefulSessionize(input.toDS(), gapSeconds = 1800, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("sessions2").outputMode("append").start()
-    try {
-      input.addData(events: _*)
-      q.processAllAvailable()
-      // push the watermark far past every gap horizon, then fire timeouts
-      input.addData(Event(99L, new java.sql.Timestamp(t0 + 20_000_000L * 1000), 0L))
-      q.processAllAvailable()
-      input.addData(Event(99L, new java.sql.Timestamp(t0 + 20_000_001L * 1000), 1L))
-      q.processAllAvailable()
-      val streamed = spark.table("sessions2")
-        .filter(col("user_id") <= 5)
-        .select(col("user_id"), col("n_events").cast("long"), col("duration_sec"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-
-      val batch = graft.operators.Sessionize(
-          events.toDF(), col("user_id"), col("ts"), col("event_id"), gapSeconds = 1800)
-        .select(col("user_id"), col("n_events"), col("duration_sec"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
   test("session_window semantics (batch-mode evaluation of the streaming op)") {
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(s: Long) = new java.sql.Timestamp(t0.getTime + s * 1000)
@@ -908,55 +803,6 @@ class StreamsSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("n_events"))
     assert(out.count(_._1 == 1L) === 2)  // gap 4900s > 30min splits user 1
     assert(out.count(_._1 == 2L) === 1)
-  }
-
-  test("stream-stream interval join: in-window matches, bound exclusion, outer nulls") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
-    def ts(offSec: Long) = new java.sql.Timestamp(t0 + offSec * 1000)
-
-    val imps = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val clicks = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val joined = Streams.streamIntervalJoin(
-      imps.toDF().toDF("user_id", "imp_id", "imp_ts"),
-      clicks.toDF().toDF("user_id", "click_id", "click_ts"),
-      keyCols = Seq("user_id"), leftTs = "imp_ts", rightTs = "click_ts",
-      within = "15 minutes", leftWatermark = "10 seconds",
-      rightWatermark = "10 seconds", joinType = "left_outer")
-      .select(col("l.imp_id"), col("r.click_id"))
-    val q = joined.writeStream.format("memory").queryName("attrib")
-      .outputMode("append").start()
-    try {
-      // u1: click 60s after imp (in window) and another at 16min (out);
-      // u2: click BEFORE the imp (out — the bound is one-directional);
-      // u3: imp with no click at all (outer-null once watermark proves it)
-      imps.addData((1L, 10L, ts(0)), (2L, 20L, ts(0)), (3L, 30L, ts(0)))
-      clicks.addData((1L, 100L, ts(60)), (1L, 101L, ts(16 * 60)),
-        (2L, 200L, ts(-60)))
-      q.processAllAvailable()
-      val matched = spark.table("attrib")
-        .filter(col("click_id").isNotNull).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(matched === Set((10L, 100L)),
-        "only the in-window same-key click may match")
-
-      // advance BOTH watermarks far past imp_ts+within so the unmatched
-      // impressions' no-match proof completes, then nudge a batch through
-      imps.addData((9L, 90L, ts(4000)))
-      clicks.addData((9L, 900L, ts(4000)))
-      q.processAllAvailable()
-      imps.addData((9L, 91L, ts(4001)))
-      clicks.addData((9L, 901L, ts(4001)))
-      q.processAllAvailable()
-      val unmatched = spark.table("attrib")
-        .filter(col("click_id").isNull).collect()
-        .map(_.getLong(0)).toSet
-      assert(Set(20L, 30L).subsetOf(unmatched),
-        "watermark-expired impressions must emit outer nulls")
-      assert(!unmatched.contains(10L), "matched impression must not re-emit")
-    } finally q.stop()
   }
 
   test("live tail: ProcessingTime trigger folds mid-stream drops; stopped state equals the batch fold") {
