@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSessionExtensions
  *
  * and every graft native expression (`graft_cosine_sim`,
  * `graft_minhash`, `graft_simhash64`, the SHA oracle-parity kernels, the
- * KMV/CMS/vector-sum aggregates, `graft_bloom_might_contain`, …) is
+ * vector-sum aggregate, `graft_bloom_might_contain`, …) is
  * registered at session build, SQL-visible, and available on every
  * executor without the imperative
  * [[graft.functions.expressions.GraftExpressions.register]] call the

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
  * explicit-schema path (OPTIMIZATION_r17.md, "The per-query floor").
  * The replay/streaming operators re-read small state they (or an earlier
  * batch) JUST wrote many times per invocation — merge base images, pre-/post-images,
- * sketch-delta folds, compaction folds — so the inference tax recurs per
+ * compaction folds — so the inference tax recurs per
  * micro-batch, not per table.
  *
  * Spark's parquet writer embeds the exact Spark schema in every file

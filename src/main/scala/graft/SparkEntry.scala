@@ -418,8 +418,7 @@ object SparkEntry {
   /** Corpus health report (q70): the per-source ops dashboard every
     * corpus pipeline runs before a training cut — volume, null rate,
     * exact-dup rate (distinct text digests vs non-null docs), token
-    * length (mean + exact p90, the [[Sketch.quantilesApprox]] scale twin
-    * applies at 100 TB), and language spread. One grouped aggregate;
+    * length (mean + exact p90), and language spread. One grouped aggregate;
     * digests are 64-byte sha2, never text, in the distinct count. */
   private def corpusReport(s: SparkSession, d: String): DataFrame = {
     val toksz = size(Text.tokens(col("text"))).cast("double")
@@ -651,63 +650,6 @@ object SparkEntry {
     Dedup.connectedComponents(pairs, "doc_a", "doc_b", driverBudgetBytes = 0L)
   }
 
-  /** Corpus profiling: exact token-count quantiles per language tag
-    * (the DuckDB-oracled form; [[Sketch.quantilesApprox]] is the
-    * bounded-buffer scale path, cross-checked in SketchSpec — approx
-    * summaries are not bit-stable across engines, so the exact twin is
-    * the one declared here). */
-  private def corpusQuantiles(s: SparkSession, d: String): DataFrame =
-    Sketch.quantilesExact(documents(s, d), Seq("lang"),
-      expr("double(size(split(text, ' ')))"),
-      Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99), countName = "n_docs")
-
-  /** As-of join: latest checkpoint event at-or-before each event, per user
-    * (merge-sorted window composition — no range-join blowup). */
-  private def asofCheckpoints(s: SparkSession, d: String): DataFrame = {
-    val ev = events(s, d).select(
-      col("user_id"), col("event_id"),
-      unix_timestamp(col("ts")).as("ts_sec"))
-    val checkpoints = ev.filter(col("event_id") % 10 === 0)
-      .groupBy(col("user_id"), col("ts_sec"))
-      .agg(max(col("event_id")).as("checkpoint_id"))
-    AsOf.join(ev, checkpoints, Seq("user_id"), "ts_sec")
-  }
-
-  /** Bucketized range join: events paired with the 1-hour windows opened
-    * by checkpoint events of the same user. */
-  private def rangeJoinWindows(s: SparkSession, d: String): DataFrame = {
-    val ev = events(s, d).select(
-      col("user_id"), col("event_id"),
-      unix_timestamp(col("ts")).as("ts_sec"))
-    val iv = ev.filter(col("event_id") % 20 === 0)
-      .select(col("user_id"), col("event_id").as("iv_id"),
-        col("ts_sec").as("s"), (col("ts_sec") + 3600L).as("e"))
-    RangeJoin.pointInInterval(ev, iv, Seq("user_id"), "ts_sec", "s", "e",
-        binWidth = 3600L)
-      .select(col("user_id"), col("event_id"), col("iv_id"))
-  }
-
-  /** KMV distinct-token sketch per language, as a mergeable
-    * TypedImperativeAggregate over oracle-parity SHA-256 lanes (the
-    * window-rank form is the executable spec in SketchSpec and the shape
-    * the DuckDB oracle mirrors). */
-  private def kmvDistinctTokens(s: SparkSession, d: String): DataFrame =
-    Sketch.kmvDistinctSketch(
-      documents(s, d).select(col("lang"),
-        explode(Text.tokens(col("text"))).as("token")),
-      Seq("lang"), Sketch.shaLane(col("token")), k = 256)
-
-  /** Count-Min Sketch token-frequency counters (d=4 rows × w=64 buckets)
-    * over the documents corpus, via the native mergeable
-    * [[graft.functions.expressions.CmsSketch]] aggregate — per-partition
-    * state is ONE d×w matrix, merged by elementwise add. CMS is a linear
-    * sketch, so the counters are order/partition-independent and the SHA
-    * family hash-matches the DuckDB groupBy reconstruction exactly. */
-  private def cmsTokenCounts(s: SparkSession, d: String): DataFrame =
-    Sketch.cmsCounters(
-      documents(s, d).select(explode(Text.tokens(col("text"))).as("tok")),
-      col("tok"), d = 4, w = 64, sha = true)
-
   /** Symmetric int8 embedding quantization (q54): per-vector max-abs
     * scale + HALF_UP rounded codes ([[Vec.quantQ8]]) — 4× smaller vector
     * storage/shuffle, and cosine over the CODES equals cosine over the
@@ -790,24 +732,6 @@ object SparkEntry {
       .select(col("doc_id"), col("source"), col("rk"), col("n_tokens"),
         col("chunk_id"))
   }
-
-  /** Skew-salted two-phase aggregation — must equal the plain GROUP BY. */
-  private def saltedAgg(s: SparkSession, d: String): DataFrame =
-    Salt.aggregate(lineitem(s, d), Seq("l_returnflag"), col("l_orderkey"),
-        buckets = 8,
-        partials = Seq(count(lit(1)).as("pn"), sum(col("l_quantity")).as("pq"),
-          max(col("l_extendedprice")).as("pm")),
-        combines = Seq(sum(col("pn")).as("n"), round(sum(col("pq")), 2).as("sum_qty"),
-          max(col("pm")).as("max_price")))
-
-  /** Skew-salted equi-join — must equal the plain broadcast join result. */
-  private def saltedJoin(s: SparkSession, d: String): DataFrame =
-    Salt.join(
-        orders(s, d).withColumnRenamed("o_custkey", "custkey"),
-        customer(s, d).withColumnRenamed("c_custkey", "custkey"),
-        Seq("custkey"), saltBy = col("o_orderkey"), buckets = 8)
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), moneySum(col("o_totalprice")).as("revenue"))
 
   /** Deterministic stratified corpus sample: 50% of English docs, 20% of
     * the rest, by SHA-lane of the doc id — reproducible, shuffle-free. */
@@ -1156,9 +1080,9 @@ object SparkEntry {
   }
 
   /** Deterministic scratch dir for batch-replayed streaming state
-    * (q116/q117), wiped before each invocation so a replay always starts
-    * from genesis — Verify and every bench repeat rebuild identical
-    * state. */
+    * (q116, q126, q128 and the other replays), wiped before each
+    * invocation so a replay always starts from genesis — Verify and
+    * every bench repeat rebuild identical state. */
   private def replayStateDir(s: SparkSession, tag: String, d: String): String = {
     import org.apache.hadoop.fs.Path
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1198,29 +1122,6 @@ object SparkEntry {
     Streams.readScd1State(s, dir, "op", "D")
       .select(col("user_id"), col("state").as("last_type"),
         col("us").as("last_us"), col("event_id").as("last_event_id"))
-  }
-
-  /** q117: driver-gated evidence for the streaming distinct-count tier —
-    * events split into three hash micro-batches each persist their HLL
-    * register delta ([[graft.streaming.Streams.distinctRegistersBatch]],
-    * the exact foreachBatch body of `incrementalDistinct`; compaction
-    * folds the committed dirs mid-replay), and the declared result is the
-    * live merge-at-read estimate ([[graft.streaming.Streams.readDistinct]]).
-    * The oracle rebuilds the registers relationally from ALL events in one
-    * shot (q104's machinery, keyless): incremental per-batch register MAX
-    * == one-pass registers — exact, not approximate, equality, because HLL
-    * registers are a lattice (max-merge, idempotent). */
-  private def distinctReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.Streams
-    val dir = replayStateDir(s, "q117", d)
-    val ev = events(s, d).select(col("event_id"), col("user_id"))
-    (0 until 3).foreach { i =>
-      Streams.distinctRegistersBatch(
-        ev.filter(pmod(col("event_id"), lit(3)) === i),
-        i.toLong, Sketch.shaLane(col("user_id")), dir,
-        p = 6, compactEvery = 2)
-    }
-    Streams.readDistinct(s, dir, p = 6)
   }
 
   /** q120: one-pass column profiling ([[Profile.profile]]) — the ANALYZE
@@ -1269,83 +1170,6 @@ object SparkEntry {
     val wf = Window.partitionBy(col("from_state"))
     counts.select(col("from_state"), col("to_state"), col("n"),
       round(col("n") / sum(col("n")).over(wf), 6).as("prob"))
-  }
-
-  /** q123: driver-gated evidence for the streaming heavy-hitters tier —
-    * the fourth incremental-sketch member (q117 = cardinality, q119 =
-    * frequency, this = frequent items). Three document micro-batches each
-    * persist their Misra–Gries summary
-    * ([[graft.streaming.Streams.heavyHittersBatch]], the exact
-    * foreachBatch body of `incrementalHeavyHitters`; compaction pre-sums
-    * committed dirs mid-replay), the live merged summary comes from
-    * [[graft.streaming.Streams.readHeavyHitters]] (union-sum + one
-    * (k+1)-th-weight subtraction — the m-way MG merge). MG summaries are
-    * merge-order-dependent, so the SUMMARY is not oracle-able — but its
-    * guarantee is: every item with true count > N/(k+1) over the whole
-    * stream survives the merge. So the declared result re-counts the
-    * merged candidates exactly (q97's broadcast-recount shape) and keeps
-    * the integer-decided true heavy hitters — a deterministic output
-    * that q97's exact oracle binds verbatim. */
-  private def heavyHittersReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.Streams
-    val dir = replayStateDir(s, "q123", d)
-    val toks = documents(s, d).select(col("doc_id"),
-      explode(Text.tokens(col("text"))).as("tok"))
-    (0 until 3).foreach { i =>
-      Streams.heavyHittersBatch(
-        toks.filter(pmod(col("doc_id"), lit(3)) === i).select(col("tok")),
-        i.toLong, col("tok"), dir, k = 60, compactEvery = 2)
-    }
-    val cands = Streams.readHeavyHitters(s, dir, k = 60)
-      .select(col("item").as("tok"))
-    val all = toks.select(col("tok"))
-    // ONE corpus pass for recount AND n_total (r16): the old shape ran
-    // `all` twice in the final action — an inner join for the candidate
-    // recount plus a separate global count for the threshold's N — i.e.
-    // two full tokenize passes. A LEFT join keeps every token row, the
-    // aggregate groups non-candidates under one NULL lane, and N is the
-    // sum over the (≤ candidates+1)-row result; localCheckpoint makes
-    // the tiny table feed both the output filter and the N fold without
-    // re-running the pass. Candidates are distinct by construction
-    // (readHeavyHitters groups by item), so the join multiplies nothing.
-    val counted = all
-      .join(broadcast(cands.withColumn("__c", lit(1))), Seq("tok"), "left")
-      .groupBy(when(col("__c") === 1, col("tok")).as("tok"))
-      .agg(count(lit(1)).as("cnt"))
-      // non-eager (r17): both consumers (output filter + the n_total
-      // broadcast fold) compute ALL partitions inside the one declared
-      // action — the corpus pass fills the checkpoint there, skipping
-      // the dedicated construction job
-      .localCheckpoint(eager = false)
-    counted.filter(col("tok").isNotNull)
-      .crossJoin(broadcast(counted.agg(sum(col("cnt")).as("n_total"))))
-      .filter(col("cnt") * lit(61L) > col("n_total"))
-      .select(col("tok"), col("cnt"))
-  }
-
-  /** q119: driver-gated evidence for the streaming CMS counter-delta
-    * tier — documents split into three hash micro-batches each persist
-    * their token-frequency counter delta
-    * ([[graft.streaming.Streams.cmsCountersBatch]], the exact
-    * foreachBatch body of `incrementalCmsCounters`; compaction pre-sums
-    * committed dirs mid-replay), and the declared result is the live
-    * merge-at-read sum ([[graft.streaming.Streams.readCmsCounters]]).
-    * CMS is a LINEAR sketch — counters of a union are the element-wise
-    * SUM of the parts' counters under any batching or partitioning — so
-    * the replayed deltas are bit-equal to the one-shot sketch the oracle
-    * rebuilds relationally (q52's SQL verbatim). */
-  private def cmsReplayQ(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.Streams
-    val dir = replayStateDir(s, "q119", d)
-    val toks = documents(s, d).select(col("doc_id"),
-      explode(Text.tokens(col("text"))).as("tok"))
-    (0 until 3).foreach { i =>
-      Streams.cmsCountersBatch(
-        toks.filter(pmod(col("doc_id"), lit(3)) === i),
-        i.toLong, col("tok"), dir, d = 4, w = 64, sha = true,
-        compactEvery = 2)
-    }
-    Streams.readCmsCounters(s, dir)
   }
 
   /** q126: driver-gated evidence for the streaming vector-index tier —
@@ -2349,12 +2173,8 @@ object SparkEntry {
     * time-to-convert distribution (first view → first purchase, users
     * with purchase-before-view or no purchase excluded): one per-user
     * grouped pass, then a cohort-sized exact-percentile aggregate
-    * (q37's round-4 quantile lane). EXACT `percentile` here buffers
-    * every per-user gap in one buffer per cohort — the oracle-matchable
-    * choice; at 100 TB (billions of converting users) swap the final
-    * aggregate for [[graft.operators.Sketch.quantilesApprox]] over the
-    * same perUser frame (mergeable summary, rank error ≤ n/accuracy —
-    * the documented scale lane, PropertySpec-bounded). */
+    * rounded to 4 places. EXACT `percentile` here buffers every per-user
+    * gap in one buffer per cohort — the oracle-matchable choice. */
   private def convLatencyQ(s: SparkSession, d: String): DataFrame = {
     val t = expr("CAST(ts AS LONG)")
     val perUser = events(s, d)
@@ -2419,41 +2239,6 @@ object SparkEntry {
     Dedup.containmentPairs(
       documents(s, d).filter(col("doc_id") < 1000), "doc_id", "text",
       n = 2, threshold = 0.6)
-
-  /** q210: replay-maintained KMV distinct-count state — the freshness
-    * posture of the q117/q119 replays extended to another state shape:
-    * bounded ORDER STATISTICS. Three document
-    * micro-batches fold per-lang token-lane sets through
-    * [[graft.operators.Sketch.kmvTruncate]] (≤ k rows per lang
-    * persisted per version); k-minima are exact under merge-truncate,
-    * so the maintained state's readout
-    * ([[graft.operators.Sketch.kmvEstimateFromState]]) equals the
-    * whole-corpus batch sketch BIT-EXACTLY — the oracle is q40's batch
-    * KMV SQL verbatim. Per batch: the delta's lanes plus a ≤ k-row
-    * state read; history never rescanned. */
-  private def kmvReplayQ(s: SparkSession, d: String): DataFrame = {
-    val dir = replayStateDir(s, "q210", d)
-    // carried-state fold (the q146 idiom): versions still published,
-    // intermediate parquet read-backs removed
-    var state: Option[DataFrame] = None
-    (0 until 3).foreach { i =>
-      val batch = documents(s, d)
-        .filter(pmod(col("doc_id"), lit(3)) === i)
-        .select(col("lang"), explode(Text.tokens(col("text"))).as("token"))
-        .select(col("lang"), Sketch.shaLane(col("token")).as("lane"))
-      val merged = state match {
-        case None => batch
-        case Some(prev) => prev.unionByName(batch)
-      }
-      val truncated = Sketch.kmvTruncate(merged, Seq("lang"), k = 256)
-        .coalesce(1).localCheckpoint()
-      truncated.write.mode("overwrite").parquet(s"$dir/state_$i")
-      state = Some(truncated)
-    }
-    Sketch.kmvEstimateFromState( // r17 floor lever: skip re-inference
-      s.read.schema(state.get.schema).parquet(s"$dir/state_2"),
-      Seq("lang"), k = 256)
-  }
 
   /** q213: one-step SCD-1 CHANGE FEED over the MAUDE ingest state
     * ([[graft.streaming.Streams.scd1ChangeFeed]] — the Snowflake STREAM /
@@ -2915,14 +2700,6 @@ object SparkEntry {
       .join(rep, Seq("l_returnflag"))
   }
 
-  /** q135: shuffle-skew diagnostics ([[Salt.skewReport]] — the decide
-    * half of the q31/q32 salting remedies): per-suppkey row counts of
-    * lineitem (the l_suppkey ⨝ supplier shuffle's key distribution),
-    * top-10 heaviest keys with share and the max/uniform skew ratio.
-    * Costs exactly one pass of the shuffle it diagnoses. */
-  private def skewReportQ(s: SparkSession, d: String): DataFrame =
-    Salt.skewReport(lineitem(s, d), Seq("l_suppkey"), topK = 10)
-
   /** SCD-2 history (q90): the user changelog as validity intervals —
     * one row per run of equal states with valid_from/valid_to/version/
     * is_current ([[Cdc.scd2History]] — the dbt-snapshot surface; one
@@ -3062,16 +2839,6 @@ object SparkEntry {
       documents(s, d).filter(col("doc_id") < 1500), "doc_id", "text",
       n = 3, threshold = 0.3)
 
-  /** Exact heavy hitters (q97): tokens above the 1/(k+1) frequency bar,
-    * found by the mergeable Misra–Gries summary and re-counted exactly
-    * over a broadcast candidate set ([[Sketch.heavyHitters]]). The sketch
-    * prunes the search; integer arithmetic decides — so the output is
-    * exact and DuckDB-oracle-able even though a sketch drives the plan. */
-  private def heavyHittersQ(s: SparkSession, d: String): DataFrame =
-    Sketch.heavyHitters(
-      documents(s, d).select(explode(Text.tokens(col("text"))).as("tok")),
-      "tok", k = 60)
-
   /** Correlated scalar subqueries (q98): orders worth more than 2× their
     * own customer's average order — the decorrelation planner surface
     * (Catalyst rewrites each correlated aggregate into a join against a
@@ -3181,30 +2948,6 @@ object SparkEntry {
       (col("cents") - last_value(col("cents")).over(full)).as("vs_last"))
   }
 
-  /** q104: HLL distinct-token estimate per language — the constant-space
-    * member of the distinct-count family (q40's KMV ships k longs per
-    * group; HLL ships exactly 2^p bytes). Declared over the native
-    * mergeable [[graft.functions.expressions.HllSketch]] aggregate; the
-    * oracle rebuilds the identical registers relationally in DuckDB
-    * (SHA lanes + `bin()` bit math — no floating log2). */
-  private def hllDistinctTokens(s: SparkSession, d: String): DataFrame =
-    Sketch.hllDistinctSketch(
-      documents(s, d).select(col("lang"),
-        explode(Text.tokens(col("text"))).as("token")),
-      Seq("lang"), Sketch.shaLane(col("token")), p = 6)
-
-  /** q105: pairwise token-overlap estimates (union / Jaccard /
-    * intersection) across the 20 document sources from composable KMV
-    * sketches — the corpus shuffles its bottom-k lanes ONCE per source,
-    * and all C(20,2) pair statistics are array math on (source × k)
-    * longs. Corpus-mix planning / cross-source contamination sizing
-    * without an O(n²) token join. */
-  private def kmvOverlapQ(s: SparkSession, d: String): DataFrame =
-    Sketch.kmvOverlap(
-      documents(s, d).select(col("source"),
-        explode(Text.tokens(col("text"))).as("token")),
-      "source", Sketch.shaLane(col("token")), k = 128)
-
   /** q106: incremental aggregate maintenance — the mart is kept as
     * per-key partial aggregates (integer cents; sum/min/max/count all
     * decomposable) and a delta batch folds in by re-aggregating
@@ -3234,26 +2977,6 @@ object SparkEntry {
       events(s, d).select(col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"), col("user_id")),
       Seq("event_type", "day"), col("user_id"), k = 20, minL = 5)
-
-  /** q113: HLL distinct-user estimates inside CUBE — the sketch tier
-    * composing with the OLAP Expand tier: one pass computes per-cell,
-    * per-row-slice, per-column-slice and grand-total distinct counts,
-    * each cell a 64-byte register set (count-distinct inside a cube is
-    * exactly where exact per-group distinct state explodes at 100 TB).
-    * The oracle rebuilds every grouping set relationally (UNION ALL
-    * mirror of Expand) and re-derives the registers per level. */
-  private def cubeDistinctQ(s: SparkSession, d: String): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.expressions.GraftExpressions.register)
-    events(s, d).select(col("event_type"),
-        date_format(col("ts"), "yyyy-MM").as("month"),
-        Sketch.shaLane(concat(lit("u|"), col("user_id").cast("string"))).as("lane"))
-      .cube(col("event_type"), col("month"))
-      .agg(grouping(col("event_type")).cast("long").as("g_et"),
-        grouping(col("month")).cast("long").as("g_m"),
-        count(lit(1)).as("n"),
-        round(call_function("graft_hll", col("lane"), lit(6)), 4).as("est_users"))
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary"    -> (pricingSummary _),
@@ -3285,16 +3008,10 @@ object SparkEntry {
     "q28_multimodal_features" -> (multimodalFeatures _),
     "q29_enrich"             -> (enrichDocs _),
     "q30_frame_offsets"      -> (frameOffsets _),
-    "q31_salted_agg"         -> (saltedAgg _),
-    "q32_salted_join"        -> (saltedJoin _),
     "q33_promo_revenue"      -> (promoRevenue _),
     "q34_dedup_components"   -> (dedupComponents _),
     "q35_sequence_packing"   -> (sequencePacking _),
     "q36_quality_filter"     -> (qualityFilter _),
-    "q37_corpus_quantiles"   -> (corpusQuantiles _),
-    "q38_asof_join"          -> (asofCheckpoints _),
-    "q39_range_join"         -> (rangeJoinWindows _),
-    "q40_kmv_distinct"       -> (kmvDistinctTokens _),
     "q41_stratified_sample"  -> (stratifiedSample _),
     "q42_keep_latest"        -> (keepLatestEvent _),
     "q43_source_quota"       -> (sourceQuota _),
@@ -3305,7 +3022,6 @@ object SparkEntry {
     "q48_resize_plan"        -> (resizePlanQuery _),
     "q49_quality_checks"     -> (qualityChecks _),
     "q50_lsh_admit"          -> (lshAdmit _),
-    "q52_cms_counts"         -> (cmsTokenCounts _),
     "q53_corpus_build"       -> (corpusBuild _),
     "q54_quantize_i8"        -> (quantizeEmbeddings _),
     "q55_decontaminate"      -> (decontaminateTrain _),
@@ -3347,27 +3063,20 @@ object SparkEntry {
     "q93_canonical_docs"     -> (canonicalDocsQ _),
     "q94_prr_signals"        -> (prrSignalsQ _),
     "q96_prefix_jaccard"     -> (prefixJaccardQ _),
-    "q97_heavy_hitters"      -> (heavyHittersQ _),
     "q98_correlated_premium" -> (correlatedSubqueryQ _),
     "q99_date_spine"         -> (dateSpineQ _),
     "q100_range_frame"       -> (rangeFrameQ _),
     "q101_unpivot"           -> (unpivotEventsQ _),
     "q102_cube"              -> (cubeRevenueQ _),
     "q103_window_nav"        -> (windowNavQ _),
-    "q104_hll_distinct"      -> (hllDistinctTokens _),
-    "q105_kmv_overlap"       -> (kmvOverlapQ _),
     "q106_incremental_agg"   -> (incrementalAggQ _),
     "q109_k_anonymity"       -> (kAnonQ _),
-    "q113_cube_distinct"     -> (cubeDistinctQ _),
     "q115_variant_extract"   -> (variantExtract _),
     "q116_scd1_replay"       -> (scd1ReplayQ _),
-    "q117_distinct_replay"   -> (distinctReplayQ _),
     "q118_components_dist"   -> (dedupComponentsDist _),
-    "q119_cms_replay"        -> (cmsReplayQ _),
     "q120_profile"           -> (profileQ _),
     "q121_histogram"         -> (histogramQ _),
     "q122_transitions"       -> (transitionsQ _),
-    "q123_hh_replay"         -> (heavyHittersReplayQ _),
     "q124_point_in_time"     -> (pointInTimeQ _),
     "q125_forward_fill"      -> (forwardFillQ _),
     "q126_vec_index_replay"  -> (vectorIndexReplayQ _),
@@ -3376,7 +3085,6 @@ object SparkEntry {
     "q132_dup_span_dedup"      -> (dupSpanQ _),
     "q133_retrieval_eval"      -> (retrievalEvalQ _),
     "q134_compaction"          -> (compactQ _),
-    "q135_skew_report"         -> (skewReportQ _),
     "q136_retrieval_macro"     -> (retrievalEvalMacroQ _),
     "q137_join_ivm"            -> (joinDeltaQ _),
     "q138_name_match"          -> (nameMatchQ _),
@@ -3416,7 +3124,6 @@ object SparkEntry {
     "q207_repetition"          -> (repetitionQ _),
     "q208_zipf_slope"          -> (zipfQ _),
     "q209_containment"         -> (containmentQ _),
-    "q210_kmv_replay"          -> (kmvReplayQ _),
     "q212_publish_interop"     -> (publishInteropQ _),
     "q213_change_feed"         -> (changeFeedQ _),
     "q214_scd2_snapshot"       -> (scd2SnapshotQ _),
@@ -3501,31 +3208,6 @@ object SparkEntry {
        |  SELECT b.doc, b.dup_of, e.est_jaccard
        |  FROM best b JOIN est e ON e.doc = b.doc AND e.cand = b.dup_of) w
        |ON d.doc_id = w.doc""".stripMargin
-
-  /** q97/q123 shared oracle: the EXACT heavy hitters (count·(k+1) > N
-    * over all document tokens, k = 60). Both the one-shot Misra–Gries
-    * plan (q97) and the streaming replay (q123) are sketch-DRIVEN but
-    * exact-DECIDED, so the relational answer binds both. */
-  private def heavyHittersOracle: String =
-    """WITH toks AS (
-      |  SELECT unnest(str_split(text, ' ')) AS tok FROM documents),
-      |tot AS (SELECT count(*)::BIGINT AS n_total FROM toks)
-      |SELECT tok, count(*)::BIGINT AS cnt
-      |FROM toks CROSS JOIN tot
-      |GROUP BY tok, n_total
-      |HAVING count(*) * 61 > n_total""".stripMargin
-
-  /** q52/q119 shared oracle: exact CMS bucket counts rebuilt
-    * relationally over the SHA lanes (the sketch's counters ARE exact
-    * relational counts of (row, depth) bucket assignments). q52 binds it
-    * for the one-shot aggregate; q119 for the streaming counter-delta
-    * replay — CMS linearity makes the two bit-equal. */
-  private def cmsCountsOracle: String =
-    s"""WITH toks AS (SELECT unnest(str_split(text, ' ')) AS v FROM documents),
-       |r AS (SELECT unnest(range(4)) AS j),
-       |b AS (SELECT j, ${duckLane("j::VARCHAR || '|' || v")} % 64 AS bucket
-       |      FROM toks CROSS JOIN r)
-       |SELECT j, bucket, count(*) AS cnt FROM b GROUP BY 1, 2""".stripMargin
 
   /** q34/q118 shared oracle: near-dup pair edges + DuckDB's actual
     * recursive reachability CTE, min-labeled. Two declared queries bind
@@ -4013,20 +3695,6 @@ object SparkEntry {
        |  FROM documents)""".stripMargin
   }
 
-  /** q40 oracle: window-rank KMV over SHA lanes — the executable spec of
-    * the [[graft.functions.expressions.KmvSketch]] aggregate (identical
-    * estimates: both keep the k smallest distinct lanes). */
-  private def kmvOracle: String =
-    s"""WITH toks AS (SELECT lang, unnest(str_split(text, ' ')) AS token FROM documents),
-       |h AS (SELECT DISTINCT lang, ${duckLane("token")} AS lane FROM toks),
-       |r AS (SELECT lang, lane,
-       |    row_number() OVER (PARTITION BY lang ORDER BY lane) AS rn FROM h),
-       |kk AS (SELECT lang, count(*) AS n_kept, max(lane) AS lane_k
-       |  FROM r WHERE rn <= 256 GROUP BY lang)
-       |SELECT lang, round(CASE WHEN n_kept < 256 THEN CAST(n_kept AS DOUBLE)
-       |  ELSE 255.0 / ((CAST(lane_k AS DOUBLE) + 1.0) / 1152921504606846977.0) END, 4) AS est_distinct
-       |FROM kk""".stripMargin
-
   def oracleSql: Map[String, String] = Map(
     "q41_stratified_sample" ->
       s"""SELECT doc_id, lang FROM (
@@ -4086,12 +3754,6 @@ object SparkEntry {
         |  count(*) >= 20 AS k_anonymous,
         |  count(DISTINCT user_id) >= 5 AS l_diverse
         |FROM events GROUP BY 1, 2""".stripMargin,
-    "q52_cms_counts" -> cmsCountsOracle,
-    // q119: identical oracle — CMS is a LINEAR sketch, so the replayed
-    // per-batch counter deltas sum to counters bit-equal to the one-shot
-    // sketch over everything.
-    "q119_cms_replay" -> cmsCountsOracle,
-
     // q126: the one-shot IVF-PQ rebuild — replayed batch-partitioned
     // index == one-shot index because writes are per-batch-partition and
     // assignment/encode are per-row (no cross-batch state at all)
@@ -4459,67 +4121,6 @@ object SparkEntry {
         |      FROM orders)
         |GROUP BY 1, 2""".stripMargin,
 
-    // q104: relational rebuild of the HLL registers — bucket = top 6 lane
-    // bits, rho = leading zeros of the remaining 54 bits + 1 (bin() gives
-    // the minimal binary string in both engines, so length(bin(w))-1 is
-    // floor(log2 w) EXACTLY; floating log2 rounds up just under powers of
-    // two at 50+ bits), then the classic estimator with the same alpha,
-    // double-op grouping, and small-range correction as HllSketch.eval.
-    "q104_hll_distinct" ->
-      s"""WITH toks AS (SELECT lang, unnest(str_split(text, ' ')) AS token FROM documents),
-         |h AS (SELECT DISTINCT lang, ${duckLane("token")} AS lane FROM toks),
-         |b AS (SELECT lang, lane >> 54 AS bucket,
-         |        lane & ${(1L << 54) - 1} AS w FROM h),
-         |regs AS (SELECT lang, bucket,
-         |    max(CASE WHEN w = 0 THEN 55
-         |             ELSE 54 - (length(bin(w)) - 1) END) AS r
-         |  FROM b GROUP BY lang, bucket),
-         |agg AS (SELECT lang, sum(pow(2.0, -r)) AS present, count(*) AS np
-         |  FROM regs GROUP BY lang),
-         |est AS (SELECT lang,
-         |    0.709 * 64.0 * 64.0 / (present + CAST(64 - np AS DOUBLE)) AS raw,
-         |    CAST(64 - np AS DOUBLE) AS v
-         |  FROM agg)
-         |SELECT lang, round(CASE WHEN raw <= 160.0 AND v > 0
-         |    THEN 64.0 * ln(64.0 / v) ELSE raw END, 4) AS est_distinct
-         |FROM est""".stripMargin,
-
-    // q105: relational mirror of the sketch-merge overlap — bottom-k lanes
-    // per source, pair universe = union of the two bottom-k sets, rank,
-    // keep k; the k-th union lane drives the KMV union estimate and the
-    // both-sides fraction the Jaccard; intersection = J x union (raw
-    // doubles multiplied BEFORE rounding, as in Sketch.kmvOverlap).
-    "q105_kmv_overlap" ->
-      s"""WITH toks AS (SELECT source, unnest(str_split(text, ' ')) AS token FROM documents),
-         |h AS (SELECT DISTINCT source, ${duckLane("token")} AS lane FROM toks),
-         |r AS (SELECT source, lane,
-         |    row_number() OVER (PARTITION BY source ORDER BY lane) AS rn FROM h),
-         |sk AS (SELECT source, lane FROM r WHERE rn <= 128),
-         |srcs AS (SELECT DISTINCT source FROM sk),
-         |prs AS (SELECT a.source AS sa, b.source AS sb
-         |  FROM srcs a JOIN srcs b ON a.source < b.source),
-         |ul AS (SELECT p.sa, p.sb, s.lane,
-         |    max(CASE WHEN s.source = p.sa THEN 1 ELSE 0 END) AS in_a,
-         |    max(CASE WHEN s.source = p.sb THEN 1 ELSE 0 END) AS in_b
-         |  FROM prs p JOIN sk s ON s.source IN (p.sa, p.sb)
-         |  GROUP BY p.sa, p.sb, s.lane),
-         |rk AS (SELECT *, row_number() OVER (PARTITION BY sa, sb ORDER BY lane) AS rn,
-         |    count(*) OVER (PARTITION BY sa, sb) AS nu FROM ul),
-         |kk AS (SELECT sa, sb, count(*) AS kcnt, max(lane) AS lane_k,
-         |    sum(in_a * in_b) AS matches, max(nu) AS nu
-         |  FROM rk WHERE rn <= 128 GROUP BY sa, sb),
-         |est AS (SELECT sa, sb,
-         |    CASE WHEN nu < 128 THEN CAST(nu AS DOUBLE)
-         |         ELSE 127.0 / ((CAST(lane_k AS DOUBLE) + 1.0)
-         |                        / 1152921504606846977.0) END AS u_est,
-         |    CAST(matches AS DOUBLE) / CAST(kcnt AS DOUBLE) AS jac
-         |  FROM kk)
-         |SELECT sa AS src_a, sb AS src_b,
-         |  round(u_est, 4) AS est_union,
-         |  round(jac, 4) AS est_jaccard,
-         |  round(jac * u_est, 4) AS est_intersection
-         |FROM est""".stripMargin,
-
     "q103_window_nav" ->
       """WITH q AS (
         |  SELECT c_mktsegment,
@@ -4596,16 +4197,6 @@ object SparkEntry {
         |    > 2 * (SELECT sum(CAST(round(o2.o_totalprice * 100) AS BIGINT))
         |           FROM orders o2 WHERE o2.o_custkey = o.o_custkey)""".stripMargin,
 
-    // q97: Misra-Gries guarantees no false negatives above N/(k+1) and
-    // the verify pass is exact integer counting, so the oracle is the
-    // direct exact formulation with the same integer threshold compare
-    "q97_heavy_hitters" -> heavyHittersOracle,
-    // q123: identical oracle — the replayed MG merge keeps every true
-    // heavy hitter (no-false-negative bound) and the exact recount +
-    // integer decision drops everything else, so the batch sketch (q97)
-    // and the streaming replay converge on the same exact answer.
-    "q123_hh_replay" -> heavyHittersOracle,
-
     // q96: prefix filtering is lossless, so the oracle is the BRUTE
     // inverted-index formulation (q15's shape at 3-gram/0.3) — the
     // hash-compare proves the candidate pruning dropped nothing
@@ -4629,43 +4220,6 @@ object SparkEntry {
         |JOIN cnt ca ON doc_a = ca.doc_id
         |JOIN cnt cb ON doc_b = cb.doc_id
         |WHERE n_inter / (ca.n_sh + cb.n_sh - n_inter) >= 0.3""".stripMargin,
-
-    // q113: UNION ALL of the four grouping sets is the relational mirror
-    // of Expand; registers rebuild per level exactly as in the q104
-    // oracle, and grouping flags disambiguate rolled-up NULLs
-    "q113_cube_distinct" ->
-      s"""WITH base AS (
-         |  SELECT event_type, strftime(ts, '%Y-%m') AS month,
-         |    ${duckLane("'u|' || user_id::VARCHAR")} AS lane
-         |  FROM events),
-         |lvl AS (
-         |  SELECT event_type, month, 0 AS g_et, 0 AS g_m, lane FROM base
-         |  UNION ALL SELECT event_type, NULL, 0, 1, lane FROM base
-         |  UNION ALL SELECT NULL, month, 1, 0, lane FROM base
-         |  UNION ALL SELECT NULL, NULL, 1, 1, lane FROM base),
-         |cnt AS (SELECT event_type, month, g_et, g_m, count(*) AS n
-         |  FROM lvl GROUP BY 1, 2, 3, 4),
-         |h AS (SELECT DISTINCT event_type, month, g_et, g_m, lane FROM lvl),
-         |b AS (SELECT event_type, month, g_et, g_m, lane >> 54 AS bucket,
-         |        lane & ${(1L << 54) - 1} AS w FROM h),
-         |regs AS (SELECT event_type, month, g_et, g_m, bucket,
-         |    max(CASE WHEN w = 0 THEN 55
-         |             ELSE 54 - (length(bin(w)) - 1) END) AS r
-         |  FROM b GROUP BY 1, 2, 3, 4, 5),
-         |agg AS (SELECT event_type, month, g_et, g_m,
-         |    sum(pow(2.0, -r)) AS present, count(*) AS np
-         |  FROM regs GROUP BY 1, 2, 3, 4),
-         |est AS (SELECT event_type, month, g_et, g_m,
-         |    0.709 * 64.0 * 64.0 / (present + CAST(64 - np AS DOUBLE)) AS raw,
-         |    CAST(64 - np AS DOUBLE) AS v
-         |  FROM agg)
-         |SELECT c.event_type, c.month,
-         |  c.g_et::BIGINT AS g_et, c.g_m::BIGINT AS g_m, c.n,
-         |  round(CASE WHEN raw <= 160.0 AND v > 0
-         |      THEN 64.0 * ln(64.0 / v) ELSE raw END, 4) AS est_users
-         |FROM cnt c JOIN est e ON c.g_et = e.g_et AND c.g_m = e.g_m
-         |  AND c.event_type IS NOT DISTINCT FROM e.event_type
-         |  AND c.month IS NOT DISTINCT FROM e.month""".stripMargin,
 
     // q115: the Spark side round-trips every value through a VARIANT
     // (to_json → try_parse_json → try_variant_get); the oracle reads the
@@ -4789,30 +4343,6 @@ object SparkEntry {
         |SELECT user_id, state AS last_type, us AS last_us,
         |  event_id AS last_event_id
         |FROM r WHERE rk = 1 AND op <> 'D'""".stripMargin,
-
-    // q117: the Spark side max-merges three persisted per-batch HLL
-    // register deltas (with a mid-replay compaction fold); the oracle
-    // rebuilds the registers from ALL events in one pass — equality is
-    // exact because registers form a max-lattice (q104's bin() machinery,
-    // keyless, p=6 ⇒ lane >> 54).
-    "q117_distinct_replay" ->
-      s"""WITH h AS (SELECT DISTINCT ${duckLane("user_id::VARCHAR")} AS lane
-         |  FROM events),
-         |b AS (SELECT lane >> 54 AS bucket,
-         |        lane & ${(1L << 54) - 1} AS w FROM h),
-         |regs AS (SELECT bucket,
-         |    max(CASE WHEN w = 0 THEN 55
-         |             ELSE 54 - (length(bin(w)) - 1) END) AS r
-         |  FROM b GROUP BY bucket),
-         |agg AS (SELECT sum(pow(2.0, -r)) AS present, count(*) AS np
-         |  FROM regs),
-         |est AS (SELECT
-         |    0.709 * 64.0 * 64.0 / (present + CAST(64 - np AS DOUBLE)) AS raw,
-         |    CAST(64 - np AS DOUBLE) AS v
-         |  FROM agg)
-         |SELECT round(CASE WHEN raw <= 160.0 AND v > 0
-         |    THEN 64.0 * ln(64.0 / v) ELSE raw END, 4) AS est_distinct
-         |FROM est""".stripMargin,
 
     // q92: ntile/percent_rank/cume_dist are rank-arithmetic on exact
     // integers in both engines, so the rounded doubles hash-match
@@ -5611,8 +5141,8 @@ object SparkEntry {
         |       END AS zipf_intercept
         |FROM s""".stripMargin,
 
-    // q199: identical per-user firsts and gap filter; quantiles ride
-    // the q37 round-4 lane
+    // q199: identical per-user firsts and gap filter; quantiles are
+    // exact and rounded to 4 places
     "q199_conversion_latency" ->
       """WITH u AS (SELECT user_id,
         |        CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END
@@ -5730,16 +5260,6 @@ object SparkEntry {
         |  1::BIGINT AS files_after
         |FROM lineitem GROUP BY 1""".stripMargin,
 
-    "q135_skew_report" ->
-      """WITH c AS (SELECT l_suppkey, count(*)::BIGINT AS cnt
-        |  FROM lineitem GROUP BY 1),
-        |g AS (SELECT sum(cnt)::BIGINT AS n_rows, count(*)::BIGINT AS n_keys,
-        |  max(cnt) AS max_cnt FROM c)
-        |SELECT c.l_suppkey, c.cnt, round(c.cnt / g.n_rows, 6) AS share,
-        |  g.n_rows, g.n_keys,
-        |  round(CAST(g.max_cnt * g.n_keys AS DOUBLE) / g.n_rows, 4) AS skew_ratio
-        |FROM c, g ORDER BY c.cnt DESC, c.l_suppkey LIMIT 10""".stripMargin,
-
     // q66: the identical smoothed-unigram math — vocab = top-20 tokens by
     // (count desc, token asc), α = 0.5; round(avg, 4) absorbs sum-order fp
     // drift exactly like the q23 bm25 oracle
@@ -5812,7 +5332,7 @@ object SparkEntry {
          |  FROM a GROUP BY 1) CROSS JOIN g""".stripMargin,
 
     // q79: prefix-norm ratios with DuckDB's inclusive 1-based list slice
-    // mirroring Spark's slice(v, 1, k); quantile_cont ≡ percentile (q37)
+    // mirroring Spark's slice(v, 1, k); quantile_cont ≡ Spark percentile
     "q79_matryoshka" ->
       """WITH e AS (
         |  SELECT embedding::DOUBLE[] AS v FROM embeddings
@@ -5937,7 +5457,7 @@ object SparkEntry {
         |WHERE rank <= 5""".stripMargin,
 
     // q70: identical health-report math; exact interpolated p90
-    // (quantile_cont ≡ Spark percentile, the q37 contract)
+    // (quantile_cont ≡ Spark percentile)
     "q70_corpus_report" ->
       """SELECT source, n_docs, n_null_text, n_distinct_texts,
         |  round(1.0 - n_distinct_texts::DOUBLE /
@@ -5966,12 +5486,6 @@ object SparkEntry {
          |      AS cos_centroid
          |  FROM asg s JOIN c2 c ON s.cid = c.cid)""".stripMargin,
     "q28_multimodal_features" -> multimodalOracle,
-    "q40_kmv_distinct" -> kmvOracle,
-
-    // q210: maintained == rebuilt — the oracle is the BATCH sketch SQL
-    // verbatim (k-minima exact under merge-truncate)
-    "q210_kmv_replay" -> kmvOracle,
-
     // q213: the feed recomputed flat from the base columns — per key,
     // the keep-latest winner among drops {0,1} vs among {0,1,2}; a
     // different (or newly appearing) winner IS the change row, with the
@@ -6468,18 +5982,6 @@ object SparkEntry {
         |        FROM documents
         |        WHERE doc_id % 3 = 0 AND doc_id % 11 <> 0))""".stripMargin,
 
-    "q31_salted_agg" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  max(l_extendedprice) AS max_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q32_salted_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
     "q33_promo_revenue" ->
       """SELECT round(100.0 *
         |  CAST(sum(CASE WHEN p_type LIKE 'PROMO%' THEN CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1.0-l_discount AS DECIMAL(12,2)) END) AS DOUBLE) /
@@ -6518,36 +6020,5 @@ object SparkEntry {
         |  (n BETWEEN 30 AND 100000) AND (avg_len BETWEEN 3.0 AND 10.0)
         |    AND stop_ratio >= 0.05 AND distinct_ratio >= 0.3 AS keep
         |FROM m""".stripMargin,
-
-    "q37_corpus_quantiles" ->
-      """SELECT lang, count(*) AS n_docs,
-        |  round(quantile_cont(CAST(len(str_split(text, ' ')) AS DOUBLE), 0.5), 4) AS p50,
-        |  round(quantile_cont(CAST(len(str_split(text, ' ')) AS DOUBLE), 0.9), 4) AS p90,
-        |  round(quantile_cont(CAST(len(str_split(text, ' ')) AS DOUBLE), 0.99), 4) AS p99
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    "q38_asof_join" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id,
-        |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
-        |  FROM events),
-        |cp AS (
-        |  SELECT user_id, ts_sec, max(event_id) AS checkpoint_id
-        |  FROM ev WHERE event_id % 10 = 0 GROUP BY user_id, ts_sec)
-        |SELECT e.user_id, e.ts_sec, e.event_id, c.checkpoint_id
-        |FROM ev e ASOF LEFT JOIN cp c
-        |  ON e.user_id = c.user_id AND e.ts_sec >= c.ts_sec""".stripMargin,
-
-    "q39_range_join" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id,
-        |    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
-        |  FROM events),
-        |iv AS (
-        |  SELECT user_id, event_id AS iv_id, ts_sec AS s, ts_sec + 3600 AS e
-        |  FROM ev WHERE event_id % 20 = 0)
-        |SELECT e.user_id, e.event_id, i.iv_id
-        |FROM ev e JOIN iv i
-        |  ON e.user_id = i.user_id AND e.ts_sec BETWEEN i.s AND i.e""".stripMargin,
   )
 }

@@ -60,8 +60,8 @@ object Tables {
     * fixture convention q128 and the bench SLO corpus use to give every
     * document a vector leg. The mapping goes through a DENSE index of
     * the vector table, never its raw id: vec ids are contiguous on the
-    * driver testdata but HOLED on tiled scale-up corpora
-    * ([[graft.ScaleUp]] offsets each tile by a power of 10), and the
+    * driver testdata but HOLED on tiled scale-up corpora (a tiling
+    * that offsets each tile by a power of 10), and the
     * previous `pmod(doc_id, nEmb) === vec_id` equi-join silently
     * dropped every document whose residue fell in a hole — found as a
     * 19,270-vs-48,170-row q128 mismatch in the first sf1 correctness

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /**
  * Oracle-parity 60-bit hash lanes derived from SHA-256.
  *
- * The sketch/LSH operators' *scale* kernels hash with `xxhash64` (native,
+ * The LSH operators' *scale* kernels hash with `xxhash64` (native,
  * seeded, scan-side — see [[graft.functions.expressions.MinHashSig]] et
  * al.), but xxhash64 has no DuckDB equivalent, so queries built on it can
  * only be rows-checked by the correctness gate. These helpers provide a

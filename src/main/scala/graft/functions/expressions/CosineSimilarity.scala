@@ -165,62 +165,6 @@ object GraftExpressions {
       LshSigSha(children.head, intLit(children(1), "bits"), intLit(children(2), "table"))
     })
 
-  val kmv: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv"),
-    new ExpressionInfo(classOf[KmvSketch].getName, "graft_kmv"),
-    (children: Seq[Expression]) => {
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv(lane, k): k must be an integer literal, got $other")
-      }
-      KmvSketch(children.head, k)
-    })
-
-  val kmvLanes: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_kmv_lanes"),
-    new ExpressionInfo(classOf[KmvLanes].getName, "graft_kmv_lanes"),
-    (children: Seq[Expression]) => {
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_kmv_lanes(lane, k): k must be an integer literal, got $other")
-      }
-      KmvLanes(children.head, k)
-    })
-
-  val hll: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hll"),
-    new ExpressionInfo(classOf[HllSketch].getName, "graft_hll"),
-    (children: Seq[Expression]) => {
-      val p = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_hll(lane, p): p must be an integer literal, got $other")
-      }
-      HllSketch(children.head, p)
-    })
-
-  private def cmsBuilder(fn: String, sha: Boolean)
-      : Seq[Expression] => Expression = { children =>
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn(value, d, w): $what must be an integer literal, got $other")
-    }
-    CmsSketch(children.head, intLit(children(1), "d"), intLit(children(2), "w"), sha)
-  }
-
-  val cms: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cms"),
-    new ExpressionInfo(classOf[CmsSketch].getName, "graft_cms"),
-    cmsBuilder("graft_cms", sha = false))
-
-  val cmsSha: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cms_sha"),
-    new ExpressionInfo(classOf[CmsSketch].getName, "graft_cms_sha"),
-    cmsBuilder("graft_cms_sha", sha = true))
-
   val minhashSha: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_minhash_sha"),
     new ExpressionInfo(classOf[MinHashShaSig].getName, "graft_minhash_sha"),
@@ -247,18 +191,6 @@ object GraftExpressions {
     FunctionIdentifier("graft_nfc"),
     new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
     (children: Seq[Expression]) => NfcNormalize(children.head))
-
-  val misraGries: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_misra_gries"),
-    new ExpressionInfo(classOf[MisraGries].getName, "graft_misra_gries"),
-    (children: Seq[Expression]) => {
-      val k = children(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_misra_gries(item, k): k must be an integer literal, got $other")
-      }
-      MisraGries(children.head, k)
-    })
 
   /** Decode a foldable array<array<float|double>> child into the centroid
     * matrix the nearest-centroid kernels carry as a constructor param. */
@@ -382,10 +314,9 @@ object GraftExpressions {
   /** Every graft native expression, in `injectFunction` tuple shape —
     * shared by [[register]] and [[graft.GraftSparkExtensions]]. */
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(cosineSim, shingles, simhash64, minhash, lshSig, lshSigSha, kmv,
-        kmvLanes, hll, cms, cmsSha, minhashSha, simhashSha, vectorSum,
-        nearestCentroid, nearestCentroids, pqEncode, bloomMightContain,
-        nfc, misraGries, jaroWinkler, ringOwner)
+    Seq(cosineSim, shingles, simhash64, minhash, lshSig, lshSigSha,
+        minhashSha, simhashSha, vectorSum, nearestCentroid, nearestCentroids,
+        pqEncode, bloomMightContain, nfc, jaroWinkler, ringOwner)
 
   /** Idempotently register on a session's function registry. */
   def register(spark: SparkSession): Unit =

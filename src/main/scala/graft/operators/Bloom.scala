@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
  * operator DuckDB-oracle-able despite the probabilistic core.
  *
  * Scale: filter size is O(expectedItems·ln(1/fpp)) bits, independent of
- * document payloads (2^16 items at 1% ≈ 77 KiB; size from a KMV distinct
- * estimate, [[Sketch.kmvDistinctSketch]]). Per batch row the fast path is
+ * document payloads (2^16 items at 1% ≈ 77 KiB; size from a distinct
+ * count estimate). Per batch row the fast path is
  * O(k) bit probes inside the scan; the corpus digest table is only
  * scanned, never shuffled wide, and the verify join input is the pruned
  * sliver, not the batch.

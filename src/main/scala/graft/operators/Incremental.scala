@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
  *    inputs, so tonight's mart is tomorrow's base.
  *
  * Non-decomposable measures don't belong here: AVG is derivable
- * (sum/count) at read; COUNT DISTINCT needs a mergeable sketch state —
- * that is exactly what [[graft.functions.expressions.KmvSketch]] /
- * [[graft.functions.expressions.HllSketch]] exist for.
+ * (sum/count) at read; COUNT DISTINCT needs a mergeable state (a
+ * distinct-count sketch), which this operator does not keep.
  */
 object Incremental {
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  * combination — a single shuffle on the QI key, no joins, output
  * bounded by the QI-combination count. At 100 TB the QI cardinality,
  * not the row count, bounds the state (same argument as any grouped
- * aggregate); `approx_count_distinct` or the KMV/HLL sketches swap in
+ * aggregate); `approx_count_distinct` swaps in
  * when the sensitive column's per-group distinct state matters.
  *
  * [[generalize]] is the standard remediation step: band a numeric

@@ -86,7 +86,7 @@ object Profile {
   /**
    * Exact WEIGHTED median (lower) per group: the smallest value whose
    * cumulative weight reaches half the group's total — "the quantity at
-   * which half the money sits", the mass-weighted sibling of q37's
+   * which half the money sits", the mass-weighted sibling of
    * row-weighted quantiles. The decision is pure integer arithmetic
    * (`2·cum ≥ total` crossing with `2·(cum − w) < total`), so any
    * engine lands on the identical row with no float anywhere.
@@ -176,9 +176,8 @@ object Profile {
    * is two aggregates). Exact Long min/max/count per bucket.
    *
    * EXACT `percentile` buffers every value in one aggregation buffer —
-   * the same single-task-merge ceiling as
-   * [[graft.operators.Sketch.quantilesExact]], and a deliberate choice
-   * here: it is the oracle-matchable form (DuckDB's `quantile_cont`
+   * a single-task-merge ceiling, and a deliberate choice here: it is
+   * the oracle-matchable form (DuckDB's `quantile_cont`
    * interpolates identically on the dyadic fractions). At 100 TB use
    * [[equiDepthHistogramApprox]] — same plan, mergeable bounded
    * summary for the boundary aggregate.
@@ -194,8 +193,7 @@ object Profile {
     * rank error ≤ n/accuracy per boundary — at the default 10000 each
     * bucket's population is n/B ± n/10000, i.e. ±1% of the bucket at
     * B = 100), so map-side partial aggregation ships O(accuracy) state
-    * regardless of row count — the [[graft.operators.Sketch.quantilesApprox]]
-    * argument applied to histogram construction. Not oracled directly
+    * regardless of row count. Not oracled directly
     * (approximate summaries are not bit-stable across engines);
     * PropertySpec asserts the per-bucket depth bound against the exact
     * twin. */

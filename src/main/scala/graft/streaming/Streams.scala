@@ -242,180 +242,6 @@ object Streams {
       compactVectorIndex(batch.sparkSession, outDir, belowId = batchId)
   }
 
-  /**
-   * Streaming corpus-statistics maintenance: per-micro-batch CMS counter
-   * DELTAS ([[graft.operators.Sketch.cmsCounters]] — one bounded d×w
-   * matrix per batch, shuffle O(d·w) however many values stream through)
-   * land under `outDir/batch_id=<id>`. CMS is a LINEAR sketch, so the
-   * live sketch is exactly the element-wise sum of the deltas: read it
-   * any time with [[readCmsCounters]] — valid mid-stream, after a crash,
-   * and across compactions — and estimate with
-   * [[graft.operators.Sketch.cmsEstimate]]. `value` is one sketched value
-   * per row of the stream (pre-explode tokens upstream if sketching
-   * token frequencies).
-   *
-   * Replay-safe by the standard contract here (a batch overwrites only
-   * its own `batch_id=` partition; compaction folds committed ids only).
-   * Compaction PRE-SUMS the committed deltas through the generic
-   * compactor's `fold` hook, so the table never holds more than
-   * `compactEvery`+1 un-summed deltas — the mergeable-state analog of
-   * [[incrementalSearchIndex]]'s file folding.
-   */
-  def incrementalCmsCounters(stream: DataFrame, value: org.apache.spark.sql.Column,
-                             outDir: String, d: Int = 4, w: Int = 64,
-                             sha: Boolean = false,
-                             compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cmsCountersBatch(batch, batchId, value, outDir, d, w, sha, compactEvery)
-      }
-
-  /** The batch-side body of [[incrementalCmsCounters]]'s foreachBatch —
-    * public so a batch replay (declared query q119) exercises the EXACT
-    * code path the stream runs, not a re-implementation. */
-  def cmsCountersBatch(batch: DataFrame, batchId: Long,
-                       value: org.apache.spark.sql.Column,
-                       outDir: String, d: Int = 4, w: Int = 64,
-                       sha: Boolean = false, compactEvery: Int = 0): Unit = {
-    graft.operators.Sketch.cmsCounters(batch, value, d, w, sha)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    if (compactsAfter(batchId, compactEvery))
-      compactBatchPartitions(batch.sparkSession, outDir, filesPer = 1,
-        belowId = batchId,
-        fold = df => df.groupBy(col("j"), col("bucket"))
-          .agg(sum(col("cnt")).as("cnt")))
-  }
-
-  /** The live CMS from the persisted deltas: element-wise sum (linearity
-    * makes this exact, not an approximation of the batch-computed
-    * sketch). ≤ (batches × d × w) tiny rows — a driver-light read. */
-  def readCmsCounters(spark: org.apache.spark.sql.SparkSession,
-                      outDir: String): DataFrame =
-    graft.ParquetMeta.read(spark, Seq(outDir), Seq(BatchIdPart))
-      .groupBy(col("j"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-
-  /**
-   * Streaming distinct-count maintenance — the cardinality member of the
-   * incremental-sketch family ([[incrementalCmsCounters]] = frequency,
-   * [[incrementalHeavyHitters]] = frequent items): each micro-batch
-   * reduces to its HLL registers (≤ 2^p `(bucket, r)` rows,
-   * [[graft.operators.Sketch.hllRegisters]]) under `batch_id=<id>`; the
-   * live estimate at any time is per-bucket MAX over all persisted rows
-   * → the classic estimator ([[readDistinct]]). Where the CMS deltas
-   * rely on sum-linearity, registers merge by MAX — which is
-   * IDEMPOTENT: a replayed or re-ingested batch re-asserts the same
-   * register floors and the estimate cannot inflate. Distinct counting
-   * is the one streaming statistic that deduplicates by construction —
-   * no watermarking, no keyed dedup state, O(2^p) storage per batch.
-   * Compaction pre-MAXes committed deltas through the generic
-   * compactor's fold hook (max is also the lossless half of its own
-   * merge, so folding never changes a read).
-   *
-   * Replay-safe by the standard contract here (a batch overwrites only
-   * its own `batch_id=` partition; compaction folds committed ids only)
-   * — and doubly so by idempotence, see above.
-   */
-  def incrementalDistinct(stream: DataFrame, lane: org.apache.spark.sql.Column,
-                          outDir: String, p: Int = 12,
-                          compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        distinctRegistersBatch(batch, batchId, lane, outDir, p, compactEvery)
-      }
-
-  /** The batch-side body of [[incrementalDistinct]]'s foreachBatch —
-    * public so a batch replay (declared query q117) exercises the EXACT
-    * code path the stream runs, not a re-implementation. */
-  def distinctRegistersBatch(batch: DataFrame, batchId: Long,
-                             lane: org.apache.spark.sql.Column,
-                             outDir: String, p: Int = 12,
-                             compactEvery: Int = 0): Unit = {
-    graft.operators.Sketch.hllRegisters(batch.select(lane.as("lane")),
-        Nil, col("lane"), p)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    if (compactsAfter(batchId, compactEvery))
-      compactBatchPartitions(batch.sparkSession, outDir, filesPer = 1,
-        belowId = batchId,
-        fold = df => df.groupBy(col("bucket")).agg(max(col("r")).as("r")))
-  }
-
-  /** The live whole-stream distinct estimate from the persisted register
-    * deltas: per-bucket max (≤ batches × 2^p tiny rows in, one row out —
-    * identical registers, hence an IDENTICAL estimate, to a single HLL
-    * pass over everything ingested so far). */
-  def readDistinct(spark: org.apache.spark.sql.SparkSession,
-                   outDir: String, p: Int = 12): DataFrame =
-    graft.operators.Sketch.hllEstimateFromRegisters(
-      graft.ParquetMeta.read(spark, Seq(outDir), Seq(BatchIdPart))
-        .groupBy(col("bucket")).agg(max(col("r")).as("r")),
-      Nil, p)
-
-  /**
-   * Streaming heavy-hitters maintenance — the frequent-ITEMS twin of
-   * [[incrementalCmsCounters]]: each micro-batch reduces to its own
-   * Misra–Gries summary (≤ k `(item, w)` rows,
-   * [[graft.functions.expressions.MisraGries]]) under `batch_id=<id>`.
-   * MG summaries are mergeable (Agarwal et al., PODS 2012), and the
-   * union-SUM of all batch summaries followed by ONE subtraction of the
-   * (k+1)-th largest summed weight IS the m-way merge —
-   * [[readHeavyHitters]] performs that at read time, any time: the live
-   * summary keeps the whole-stream bound (every item with true count
-   * > N/(k+1) over everything ingested so far is present; weights are
-   * lower bounds at most N/(k+1) short). Compaction pre-sums committed
-   * summary rows through the compactor's fold hook — summing is the
-   * LOSSLESS half of the merge; the shrink stays at read so folding
-   * never tightens the summary early.
-   *
-   * Replay-safe by the standard contract here (a batch overwrites only
-   * its own partition; compaction folds committed ids only).
-   */
-  def incrementalHeavyHitters(stream: DataFrame,
-                              item: org.apache.spark.sql.Column,
-                              outDir: String, k: Int,
-                              compactEvery: Int = 0): DataStreamWriter[Row] =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        heavyHittersBatch(batch, batchId, item, outDir, k, compactEvery)
-      }
-
-  /** The batch-side body of [[incrementalHeavyHitters]]'s foreachBatch —
-    * public so a batch replay (declared query q123) exercises the EXACT
-    * code path the stream runs, not a re-implementation. */
-  def heavyHittersBatch(batch: DataFrame, batchId: Long,
-                        item: org.apache.spark.sql.Column,
-                        outDir: String, k: Int,
-                        compactEvery: Int = 0): Unit = {
-    graft.functions.expressions.GraftExpressions.register(batch.sparkSession)
-    batch
-      .agg(call_function("graft_misra_gries", item, lit(k)).as("mg"))
-      .select(explode(col("mg")).as(Seq("item", "w")))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    if (compactsAfter(batchId, compactEvery))
-      compactBatchPartitions(batch.sparkSession, outDir, filesPer = 1,
-        belowId = batchId,
-        fold = df => df.groupBy(col("item")).agg(sum(col("w")).as("w")))
-  }
-
-  /** The live merged Misra–Gries summary: union-sum + one subtraction of
-    * the (k+1)-th largest summed weight (≤ batches×k tiny rows in, ≤ k
-    * out). The top-(k+1) probe collects ≤ k+1 rows — driver-light. */
-  def readHeavyHitters(spark: org.apache.spark.sql.SparkSession,
-                       outDir: String, k: Int): DataFrame = {
-    val summed = graft.ParquetMeta.read(spark, Seq(outDir), Seq(BatchIdPart))
-      .groupBy(col("item")).agg(sum(col("w")).as("w"))
-    val top = summed.orderBy(col("w").desc).limit(k + 1).collect()
-    if (top.length <= k) summed
-    else {
-      val s = top.map(_.getLong(1)).min
-      summed.select(col("item"), (col("w") - lit(s)).as("w"))
-        .filter(col("w") > 0)
-    }
-  }
-
   /** Fold the vector index's committed `batch_id=` directories into one,
     * PRESERVING the `cid=` sublayout ([[compactBatchPartitions]] would
     * flatten it, and the list-pruned read is the table's whole point).
@@ -650,15 +476,12 @@ object Streams {
     * so new partitions never collide with the compacted one. */
   def compactBatchPartitions(spark: org.apache.spark.sql.SparkSession,
                              tableDir: String, filesPer: Int = 4,
-                             belowId: Long = Long.MaxValue,
-                             fold: DataFrame => DataFrame = identity): Unit =
+                             belowId: Long = Long.MaxValue): Unit =
     compactWith(spark, tableDir, belowId) { (tmp, sources) =>
-      // `fold` lets a table with mergeable rows (e.g. linear-sketch
-      // deltas) PRE-AGGREGATE while compacting, not just re-bucket files
-      // (dir-addressed source reads carry no batch_id partition column —
-      // the defensive drop is for layouts that materialized it in-file)
-      fold(graft.ParquetMeta.read(spark, sources.map(_.toString))
-        .drop("batch_id"))
+      // dir-addressed source reads carry no batch_id partition column —
+      // the defensive drop is for layouts that materialized it in-file
+      graft.ParquetMeta.read(spark, sources.map(_.toString))
+        .drop("batch_id")
         .repartition(filesPer)
         .write.mode("overwrite").parquet(tmp.toString)
     }

@@ -14,8 +14,12 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
     (new GraftSparkExtensions)(ext) // must inject without throwing
     val names = graft.functions.expressions.GraftExpressions.all.map(_._1.funcName)
     assert(names.distinct.size === names.size, "duplicate function names")
-    assert(names.toSet.contains("graft_cosine_sim"))
-    assert(names.toSet.contains("graft_bloom_might_contain"))
-    assert(names.size >= 15)
+    // the exact registry: adding or retiring a kernel updates this list
+    assert(names.toSet === Set(
+      "graft_cosine_sim", "graft_shingles", "graft_simhash64", "graft_minhash",
+      "graft_lsh_sig", "graft_lsh_sig_sha", "graft_minhash_sha",
+      "graft_simhash_sha", "graft_vector_sum", "graft_nearest_centroid",
+      "graft_nearest_centroids", "graft_pq_encode", "graft_bloom_might_contain",
+      "graft_nfc", "graft_jaro_winkler", "graft_ring_owner"))
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * index `__vidx` it builds equals the RANK of `vec_id` — i.e. doc `i`
   * attaches to the (i mod n)-th vector in vec_id order — even when the
   * embedding frame arrives shuffled across multiple partitions and its
-  * id space is HOLED (the ScaleUp tile shape that broke the raw-id pmod
+  * id space is HOLED (the tiled scale-up shape that broke the raw-id pmod
   * join at sf1, CORRECTNESS_sf1 round 14). The helper relies on
   * `monotonically_increasing_id` being evaluated ABOVE the
   * coalesce(1)+sortWithinPartitions in plan order; that is an
@@ -18,7 +18,7 @@ class TablesSpec extends SparkSpec {
   import spark.implicits._
 
   test("cycleEmbeddings dense index == rank of vec_id on shuffled, holed, multi-partition input") {
-    // holed id space: 3 tiles of 4 ids each, stride 10 (ScaleUp shape)
+    // holed id space: 3 tiles of 4 ids each, stride 10 (tiled scale-up shape)
     val vecIds = Seq(0L, 1L, 2L, 3L, 10L, 11L, 12L, 13L, 20L, 21L, 22L, 23L)
     val emb = vecIds.map(i => (i, Array.tabulate(4)(d => (i * 100 + d).toFloat)))
       .toDF("vec_id", "embedding")

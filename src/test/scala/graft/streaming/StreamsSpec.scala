@@ -350,127 +350,6 @@ class StreamsSpec extends SparkSpec {
       "no stranded tmp or marker remains")
   }
 
-  test("streaming CMS deltas: live read equals the batch sketch; compaction pre-sums") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("inc_cms").toString
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[String]
-    val q = Streams.incrementalCmsCounters(input.toDS().toDF("tok"),
-        col("tok"), s"$base/cms", d = 4, w = 16, compactEvery = 2)
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    try {
-      val b0 = Seq("a", "b", "a", "c"); val b1 = Seq("b", "b", "d")
-      val b2 = Seq("a", "e", "e", "e"); val b3 = Seq("c", "a")
-      Seq(b0, b1, b2, b3).foreach { b =>
-        input.addData(b); q.processAllAvailable()
-      }
-      def counters(df: org.apache.spark.sql.DataFrame) = df
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      // linearity: summed deltas == one sketch over the whole stream
-      val live = counters(Streams.readCmsCounters(spark, s"$base/cms"))
-      val whole = counters(graft.operators.Sketch.cmsCounters(
-        (b0 ++ b1 ++ b2 ++ b3).toDF("tok"), col("tok"), d = 4, w = 16))
-      assert(live === whole)
-      // the fold at batch 3 pre-summed committed batches 0-2 into one dir
-      // (dest = max committed id); batch 3's own delta then landed beside
-      // it — exactly two batch dirs remain
-      val dirs = new java.io.File(s"$base/cms").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-        .map(_.getName).sorted
-      assert(dirs.toSeq === Seq("batch_id=2", "batch_id=3"), dirs.mkString(","))
-      // estimates over the live counters are sane (CMS never undercounts)
-      val est = graft.operators.Sketch.cmsEstimate(
-          Streams.readCmsCounters(spark, s"$base/cms"),
-          Seq("a", "b", "e", "zz").toDF("k"), col("k"), d = 4, w = 16)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(est("a") >= 3L && est("b") >= 3L && est("e") >= 3L)
-    } finally q.stop()
-  }
-
-  test("streaming HLL deltas: live read equals the one-pass estimate; max-merge is idempotent") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("inc_hll").toString
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[String]
-    val lane = graft.operators.Sketch.shaLane(col("tok"))
-    val q = Streams.incrementalDistinct(input.toDS().toDF("tok"),
-        lane, s"$base/hll", p = 6, compactEvery = 2)
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    try {
-      val b0 = (0 until 300).map(i => s"t$i")
-      val b1 = (200 until 500).map(i => s"t$i") // overlaps b0
-      val b2 = b0                               // full re-ingestion of b0
-      val b3 = (500 until 600).map(i => s"t$i")
-      Seq(b0, b1, b2, b3).foreach { b =>
-        input.addData(b); q.processAllAvailable()
-      }
-      val live = Streams.readDistinct(spark, s"$base/hll", p = 6)
-        .head().getDouble(0)
-      // register max-merge == one HLL pass over everything ingested:
-      // identical registers, hence an exactly identical estimate
-      val whole = graft.operators.Sketch.hllDistinct(
-          (b0 ++ b1 ++ b2 ++ b3).toDF("tok"), Nil, lane, p = 6)
-        .head().getDouble(0)
-      assert(live === whole)
-      // idempotence: b2 re-ingested b0 verbatim, so dropping it from the
-      // union changes nothing — re-observation cannot inflate the count
-      val withoutReplay = graft.operators.Sketch.hllDistinct(
-          (b0 ++ b1 ++ b3).toDF("tok"), Nil, lane, p = 6)
-        .head().getDouble(0)
-      assert(live === withoutReplay)
-      // the fold at batch 3 pre-maxed committed batches 0-2 into one dir
-      val dirs = new java.io.File(s"$base/hll").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-        .map(_.getName).sorted
-      assert(dirs.toSeq === Seq("batch_id=2", "batch_id=3"), dirs.mkString(","))
-      // and the estimate is in the right neighborhood (600 true distinct,
-      // m=64 -> RSE ~13%)
-      assert(math.abs(live - 600.0) / 600.0 < 0.5, s"estimate $live")
-    } finally q.stop()
-  }
-
-  test("streaming heavy hitters: live merge keeps the whole-stream MG bound") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("inc_mg").toString
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[String]
-    val k = 6
-    val q = Streams.incrementalHeavyHitters(input.toDS().toDF("tok"),
-        col("tok"), s"$base/mg", k = k, compactEvery = 2)
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    try {
-      // 'whale' dominates across batches; chaff rotates so no single
-      // batch summary alone proves the global answer
-      val batches = Seq(
-        Seq("whale", "a1", "a2", "whale", "a3", "whale"),
-        Seq("b1", "whale", "b2", "b3", "whale", "b4"),
-        Seq("whale", "c1", "c2", "c3", "whale", "c4"),
-        Seq("whale", "d1", "whale", "d2", "d3", "whale"))
-      batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      val all = batches.flatten
-      val truth = all.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val n = all.size
-      val live = Streams.readHeavyHitters(spark, s"$base/mg", k)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(live.size <= k)
-      // no false negative above the whole-stream threshold...
-      truth.filter { case (_, c) => c * (k + 1) > n }.keys.foreach { hh =>
-        assert(live.contains(hh), s"heavy '$hh' missing from $live") }
-      // ...and weights are lower bounds within the merged deficit
-      live.foreach { case (item, w) =>
-        assert(w <= truth(item), s"$item weight $w above truth")
-        assert(w >= truth(item) - n / (k + 1), s"$item deficit too large") }
-      // the fold at batch 3 pre-summed batches 0-2 into one dir
-      val dirs = new java.io.File(s"$base/mg").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-        .map(_.getName).sorted
-      assert(dirs.toSeq === Seq("batch_id=2", "batch_id=3"), dirs.mkString(","))
-    } finally q.stop()
-  }
-
   test("compaction survives a checkpoint replay of the in-flight batch") {
     // The failure mode the belowId contract exists for: foreachBatch(N)
     // returns (having compacted), the process dies BEFORE the checkpoint

@@ -40,7 +40,7 @@ def main(sf_dir: str, out_dir: str, json_out: str = None) -> int:
     except Exception:
         pass
     for t in TABLES:
-        # driver testdata ships single-file tables; ScaleUp-derived
+        # driver testdata ships single-file tables; tiled scale-up
         # benchdata (sf1) ships Spark directory-style tables under the
         # same <name>.parquet path — glob the parts in that case
         path = f"{sf_dir}/{t}.parquet"
